@@ -113,10 +113,14 @@ def compact_groups(
     n_buckets = layout["n_buckets"]
     docs_per_group = docs_per_segment * segments_per_group
 
-    # finish a crashed compaction before planning a new one
+    # finish a crashed compaction before planning a new one. Only a
+    # claim carries ``sources``: delete_docs also writes compact=
+    # records, and ones written before they were marked committed
+    # must not be taken for a crashed claim
     stale = [
         rec for u, rec in done.items()
-        if u.startswith("compact=") and not rec.get("committed")
+        if u.startswith("compact=") and "sources" in rec
+        and not rec.get("committed")
     ]
     if stale:
         return _run(spark, store, stale[0], docs_per_segment,

@@ -31,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import time
 from dataclasses import dataclass
 
@@ -98,6 +99,28 @@ class LoadedIndex:
 
             return lookup_term_info(terms, self.term_stats)
         return {t: self._term_cache[t] for t in terms if t in self._term_cache}
+
+
+_BYTE_UNITS = {
+    "": 1, "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
+    "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40,
+    "tb": 1 << 40, "p": 1 << 50, "pb": 1 << 50,
+}
+
+
+def parse_byte_string(raw) -> int:
+    """Bytes in a Spark byte-size string — a whole number with an
+    optional b/k/m/g/t/p (or kb/mb/...) suffix, binary multiples, any
+    case, as Spark's own ``byteStringAsBytes`` reads it ("64m",
+    "1g", "134217728b", "134217728"). Raises ValueError on anything
+    else instead of guessing a size."""
+    m = re.fullmatch(r"(\d+)([a-z]*)", str(raw).strip().lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(
+            f"cannot parse byte size {raw!r}: expected a whole number "
+            "with an optional b/k/m/g/t/p suffix"
+        )
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 class IndexStorage:
@@ -232,20 +255,21 @@ class IndexStorage:
         query job pays per-task scheduler cost for nothing. Sizing by
         bytes/maxPartitionBytes keeps big indexes at the scan default
         (coalesce past the split count is a no-op) and collapses small
-        ones to a handful of real tasks."""
+        ones to a handful of real tasks. Directories a Spark reader
+        skips (``_temporary`` of an unfinished write, hidden ``.``
+        dirs) are skipped here too."""
         total = 0
         try:
-            for dirpath, _, files in os.walk(self._p(sub)):
+            for dirpath, dirs, files in os.walk(self._p(sub)):
+                dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
                 for f in files:
                     if f.endswith(".parquet"):
                         total += os.path.getsize(os.path.join(dirpath, f))
         except OSError:
             return 0
-        try:
-            raw = spark.conf.get("spark.sql.files.maxPartitionBytes")
-            target = int(str(raw).lower().rstrip("b"))
-        except Exception:  # noqa: BLE001 — unparseable conf: keep default
-            target = 128 * 1024 * 1024
+        target = parse_byte_string(
+            spark.conf.get("spark.sql.files.maxPartitionBytes")
+        )
         return -(-total // max(1, target)) if total else 0
 
     def load(self, spark: SparkSession) -> LoadedIndex:

@@ -201,9 +201,12 @@ def delete_docs(
             rec.update(n_docs=n_docs, avgdl=avgdl)
             store.mark_done("docs", **{k: v for k, v in rec.items()
                                        if k not in ("unit", "status")})
+    # committed: the record is a finished delete, not a compaction
+    # claim that compact_groups would have to resume
     store.mark_done(
         f"compact={int(time.time() * 1000)}",
         groups=affected, docs_removed=n_dead, reason="delete",
+        committed=True,
     )
     return n_dead
 

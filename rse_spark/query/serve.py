@@ -309,6 +309,76 @@ def _rows_zero_copy(sub) -> list[dict]:
     ]
 
 
+# a list at least this many times shorter than the other is
+# binary-searched into it; closer sizes merge (see _intersect_sorted)
+_GALLOP_RATIO = 16
+
+
+def _sorted_member(sorted_set, vals):
+    """Boolean mask over ``vals``: which occur in the sorted array
+    ``sorted_set`` — one searchsorted, O(len(vals) * log|set|)."""
+    import numpy as np
+
+    if not len(sorted_set):
+        return np.zeros(len(vals), dtype=bool)
+    pos = np.searchsorted(sorted_set, vals)
+    pos[pos == len(sorted_set)] = 0
+    return sorted_set[pos] == vals
+
+
+def _intersect_sorted(a, b):
+    """Values present in both of two STRICTLY increasing int64 arrays,
+    in increasing order (sorted-list intersection as in HERO, SIGMOD
+    2024). A much shorter side is binary-searched into the longer one,
+    O(s log l); otherwise one stable sort of the concatenation merges
+    the two runs in O(a + b) and a common value is a pair of equal
+    neighbours — strictness on each side guarantees no other source
+    of equal neighbours (``_term_position_keys`` asserts it for every
+    positional key list)."""
+    import numpy as np
+
+    if len(a) > len(b):
+        a, b = b, a
+    if not len(a):
+        return a
+    if len(a) * _GALLOP_RATIO <= len(b):
+        return a[_sorted_member(b, a)]
+    c = np.concatenate((a, b))
+    c.sort(kind="stable")
+    return c[:-1][c[1:] == c[:-1]]
+
+
+def _run_lengths(docs):
+    """(values, counts) of a non-decreasing int64 array: np.unique's
+    answer without its sort."""
+    import numpy as np
+
+    if not len(docs):
+        return docs, np.empty(0, dtype=np.int64)
+    starts = np.flatnonzero(np.r_[True, docs[1:] != docs[:-1]])
+    return docs[starts], np.diff(np.r_[starts, len(docs)])
+
+
+def _topk(vals, k: int):
+    """Indices of the top ``k`` of ``vals`` in (value desc, index asc)
+    order — callers keep their doc ids ascending, so the index
+    tie-break IS the doc_id tie-break. Every value tied with the k-th
+    survives the partition (threshold top-k as in Cache-Efficient
+    Top-k Aggregation, VLDB 2023), so the stable sort over the
+    survivors orders ties exactly."""
+    import numpy as np
+
+    n = len(vals)
+    if k <= 0 or not n:
+        return np.empty(0, dtype=np.int64)
+    if n > k:
+        kth = np.partition(vals, n - k)[n - k]
+        cand = np.flatnonzero(vals >= kth)
+    else:
+        cand = np.arange(n)
+    return cand[np.argsort(-vals[cand], kind="stable")[:k]]
+
+
 class DirectSearcher:
     """Driver/process-local searcher over a persisted index root."""
 
@@ -429,6 +499,9 @@ class DirectSearcher:
         # from the manifest per query (_check_positions_coverage);
         # 32 is the legacy default for pre-pos_bits sidecars.
         self._pos_bits = 32
+        # generation signature of the last passed
+        # _check_positions_coverage (None: check on every query)
+        self._pos_checked_sig = None
         # memoized metadata presence sets for qlang filter atoms
         # (lang:python etc.); cleared on writer commits
         self._meta_docs_cache: dict[tuple[str, str], object] = {}
@@ -1783,20 +1856,9 @@ class DirectSearcher:
             uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
             if not len(uniq):
                 return []
-        if len(uniq) > k:
-            # all docs scoring >= the k-th best (ties included, so the
-            # doc_id tie-break below stays exact — same pattern as
-            # _search_numpy)
-            kth = np.partition(agg, len(agg) - k)[len(agg) - k]
-            cand = np.nonzero(agg >= kth)[0]
-        else:
-            cand = np.arange(len(uniq))
-        order = sorted(
-            cand.tolist(), key=lambda i: (-agg[i], uniq[i])
-        )[:k]
         return [
             (int(uniq[i]), float(agg[i]), int(matched[i]))
-            for i in order
+            for i in _topk(agg, k)
         ]
 
     def term_vector(self, doc_id: int) -> dict:
@@ -2095,46 +2157,38 @@ class DirectSearcher:
         the index: no content store, no per-query corpus IO. Adjacency
         is over the analyzed token stream (Lucene semantics; for the
         ``simple`` analyzer this equals whitespace adjacency, proven
-        by the equivalence pytest).
+        by the equivalence pytest). Occurrences are counted by
+        :meth:`_phrase_occurrence_counts` (a sorted-list intersection
+        chain over packed position keys); the top-k is one
+        kth-partition + stable sort (``_topk``).
 
         Raises ValueError when the index has no positional sidecar."""
-        import numpy as np
-
         self._check_positions_coverage()
         from rse_spark.tokenizer import tokenize
 
         terms = tokenize(phrase, self.analyzer)  # ordered, dups kept
         if not terms:
             raise ValueError("phrase has no indexable terms")
-
-        # GLOBAL vectorized adjacency, no per-candidate Python loop:
-        # every occurrence becomes one packed key
-        # (doc_id << pos_bits) | pos,
-        # and "term_j adjacent at offset j" is one np.isin of
-        # (keys + j) against term_j's key set — the doc id rides along
-        # in the high bits, so matches can never cross documents.
-        # Cost ~ sum of the terms' position-list sizes (the textbook
-        # positional-query bound), independent of candidate count —
-        # the per-doc loop this replaces was 600-3300ms on
-        # common-token phrases at sf0.1; this is ~10-40ms.
         uniq, counts = self._phrase_occurrence_counts(terms)
-        order = sorted(
-            range(len(uniq)), key=lambda i: (-counts[i], uniq[i])
-        )[:k]
-        return [(int(uniq[i]), int(counts[i])) for i in order]
+        return [
+            (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
+        ]
 
     def _phrase_occurrence_counts(self, terms: "list[str]",
                                   within=None):
         """(doc_ids, counts) numpy pair of per-document exact-phrase
-        occurrence counts for pre-analyzed ``terms``, vectorized over
-        packed (doc_id << pos_bits) | pos keys: every occurrence of
-        terms[0] is a chain start, and "term_j adjacent at offset j"
-        is one np.isin of (keys + j) against term_j's key set — the
-        doc id rides along in the high bits, so matches can never
-        cross documents. Cost ~ sum of the terms' position-list sizes
-        (the textbook positional-query bound), independent of
-        candidate count — the per-doc loop this replaced was
-        600-3300ms on common-token phrases at sf0.1; this is ~10-40ms.
+        occurrence counts for pre-analyzed ``terms``, ascending by doc
+        id. Every occurrence is one packed key
+        (doc_id << pos_bits) | pos, so each term's keys form one
+        strictly increasing array and the doc id rides along in the
+        high bits — matches can never cross documents. The chain keeps
+        the keys of the phrase's current LAST word: step j intersects
+        (cur + 1) with term_j's keys (``_intersect_sorted``: a merge of
+        two sorted runs, or a binary search when one side is much
+        shorter). ``cur`` stays sorted throughout, so the per-doc
+        counts are run lengths of its doc ids. Cost ~ sum of the
+        terms' position-list sizes (the textbook positional-query
+        bound), independent of candidate count.
 
         ``within`` (sorted unique int64 doc-id ndarray) drops chain
         starts outside the set up front, bounding the chain work by
@@ -2148,18 +2202,15 @@ class DirectSearcher:
             keys[t] = self._term_position_keys(t)
             if not len(keys[t]):
                 return empty
+        shift = np.int64(self._pos_bits)
         cur = keys[terms[0]]
         if within is not None:
-            docs0 = cur >> np.int64(self._pos_bits)
-            cur = cur[np.isin(docs0, within, assume_unique=False)]
-        for j, t in enumerate(terms[1:], 1):
+            cur = cur[_sorted_member(within, cur >> shift)]
+        for t in terms[1:]:
             if not len(cur):
                 return empty
-            cur = cur[np.isin(cur + j, keys[t], assume_unique=True)]
-        if not len(cur):
-            return empty
-        docs = cur >> np.int64(self._pos_bits)
-        return np.unique(docs, return_counts=True)
+            cur = _intersect_sorted(cur + 1, keys[t])
+        return _run_lengths(cur >> shift)
 
     def search_rescored(self, qtext: str, phrase: str, k: int = 10,
                         window: int = 50, weight: float = 2.0,
@@ -2279,14 +2330,12 @@ class DirectSearcher:
             return []
         mask = (keys & ((np.int64(1) << np.int64(self._pos_bits))
                         - 1)) < end
-        if not mask.any():
-            return []
-        docs = keys[mask] >> np.int64(self._pos_bits)
-        uniq, counts = np.unique(docs, return_counts=True)
-        order = sorted(
-            range(len(uniq)), key=lambda i: (-counts[i], uniq[i])
-        )[:k]
-        return [(int(uniq[i]), int(counts[i])) for i in order]
+        uniq, counts = _run_lengths(
+            keys[mask] >> np.int64(self._pos_bits)
+        )
+        return [
+            (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
+        ]
 
     def phrase_prefix_search(self, phrase: str, k: int = 10,
                              max_expansions: int = 64):
@@ -2297,6 +2346,8 @@ class DirectSearcher:
         the UNION of the expanded terms' position keys (expansion
         capped and ordered like every other rewrite). A single-word
         query degenerates to presence-counting of the expansion."""
+        import itertools
+
         import numpy as np
 
         from rse_spark.tokenizer import tokenize
@@ -2316,30 +2367,23 @@ class DirectSearcher:
         ]
         if not last_keys:
             return []
-        tail = np.sort(np.concatenate(last_keys)) if len(last_keys) \
-            else last_keys[0]
-        if not head:
-            cur = tail
-        else:
+        # one position holds one token, so the union of distinct
+        # terms' keys is again strictly increasing
+        tail = np.sort(np.concatenate(last_keys))
+        cur = tail
+        if head:
             cur = self._term_position_keys(head[0])
-            for j, t in enumerate(head[1:], 1):
+            # the last step's "term" is ANY expanded term
+            for t_keys in itertools.chain(
+                (self._term_position_keys(t) for t in head[1:]), [tail]
+            ):
                 if not len(cur):
                     return []
-                cur = cur[np.isin(cur + j, self._term_position_keys(t),
-                                  assume_unique=True)]
-            if not len(cur):
-                return []
-            # final step: next position must hold ANY expanded term
-            cur = cur[np.isin(cur + len(head), tail,
-                              assume_unique=False)]
-        if not len(cur):
-            return []
-        docs = cur >> np.int64(self._pos_bits)
-        uniq, counts = np.unique(docs, return_counts=True)
-        order = sorted(
-            range(len(uniq)), key=lambda i: (-counts[i], uniq[i])
-        )[:k]
-        return [(int(uniq[i]), int(counts[i])) for i in order]
+                cur = _intersect_sorted(cur + 1, t_keys)
+        uniq, counts = _run_lengths(cur >> np.int64(self._pos_bits))
+        return [
+            (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
+        ]
 
     def near_search_positions(self, first: str, second: str,
                               max_dist: int, k: int = 10,
@@ -2370,10 +2414,9 @@ class DirectSearcher:
             raise ValueError(
                 "proximity operands must each analyze to one token"
             )
-        hits = self._positions_pairs(t1[0], t2[0], max_dist,
-                                     ordered=ordered)
-        hits.sort(key=lambda r: (-r[1], r[0]))
-        return hits[:k]
+        uniq, sums = self._positions_pairs(t1[0], t2[0], max_dist,
+                                           ordered=ordered)
+        return [(int(uniq[i]), int(sums[i])) for i in _topk(sums, k)]
 
     def phrase_chain_docs(self, phrase: str, max_gap: int = 1):
         """Sorted doc-id array of documents containing the phrase
@@ -2430,8 +2473,10 @@ class DirectSearcher:
 
         k1 = self._term_position_keys(t1)
         k2 = self._term_position_keys(t2)
+        empty = (np.empty(0, dtype=np.int64),
+                 np.empty(0, dtype=np.int64))
         if not len(k1) or not len(k2):
-            return []
+            return empty
         if ordered:
             cnt = (
                 np.searchsorted(k2, k1 + max_dist, side="right")
@@ -2451,11 +2496,10 @@ class DirectSearcher:
                 cnt -= 1
         keep = cnt > 0
         if not keep.any():
-            return []
+            return empty
         docs = k1[keep] >> np.int64(self._pos_bits)
         uniq, inv = np.unique(docs, return_inverse=True)
-        sums = np.bincount(inv, weights=cnt[keep]).astype(np.int64)
-        return [(int(d), int(n)) for d, n in zip(uniq, sums)]
+        return uniq, np.bincount(inv, weights=cnt[keep]).astype(np.int64)
 
     def _term_position_keys(self, term: str):
         """Sorted packed occurrence keys (doc_id << pos_bits) | pos for
@@ -2497,6 +2541,15 @@ class DirectSearcher:
             np.sort(np.concatenate(parts))
             if parts else np.empty(0, dtype=np.int64)
         )
+        # the sorted-list intersection (_intersect_sorted) reads a
+        # pair of equal neighbours as a match, so a key list must be
+        # STRICTLY increasing: a repeated occurrence means a corrupt
+        # sidecar, and it must fail here rather than double-count
+        if not (keys[1:] > keys[:-1]).all():
+            raise ValueError(
+                f"positional sidecar repeats an occurrence of "
+                f"{term!r} — rebuild it with build_positions"
+            )
         with self._meta_lock:
             if term not in self._pos_keys:
                 self._pos_keys[term] = keys
@@ -2515,8 +2568,17 @@ class DirectSearcher:
         sidecar predates the newest batches must fail LOUDLY, not
         silently miss the new docs (writers that rewrite groups —
         compaction, delete/upsert — drop the sidecar outright for the
-        same reason)."""
+        same reason).
+
+        A passed check is memoized under the generation signature it
+        ran against: every writer that adds, drops or rebuilds the
+        sidecar commits a manifest record, which moves the signature.
+        Layouts without a GENERATION file (no signature) and failed
+        checks are never memoized."""
         self._check_generation()
+        sig = self._gen_sig
+        if sig is not None and sig == self._pos_checked_sig:
+            return
         pos_root = os.path.join(self.root, "positions")
         if not os.path.isdir(pos_root):
             raise ValueError(
@@ -2560,6 +2622,9 @@ class DirectSearcher:
                 f"{sorted(live - covered)} missing) — re-run "
                 "build_positions(only_missing=True)"
             )
+        gen_file_sig = sig[0] if self._alias_file is not None else sig
+        if gen_file_sig is not None:
+            self._pos_checked_sig = sig
 
     def _decode_positions_term(self, term: str):
         """Decode one term's positional rows:
@@ -2909,12 +2974,12 @@ class DirectSearcher:
         """Vectorized exact scoring across all matched lists.
 
         ``within`` (sorted unique int64 array) drops postings outside
-        the given doc set BEFORE any BM25 math — searchsorted
-        membership on the sorted filter, so per-list cost is
-        O(len(list) * log|within|)."""
+        the given doc set from the row's memoized BM25 impacts —
+        searchsorted membership on the sorted filter, so per-list cost
+        is O(len(list) * log|within|)."""
         import numpy as np
 
-        from rse_spark.index.codec import B, K1, decode_postings
+        from rse_spark.index.codec import bm25_impact
 
         doc_chunks, score_chunks, dl_chunks = [], [], []
         for t in terms:
@@ -2931,39 +2996,20 @@ class DirectSearcher:
                 # on generation flips); nothing downstream mutates the
                 # arrays (masking/astype all copy).
                 doc_ids, tfs, dls = self._row_decoded(row)
-                _avgdl = self.avgdl if avgdl is None else avgdl
-                if within is not None:
-                    pos = np.searchsorted(within, doc_ids)
-                    pos[pos == len(within)] = 0
-                    mask = (
-                        within[pos] == doc_ids
-                        if len(within)
-                        else np.zeros(len(doc_ids), dtype=bool)
-                    )
-                    doc_ids, tfs, dls = doc_ids[mask], tfs[mask], dls[mask]
-                    if not len(doc_ids):
-                        continue
-                if within is None and _avgdl == self.avgdl:
+                if avgdl is None or avgdl == self.avgdl:
                     imp = row.get("_imp")
                     if imp is None:
-                        tf = tfs.astype(np.float64)
-                        imp = tf * (K1 + 1.0) / (
-                            tf + K1 * (
-                                1.0 - B
-                                + B * dls.astype(np.float64) / _avgdl
-                            )
-                        )
+                        imp = bm25_impact(tfs, dls, self.avgdl)
                         row["_imp"] = imp
-                    contrib = w * imp
                 else:
-                    tf = tfs.astype(np.float64)
-                    contrib = w * tf * (K1 + 1.0) / (
-                        tf + K1 * (
-                            1.0 - B + B * dls.astype(np.float64) / _avgdl
-                        )
-                    )
+                    imp = bm25_impact(tfs, dls, avgdl)
+                if within is not None:
+                    mask = _sorted_member(within, doc_ids)
+                    doc_ids, dls, imp = doc_ids[mask], dls[mask], imp[mask]
+                    if not len(doc_ids):
+                        continue
                 doc_chunks.append(doc_ids)
-                score_chunks.append(contrib)
+                score_chunks.append(w * imp)
                 if fvf is not None:
                     dl_chunks.append(dls.astype(np.float64))
         if not doc_chunks:
@@ -3035,16 +3081,7 @@ class DirectSearcher:
             uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
             if len(uniq) == 0:
                 return []
-        if len(uniq) > k:
-            # all docs scoring >= the k-th best (ties included, so the
-            # doc_id tie-break below stays exact)
-            kth = np.partition(agg, len(agg) - k)[len(agg) - k]
-            cand = np.nonzero(agg >= kth)[0]
-        else:
-            cand = np.arange(len(uniq))
-        order = sorted(
-            cand.tolist(), key=lambda i: (-agg[i], uniq[i])
-        )[:k]
         return [
-            (int(uniq[i]), float(agg[i]), int(matched[i])) for i in order
+            (int(uniq[i]), float(agg[i]), int(matched[i]))
+            for i in _topk(agg, k)
         ]

@@ -147,6 +147,51 @@ def test_compact_resume_after_crash(spark, tmp_path_factory):
     ]
 
 
+def test_compact_after_upsert(spark, tmp_path_factory):
+    """An upsert commits a compact= record for its delete; it is a
+    finished delete, not a crashed claim, so a later compaction plans
+    and runs normally — also on an index whose delete record predates
+    the ``committed`` flag."""
+    import json
+
+    from rse_spark.index.integrity import check_index
+    from rse_spark.index.upsert import upsert_docs
+
+    root = str(tmp_path_factory.mktemp("compact_upsert"))
+    st = _sparse_index(
+        spark, root, [(0, 80), (80, 150), (150, 210), (210, 300)]
+    )
+    updates = spark.read.parquet(DOCS).filter(
+        F.col("doc_id") == 7
+    ).withColumn("text", F.lit("zzzfresh join table"))
+    assert upsert_docs(
+        spark, updates, root, key=("src_doc_id",),
+        analyzer="simple", content_col="text",
+    ) == (1, 1)
+    deletes = [
+        u for u, rec in st.completed_units().items()
+        if u.startswith("compact=") and rec.get("reason") == "delete"
+    ]
+    assert len(deletes) == 1
+    # rewrite the record as older writers left it (no ``committed``)
+    path = os.path.join(root, "manifest", f"{deletes[0]}.json")
+    with open(path) as f:
+        rec = json.load(f)
+    assert rec.pop("committed") is True
+    with open(path, "w") as f:
+        json.dump(rec, f)
+
+    queries = QUERIES + ["zzzfresh"]
+    before = _result_shas(spark, st, queries)
+    summary = compact_groups(spark, root, min_fill=0.5)
+    assert summary["merged"] >= 2 and summary["n_docs_moved"] == 300
+    assert summary["resumed"] is False
+    report = check_index(spark, root)
+    assert report["ok"], report
+    assert st.load(spark).n_docs == 300
+    assert _result_shas(spark, st, queries) == before
+
+
 def test_compact_cli(spark, tmp_path_factory, capsys):
     import json
 

@@ -4,6 +4,8 @@ content-verify path, and the declarative positional join."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -519,6 +521,58 @@ def test_analyzer_mismatch_raises(spark, pos_index):
         s.near_search_positions("merge", "join", 5, k=5)
 
 
+def test_positions_coverage_memo(pos_index, tmp_path):
+    """The coverage check runs once per index generation: a passed
+    check holds until a manifest commit, a failed one is never kept,
+    and an index without a GENERATION file is checked every query."""
+    import shutil
+
+    from rse_spark.index.storage import IndexStorage
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(pos_index, root)
+    group = sorted(
+        p for p in os.listdir(os.path.join(root, "positions"))
+        if p.startswith("seg_group=")
+    )[0]
+    gdir = os.path.join(root, "positions", group)
+    parked = str(tmp_path / "parked")
+
+    s = DirectSearcher(root, analyzer="simple")
+    want = s.phrase_search_positions("the data", k=5)
+    shutil.move(gdir, parked)  # no commit: the memo still holds
+    assert s.phrase_search_positions("the data", k=5) == want
+    IndexStorage(root).bump_generation()
+    with pytest.raises(ValueError, match="incomplete"):
+        s.phrase_search_positions("the data", k=5)
+    shutil.move(parked, gdir)  # the failure was not memoized
+    assert s.phrase_search_positions("the data", k=5) == want
+
+    os.remove(os.path.join(root, "manifest", "GENERATION"))
+    s = DirectSearcher(root, analyzer="simple")
+    assert s.phrase_search_positions("the data", k=5) == want
+    shutil.move(gdir, parked)
+    with pytest.raises(ValueError, match="incomplete"):
+        s.phrase_search_positions("the data", k=5)
+    shutil.move(parked, gdir)
+
+
+def test_corrupt_position_keys_raise(pos_index):
+    """A sidecar that repeats an occurrence would make the merge
+    intersection double-count; the key list is rejected on load."""
+    s = DirectSearcher(pos_index, analyzer="simple")
+    decode = s._decode_positions_term
+
+    def doubled(term):
+        rows, ids = decode(term)
+        return rows + rows, ids  # every occurrence listed twice
+
+    s._decode_positions_term = doubled
+    with pytest.raises(ValueError, match="repeats an occurrence"):
+        s.phrase_search_positions("the data", k=5)
+    assert not s._pos_keys  # nothing corrupt was cached
+
+
 # ---------------------------------------------------------------------------
 # Single-scan (folded) sidecar: positions emitted by the build's own
 # tokenizer pass, stored in enriched, sidecar derived corpus-free
@@ -962,6 +1016,64 @@ def test_phrase_prefix_search(spark, pos_index):
     assert s.phrase_prefix_search("the zzznope") == []
     with pytest.raises(ValueError, match="empty"):
         s.phrase_prefix_search("   ")
+
+
+def _by_count(rows):
+    return sorted(
+        ((int(r["doc_id"]), int(r["n_occurrences"])) for r in rows),
+        key=lambda r: (-r[1], r[0]),
+    )
+
+
+def test_span_first_matches_declarative(spark, pos_index):
+    from rse_spark import harness
+
+    s = DirectSearcher(pos_index, analyzer="simple")
+    want = _by_count(
+        harness.q_span_first(spark, os.path.dirname(DOCS)).collect()
+    )
+    assert want, "probe must match docs"
+    assert s.span_first_search(
+        harness.SPAN_WORD, harness.SPAN_END, k=10**6
+    ) == want
+    assert s.span_first_search(
+        harness.SPAN_WORD, harness.SPAN_END, k=5
+    ) == want[:5]
+
+
+def test_phrase_prefix_matches_declarative(spark, pos_index):
+    from rse_spark import harness
+
+    s = DirectSearcher(pos_index, analyzer="simple")
+    want = _by_count(
+        harness.q_phrase_prefix(spark, os.path.dirname(DOCS)).collect()
+    )
+    assert want, "probe must match docs"
+    got = s.phrase_prefix_search(
+        harness.PHRASE_PREFIX_Q, k=10**6,
+        max_expansions=harness.PREFIX_MAX_TERMS,
+    )
+    assert got == want
+    assert s.phrase_prefix_search(harness.PHRASE_PREFIX_Q, k=5) == want[:5]
+
+
+def test_search_rescored_matches_declarative(spark, pos_index):
+    from rse_spark import harness
+
+    s = DirectSearcher(pos_index, analyzer="simple")
+    want = harness.q_rescore_bm25(spark, os.path.dirname(DOCS)).collect()
+    got = s.search_rescored(
+        " ".join(harness.BM25_TERMS), harness.RESCORE_PHRASE, k=10,
+        window=harness.RESCORE_WINDOW, weight=harness.RESCORE_W,
+    )
+    assert [(d, m, n) for d, _s, m, n in got] == [
+        (int(r["doc_id"]), int(r["n_terms_matched"]),
+         int(r["n_occurrences"]))
+        for r in want
+    ]
+    for (_d, sc, _m, _n), r in zip(got, want):
+        assert abs(sc - float(r["score"])) < 1e-5
+    assert any(n > 0 for *_x, n in got), "the phrase must re-rank"
 
 
 def test_http_span_first_and_phrase_prefix(spark, pos_index):

@@ -111,3 +111,59 @@ def test_load_sizes_postings_partitions(spark, corpus, tmp_path_factory):
     a = sorted(map(tuple, idx.postings.select("term", "segment_id").collect()))
     b = sorted(map(tuple, raw.select("term", "segment_id").collect()))
     assert a == b
+
+
+def test_parse_byte_string():
+    from rse_spark.index.storage import parse_byte_string
+
+    assert parse_byte_string("64m") == 64 << 20
+    assert parse_byte_string("1g") == 1 << 30
+    assert parse_byte_string("1G") == 1 << 30
+    assert parse_byte_string("134217728") == 134217728
+    assert parse_byte_string("134217728b") == 134217728
+    assert parse_byte_string(" 512kb ") == 512 << 10
+    for bad in ("", "m", "1.5g", "64 m", "64q", "-1", "lots"):
+        with pytest.raises(ValueError, match="byte size"):
+            parse_byte_string(bad)
+
+
+def test_size_partitions_conf_and_temporary(spark, corpus,
+                                            tmp_path_factory):
+    """maxPartitionBytes is read with its suffix, an unparseable value
+    raises instead of falling back, and the leftovers of an unfinished
+    write (``_temporary``) do not count as index bytes."""
+    import os
+    import shutil
+    from types import SimpleNamespace
+
+    root = str(tmp_path_factory.mktemp("idx_sz_conf"))
+    build_resumable(spark, corpus, root, docs_per_segment=16)
+    store = IndexStorage(root)
+    total = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(f"{root}/postings")
+        for f in fs if f.endswith(".parquet")
+    )
+    assert total > 2048
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1k")
+        assert store._size_partitions(spark, "postings") == -(-total // 1024)
+        # a half-written job's parquet under _temporary is not index data
+        tmp = os.path.join(root, "postings", "_temporary", "0")
+        os.makedirs(tmp)
+        src = next(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(f"{root}/postings")
+            for f in fs if f.endswith(".parquet")
+        )
+        shutil.copy(src, os.path.join(tmp, "part-0.parquet"))
+        assert store._size_partitions(spark, "postings") == -(-total // 1024)
+    finally:
+        spark.conf.set(key, old)
+    # Spark rejects a bad value at conf.set; a conf handed over by
+    # other means must fail the same way, not fall back to 128 MB
+    bad = SimpleNamespace(conf=SimpleNamespace(get=lambda k: "1 gigabyte"))
+    with pytest.raises(ValueError, match="byte size"):
+        store._size_partitions(bad, "postings")
