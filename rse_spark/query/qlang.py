@@ -67,6 +67,7 @@ import re
 from dataclasses import dataclass, field
 
 from rse_spark.query.engine import query_terms
+from rse_spark.query.kernel import _intersect_sorted
 
 # fixed field set: anything else containing ':' stays a term atom
 # (std::vector must not parse as a metadata filter)
@@ -413,7 +414,10 @@ def match_ql(searcher, q: str,
 
     Evaluation is doc-id arrays only (DirectSearcher.term_docs:
     posting decode, no BM25 work), memoized per analyzed term across
-    atoms; clause algebra is np.intersect1d / np.unique. Per-query
+    atoms. Every atom's presence set is sorted and unique where it is
+    made, so a clause's conjunction is a chain of sorted-list merges
+    (``kernel._intersect_sorted``); unions and negation use
+    np.unique / np.setdiff1d. Per-query
     work is bounded: ``max_atoms`` caps the atom count (the HTTP
     surface maps the ValueError to a 400), ``max_prefix_terms`` caps
     each prefix/regex expansion.
@@ -471,7 +475,7 @@ def match_ql(searcher, q: str,
         for s in subs[1:]:
             if not len(acc):
                 break
-            acc = np.intersect1d(acc, tdocs(s), assume_unique=True)
+            acc = _intersect_sorted(acc, tdocs(s))
         return acc
 
     def prefix_docs(p: str) -> tuple[np.ndarray, list[str]]:
@@ -506,6 +510,8 @@ def match_ql(searcher, q: str,
         return np.unique(np.concatenate(arrs)), terms
 
     def phrase_docs(ph: str, slop: int) -> np.ndarray:
+        """Docs containing the phrase, sorted (the phrase surfaces
+        return hits in count order)."""
         if slop > 0:
             # slop semantics: up to ``slop`` extra tokens between
             # successive words -> max chain gap slop + 1
@@ -523,9 +529,9 @@ def match_ql(searcher, q: str,
             ph_hits = searcher.phrase_search_positions(
                 ph, k=searcher.n_docs
             )
-        return np.asarray(
-            [d for d, _n in ph_hits], dtype=np.int64,
-        )
+        return np.sort(np.fromiter(
+            (d for d, _n in ph_hits), dtype=np.int64, count=len(ph_hits),
+        ))
 
     def phrase_prefix_docs(ph: str) -> tuple[np.ndarray, list[str]]:
         """Phrase-prefix atom presence + its scoring terms (analyzed
@@ -537,7 +543,9 @@ def match_ql(searcher, q: str,
             query_terms(" ".join(words[:-1]), searcher.analyzer)
         ) + searcher.expand_prefix(words[-1].lower(), max_prefix_terms)
         return (
-            np.asarray([d for d, _n in hits], dtype=np.int64),
+            np.sort(np.fromiter(
+                (d for d, _n in hits), dtype=np.int64, count=len(hits),
+            )),
             sorted(set(sterms)),
         )
 
@@ -606,8 +614,7 @@ def match_ql(searcher, q: str,
         for s in clause_sets[1:]:
             if not len(hit):
                 break
-            hit = np.intersect1d(np.sort(hit), np.sort(s),
-                                 assume_unique=True)
+            hit = _intersect_sorted(hit, s)
         # clause-scoped negation: docs matching ANY negative atom are
         # excluded from this clause's hits (they never enter scoring —
         # the negatives contribute no scoring terms)
@@ -637,9 +644,8 @@ def match_ql(searcher, q: str,
             neg_parts = [a for a in neg_parts if len(a)]
             if neg_parts:
                 hit = np.setdiff1d(
-                    np.sort(hit),
-                    np.unique(np.concatenate(neg_parts)),
-                    assume_unique=False,
+                    hit, np.unique(np.concatenate(neg_parts)),
+                    assume_unique=True,
                 )
         if len(hit):
             qualified_parts.append(hit)
@@ -649,7 +655,7 @@ def match_ql(searcher, q: str,
         qualified = (
             np.unique(np.concatenate(qualified_parts))
             if len(qualified_parts) > 1
-            else np.sort(qualified_parts[0])
+            else qualified_parts[0]
         )
     return qualified, boosts
 

@@ -25,6 +25,13 @@ import pyarrow.parquet as pq
 
 from rse_spark.query.engine import idf as idf_fn
 from rse_spark.query.engine import query_terms
+from rse_spark.query.kernel import (
+    _grouped_topk,
+    _intersect_sorted,
+    _run_lengths,
+    _sorted_member,
+    _topk,
+)
 from rse_spark.query.wand import _ListIter, intersect_and_lists, wand_topk_lists
 
 
@@ -309,74 +316,71 @@ def _rows_zero_copy(sub) -> list[dict]:
     ]
 
 
-# a list at least this many times shorter than the other is
-# binary-searched into it; closer sizes merge (see _intersect_sorted)
-_GALLOP_RATIO = 16
+class _TermRows(list):
+    """The posting rows (one per segment) of one (bucket, term), as the
+    row caches hold them. ``plist`` memoizes the term's
+    :class:`_TermList` on the cached object itself, so it is evicted
+    and dropped on a generation change together with the rows — no
+    cache of its own to clear."""
+
+    __slots__ = ("plist",)
+
+    def __init__(self, rows=()):
+        super().__init__(rows)
+        self.plist = None
 
 
-def _sorted_member(sorted_set, vals):
-    """Boolean mask over ``vals``: which occur in the sorted array
-    ``sorted_set`` — one searchsorted, O(len(vals) * log|set|)."""
-    import numpy as np
+class _TermList:
+    """One term's postings across its segment rows, decoded once and
+    concatenated in doc-id order: ``docs``, ``tfs`` and ``dls`` (int64)
+    and, on first use, ``impacts`` — the idf-less BM25 impact at the
+    ``avgdl`` the list was built with. Segments partition the doc-id
+    space, so the rows are ordered by their first doc id and the
+    concatenation must be strictly increasing; a term whose rows
+    overlap raises. Every array is read-only: ``term_docs`` hands
+    ``docs`` out as is."""
 
-    if not len(sorted_set):
-        return np.zeros(len(vals), dtype=bool)
-    pos = np.searchsorted(sorted_set, vals)
-    pos[pos == len(sorted_set)] = 0
-    return sorted_set[pos] == vals
+    __slots__ = ("docs", "tfs", "dls", "avgdl", "_imp")
 
+    def __init__(self, term: str, rows, avgdl: float):
+        import numpy as np
 
-def _intersect_sorted(a, b):
-    """Values present in both of two STRICTLY increasing int64 arrays,
-    in increasing order (sorted-list intersection as in HERO, SIGMOD
-    2024). A much shorter side is binary-searched into the longer one,
-    O(s log l); otherwise one stable sort of the concatenation merges
-    the two runs in O(a + b) and a common value is a pair of equal
-    neighbours — strictness on each side guarantees no other source
-    of equal neighbours (``_term_position_keys`` asserts it for every
-    positional key list)."""
-    import numpy as np
+        from rse_spark.index.codec import decode_postings
 
-    if len(a) > len(b):
-        a, b = b, a
-    if not len(a):
-        return a
-    if len(a) * _GALLOP_RATIO <= len(b):
-        return a[_sorted_member(b, a)]
-    c = np.concatenate((a, b))
-    c.sort(kind="stable")
-    return c[:-1][c[1:] == c[:-1]]
+        parts = [decode_postings(r["payload"]) for r in rows]
+        parts = sorted(
+            (p for p in parts if len(p[0])), key=lambda p: int(p[0][0])
+        )
+        if len(parts) == 1:
+            docs, tfs, dls = parts[0]
+        elif parts:
+            docs, tfs, dls = (
+                np.concatenate([p[i] for p in parts]) for i in range(3)
+            )
+        else:
+            docs = np.empty(0, dtype=np.int64)
+            tfs, dls = docs.copy(), docs.copy()
+        if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
+            raise ValueError(
+                f"posting rows of term {term!r} overlap: doc ids are "
+                f"not strictly increasing across its segments"
+            )
+        for a in (docs, tfs, dls):
+            a.flags.writeable = False
+        self.docs, self.tfs, self.dls = docs, tfs, dls
+        self.avgdl = avgdl
+        self._imp = None
 
+    @property
+    def impacts(self):
+        imp = self._imp
+        if imp is None:
+            from rse_spark.index.codec import bm25_impact
 
-def _run_lengths(docs):
-    """(values, counts) of a non-decreasing int64 array: np.unique's
-    answer without its sort."""
-    import numpy as np
-
-    if not len(docs):
-        return docs, np.empty(0, dtype=np.int64)
-    starts = np.flatnonzero(np.r_[True, docs[1:] != docs[:-1]])
-    return docs[starts], np.diff(np.r_[starts, len(docs)])
-
-
-def _topk(vals, k: int):
-    """Indices of the top ``k`` of ``vals`` in (value desc, index asc)
-    order — callers keep their doc ids ascending, so the index
-    tie-break IS the doc_id tie-break. Every value tied with the k-th
-    survives the partition (threshold top-k as in Cache-Efficient
-    Top-k Aggregation, VLDB 2023), so the stable sort over the
-    survivors orders ties exactly."""
-    import numpy as np
-
-    n = len(vals)
-    if k <= 0 or not n:
-        return np.empty(0, dtype=np.int64)
-    if n > k:
-        kth = np.partition(vals, n - k)[n - k]
-        cand = np.flatnonzero(vals >= kth)
-    else:
-        cand = np.arange(n)
-    return cand[np.argsort(-vals[cand], kind="stable")[:k]]
+            imp = bm25_impact(self.tfs, self.dls, self.avgdl)
+            imp.flags.writeable = False
+            self._imp = imp
+        return imp
 
 
 class DirectSearcher:
@@ -448,7 +452,7 @@ class DirectSearcher:
 
         self._bucket_tables: OrderedDict[int, list] = OrderedDict()
         self._bucket_bytes: dict[int, int] = {}
-        self._term_rows: dict[tuple[int, str], list[dict]] = {}
+        self._term_rows: dict[tuple[int, str], _TermRows] = {}
         # cold-path O(term) reads (r7): when a bucket is NOT resident
         # and its on-disk size exceeds ``cold_pruned_min_bytes``, a
         # term's rows are read via parquet row-group statistics on
@@ -467,7 +471,7 @@ class DirectSearcher:
         # legacy always-full loads.
         self.cold_pruned = True
         self.cold_pruned_min_bytes = 64 << 20
-        self._cold_rows: OrderedDict[tuple[int, str], list[dict]] = (
+        self._cold_rows: OrderedDict[tuple[int, str], _TermRows] = (
             OrderedDict()
         )
         self._cold_rows_bytes: dict[tuple[int, str], int] = {}
@@ -830,7 +834,7 @@ class DirectSearcher:
                 parts = list(ex.map(_read, todo))
         else:
             parts = [_read(t) for t in todo]
-        rows = [r for part in parts for r in part]
+        rows = _TermRows(r for part in parts for r in part)
         self._tls.cold_stats = {
             "row_groups_total": total, "row_groups_read": read,
         }
@@ -936,7 +940,7 @@ class DirectSearcher:
                 self._publish(bucket, tables)
             return tables
 
-    def _bucket_rows(self, bucket: int, term: str) -> list[dict]:
+    def _bucket_rows(self, bucket: int, term: str) -> _TermRows:
         """All (segment) posting rows of one term.
 
         Resident bucket: slice the term's contiguous run out of the
@@ -963,7 +967,7 @@ class DirectSearcher:
                 rows = self._term_rows_cold(bucket, term)
                 self._cold_rows_put(key, rows)
             return rows
-        rows = []
+        rows = _TermRows()
         for tbl, spans in self._load_bucket(bucket):
             for off, ln in spans.get(term, ()):
                 rows.extend(_rows_zero_copy(tbl.slice(off, ln)))
@@ -974,20 +978,20 @@ class DirectSearcher:
                 self._term_rows[key] = rows
         return rows
 
-    @staticmethod
-    def _row_decoded(row: dict):
-        """Decoded (doc_ids, tfs, dls) of one posting row, memoized ON
-        the row dict — rows are cached per (bucket, term), so a warm
-        replica pays the varint decode once per list, not once per
-        query (the caches this rides on are generation-invalidated;
-        no caller mutates the arrays)."""
-        dec = row.get("_dec")
-        if dec is None:
-            from rse_spark.index.codec import decode_postings
-
-            dec = decode_postings(row["payload"])
-            row["_dec"] = dec
-        return dec
+    def _term_list(self, term: str) -> "_TermList | None":
+        """The doc-ordered decoded postings of one PRE-ANALYZED term
+        (None when it is not indexed), memoized on the term's cached
+        rows — a warm replica pays the varint decode and the
+        cross-segment concatenation once per term, not once per
+        query."""
+        info = self.term_dict.get(term)
+        if not info:
+            return None
+        rows = self._bucket_rows(info[1], term)
+        plist = rows.plist
+        if plist is None:
+            plist = rows.plist = _TermList(term, rows, self.avgdl)
+        return plist
 
     def _prefetch_buckets(self, buckets) -> None:
         """Load the given buckets' files concurrently if not cached.
@@ -1158,30 +1162,18 @@ class DirectSearcher:
 
     def term_docs(self, term: str) -> "object":
         """Sorted unique doc_id array of one PRE-ANALYZED term —
-        presence only. Decodes the posting payloads and discards
-        tf/doc_len: no BM25 math, no bincount, no Python tuple
-        materialization. This is the qlang presence path
-        (query/qlang.py does its clause algebra on these arrays with
-        np.intersect1d/np.unique instead of full scoring passes)."""
+        presence only: the READ-ONLY ``docs`` array of the term's
+        memoized doc-ordered list (:meth:`_term_list`), no BM25 math,
+        no copy. This is the qlang presence path (query/qlang.py does
+        its clause algebra on these arrays by sorted-list merges
+        instead of full scoring passes)."""
         import numpy as np
 
-        from rse_spark.index.codec import decode_postings
-
         self._check_generation()
-        info = self.term_dict.get(term)
-        if not info:
+        plist = self._term_list(term)
+        if plist is None:
             return np.empty(0, dtype=np.int64)
-        chunks = []
-        for row in self._bucket_rows(info[1], term):
-            ids, _tfs, _dls = self._row_decoded(row)
-            chunks.append(ids)
-        if not chunks:
-            return np.empty(0, dtype=np.int64)
-        if len(chunks) == 1:
-            return chunks[0]  # sorted + unique within a segment
-        # segments partition the doc-id space, so cross-segment lists
-        # are disjoint; unique() both sorts and asserts that cheaply
-        return np.unique(np.concatenate(chunks))
+        return plist.docs
 
     _META_DOCS_CACHE_MAX = 256
 
@@ -1228,6 +1220,7 @@ class DirectSearcher:
             expr = pads.field(field) == value
         tbl = dset.to_table(columns=["doc_id"], filter=expr)
         arr = np.unique(tbl["doc_id"].to_numpy())
+        arr.flags.writeable = False  # shared with every caller
         with self._meta_lock:
             if len(self._meta_docs_cache) >= self._META_DOCS_CACHE_MAX:
                 self._meta_docs_cache.clear()
@@ -1282,6 +1275,7 @@ class DirectSearcher:
             expr = e2 if expr is None else (expr & e2)
         tbl = dset.to_table(columns=["doc_id"], filter=expr)
         arr = np.unique(tbl["doc_id"].to_numpy())
+        arr.flags.writeable = False  # shared with every caller
         with self._meta_lock:
             if len(self._meta_docs_cache) >= self._META_DOCS_CACHE_MAX:
                 self._meta_docs_cache.clear()
@@ -1468,7 +1462,7 @@ class DirectSearcher:
         if mode == "and":
             ids = sets[0]
             for s in sets[1:]:
-                ids = np.intersect1d(ids, s, assume_unique=True)
+                ids = _intersect_sorted(ids, s)
         else:
             ids = np.unique(np.concatenate(sets)) if sets else \
                 np.empty(0, dtype=np.int64)
@@ -1796,12 +1790,13 @@ class DirectSearcher:
         oracle); the pytest asserts parity against an independent
         recount.
 
-        One vectorized pass, same cost shape as the numpy scorer:
-        member lists concatenate per group, a bincount blends tfs,
-        a second bincount sums group contributions."""
+        One vectorized pass over the memoized per-term lists: member
+        lists concatenate per group, a bincount blends tfs and
+        ``codec.bm25_impact`` scores the blend, then the scorer's
+        grouped top-k (``kernel._grouped_topk``) sums the groups."""
         import numpy as np
 
-        from rse_spark.index.codec import B, K1, decode_postings
+        from rse_spark.index.codec import bm25_impact
 
         self._check_generation()
         self._prefetch_terms(
@@ -1821,45 +1816,30 @@ class DirectSearcher:
             if not infos:
                 continue
             idf = idf_fn(max(i[0] for _t, i in infos), self.n_docs)
-            g_docs, g_tfs, g_dls = [], [], []
-            for t, info in infos:
-                for row in self._bucket_rows(info[1], t):
-                    ids, tfs, dls = self._row_decoded(row)
-                    g_docs.append(ids)
-                    g_tfs.append(tfs)
-                    g_dls.append(dls)
-            if not g_docs:
+            plists = [self._term_list(t) for t, _info in infos]
+            plists = [p for p in plists if len(p.docs)]
+            if not plists:
                 continue
-            docs = np.concatenate(g_docs)
-            tfs = np.concatenate(g_tfs).astype(np.float64)
-            dls = np.concatenate(g_dls).astype(np.float64)
+            docs = np.concatenate([p.docs for p in plists])
+            tfs = np.concatenate([p.tfs for p in plists])
+            dls = np.concatenate([p.dls for p in plists])
             uniq, inv = np.unique(docs, return_inverse=True)
             tf_sum = np.bincount(inv, weights=tfs)
             # every posting of a doc carries the same doc_len; any
             # member's value stands for the blended pseudo-term's
             dl_doc = np.zeros(len(uniq))
             dl_doc[inv] = dls
-            contrib = idf * tf_sum * (K1 + 1.0) / (
-                tf_sum + K1 * (1.0 - B + B * dl_doc / self.avgdl)
-            )
             doc_chunks.append(uniq)
-            score_chunks.append(contrib)
+            score_chunks.append(idf * bm25_impact(tf_sum, dl_doc,
+                                                  self.avgdl))
         if not doc_chunks:
             return []
-        docs = np.concatenate(doc_chunks)
-        scores = np.concatenate(score_chunks)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        agg = np.bincount(inv, weights=scores)
-        matched = np.bincount(inv).astype(np.int64)
-        if mode == "and":
-            keep = matched == len(groups)
-            uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
-            if not len(uniq):
-                return []
-        return [
-            (int(uniq[i]), float(agg[i]), int(matched[i]))
-            for i in _topk(agg, k)
-        ]
+        # a doc appears once per group, so ``need`` = every group is
+        # mode='and'
+        return _grouped_topk(
+            np.concatenate(doc_chunks), np.concatenate(score_chunks), k,
+            need=len(groups) if mode == "and" else 1,
+        )
 
     def term_vector(self, doc_id: int) -> dict:
         """Lucene TermVectors API: one document's stored term vector —
@@ -1913,7 +1893,7 @@ class DirectSearcher:
             for a in arrs[1:]:
                 if not len(acc):
                     return 0
-                acc = np.intersect1d(acc, a, assume_unique=True)
+                acc = _intersect_sorted(acc, a)
             return int(len(acc))
         arrs = [a for a in arrs if len(a)]
         if not arrs:
@@ -1981,16 +1961,17 @@ class DirectSearcher:
         analyzed term its query tf, df, idf, the doc's tf and length,
         the length norm, and the resulting contribution, plus the
         corpus constants (n_docs, avgdl, k1, b) the formula closes
-        over. ``sum(contribution)`` over the matched terms IS the
-        score ``search()`` assigns the doc (the pytest asserts this
-        to 1e-9), so a served ranking is auditable term by term.
+        over. Each contribution is the term's weight (query tf x idf)
+        times the doc's memoized impact, summed in the scorer's term
+        order, so ``score`` equals what ``search()`` assigns the doc
+        bit for bit and a served ranking is auditable term by term.
 
-        Work is one posting-list decode per query term (the same
-        bucket-cached rows the scorer reads) plus a searchsorted
-        probe for the doc — never a corpus scan."""
+        Work is one searchsorted probe per query term into the same
+        memoized doc-ordered list the scorer reads — never a corpus
+        scan."""
         import numpy as np
 
-        from rse_spark.index.codec import B, K1, decode_postings
+        from rse_spark.index.codec import B, K1
 
         self._check_generation()
         qtf = query_terms(qtext, self.analyzer)
@@ -2006,25 +1987,22 @@ class DirectSearcher:
                 "tf": 0, "doc_len": None, "norm": None,
                 "contribution": 0.0, "matched": False,
             }
-            if info:
-                for row in self._bucket_rows(info[1], t):
-                    ids, tfs, dls = self._row_decoded(row)
-                    pos = int(np.searchsorted(ids, doc_id))
-                    if pos < len(ids) and ids[pos] == doc_id:
-                        tf = float(tfs[pos])
-                        dl = float(dls[pos])
-                        norm = 1.0 - B + B * dl / self.avgdl
-                        contrib = (
-                            qtf[t] * detail["idf"] * tf * (K1 + 1.0)
-                            / (tf + K1 * norm)
-                        )
-                        detail.update(
-                            tf=int(tf), doc_len=int(dl), norm=norm,
-                            contribution=contrib, matched=True,
-                        )
-                        total += contrib
-                        matched += 1
-                        break
+            plist = self._term_list(t)
+            if plist is not None:
+                ids = plist.docs
+                pos = int(np.searchsorted(ids, doc_id))
+                if pos < len(ids) and ids[pos] == doc_id:
+                    dl = int(plist.dls[pos])
+                    contrib = float(
+                        qtf[t] * detail["idf"] * plist.impacts[pos]
+                    )
+                    detail.update(
+                        tf=int(plist.tfs[pos]), doc_len=dl,
+                        norm=1.0 - B + B * dl / self.avgdl,
+                        contribution=contrib, matched=True,
+                    )
+                    total += contrib
+                    matched += 1
             terms.append(detail)
         out = {
             "doc_id": int(doc_id), "score": total,
@@ -2114,8 +2092,6 @@ class DirectSearcher:
         appender keeps it as ``src_doc_id``), pass that metadata column
         name and candidates are mapped through the stored doc metadata
         before the content fetch. ``None`` = index ids == corpus ids."""
-        import numpy as np
-
         words = phrase.split()
         if not words:
             raise ValueError("empty phrase")
@@ -2128,8 +2104,7 @@ class DirectSearcher:
         for t in terms[1:]:
             if not len(acc):
                 break
-            acc = np.intersect1d(acc, self.term_docs(t),
-                                 assume_unique=True)
+            acc = _intersect_sorted(acc, self.term_docs(t))
         if not len(acc):
             return []
         ids = [int(d) for d in acc]
@@ -2971,117 +2946,49 @@ class DirectSearcher:
                       combine: str = "sum", tiebreak: float = 0.0,
                       avgdl: "float | None" = None,
                       fvf: "str | None" = None):
-        """Vectorized exact scoring across all matched lists.
+        """Vectorized exact scoring across all matched lists: each
+        term's memoized doc-ordered list contributes weight x impact
+        per posting, and ``kernel._grouped_topk`` groups, filters and
+        ranks them in one pass.
 
-        ``within`` (sorted unique int64 array) drops postings outside
-        the given doc set from the row's memoized BM25 impacts —
-        searchsorted membership on the sorted filter, so per-list cost
-        is O(len(list) * log|within|)."""
+        ``within`` (sorted unique int64 array) is the candidate
+        universe: only those docs are ranked. Postings are never
+        masked against it — the grouped sums are read at its slots,
+        so its cost is O(|within|), not per posting."""
         import numpy as np
 
         from rse_spark.index.codec import bm25_impact
 
         doc_chunks, score_chunks, dl_chunks = [], [], []
         for t in terms:
-            info = self.term_dict.get(t)
-            if not info:
+            plist = self._term_list(t)
+            if plist is None or not len(plist.docs):
                 continue
-            w = weights[t]
-            for row in self._bucket_rows(info[1], t):
-                # decoded arrays (and the query-independent BM25
-                # impact) are memoized ON the cached row dict: a warm
-                # replica re-decoded every varint payload per query —
-                # the dominant warm-path cost (r7). The memo lives and
-                # dies with the row (evicted with its bucket, dropped
-                # on generation flips); nothing downstream mutates the
-                # arrays (masking/astype all copy).
-                doc_ids, tfs, dls = self._row_decoded(row)
-                if avgdl is None or avgdl == self.avgdl:
-                    imp = row.get("_imp")
-                    if imp is None:
-                        imp = bm25_impact(tfs, dls, self.avgdl)
-                        row["_imp"] = imp
-                else:
-                    imp = bm25_impact(tfs, dls, avgdl)
-                if within is not None:
-                    mask = _sorted_member(within, doc_ids)
-                    doc_ids, dls, imp = doc_ids[mask], dls[mask], imp[mask]
-                    if not len(doc_ids):
-                        continue
-                doc_chunks.append(doc_ids)
-                score_chunks.append(w * imp)
-                if fvf is not None:
-                    dl_chunks.append(dls.astype(np.float64))
+            if avgdl is None or avgdl == self.avgdl:
+                imp = plist.impacts
+            else:
+                imp = bm25_impact(plist.tfs, plist.dls, avgdl)
+            doc_chunks.append(plist.docs)
+            score_chunks.append(weights[t] * imp)
+            if fvf is not None:
+                dl_chunks.append(plist.dls)
         if not doc_chunks:
             return []
-        docs = np.concatenate(doc_chunks)
-        scores = np.concatenate(score_chunks)
-        # dense offset-bincount grouping when the id range is compact
-        # (np.unique's argsort was ~1/3 of the cold-query profile at
-        # 500k docs); sparse ranges fall back to unique+inverse. Both
-        # paths accumulate in identical input order -> bit-identical
-        # sums (asserted by the equivalence tests).
-        lo = int(docs.min())
-        width = int(docs.max()) - lo + 1
-        dense = width <= max(4 * len(docs), 1 << 20)
-        if dense:
-            keys = docs - lo
-            cnt_full = np.bincount(keys, minlength=width)
-            agg_full = np.bincount(
-                keys, weights=scores, minlength=width
-            )
-            nz = np.flatnonzero(cnt_full)
-            uniq = nz + lo
-            agg = agg_full[nz]
-            matched = cnt_full[nz].astype(np.int64)
+        if len(doc_chunks) == 1:
+            docs, scores = doc_chunks[0], score_chunks[0]
         else:
-            uniq, inv = np.unique(docs, return_inverse=True)
-            agg = np.bincount(inv, weights=scores)
-            matched = np.bincount(inv).astype(np.int64)
-        if combine == "dismax":
-            # DisjunctionMax: best single clause dominates, the rest
-            # contribute tiebreak-scaled — max via maximum.at, the sum
-            # the bincount above already produced
-            if dense:
-                best_full = np.zeros(width)
-                np.maximum.at(best_full, keys, scores)
-                best = best_full[nz]
-            else:
-                best = np.zeros(len(uniq))
-                np.maximum.at(best, inv, scores)
-            agg = best + tiebreak * (agg - best)
-        if fvf is not None:
-            # ES function_score field_value_factor (modifier=ln1p,
-            # boost_mode=multiply) on doc length: every posting already
-            # carries the doc's dl, so the factor costs one scatter
-            # (identical dl lands in the slot from every list) and one
-            # vectorized log — no metadata fetch. Applied BEFORE the
-            # match-count filters and top-k so shaping changes the
-            # RANKING, not just the displayed score.
-            if dense:
-                dlu_full = np.zeros(width)
-                dlu_full[keys] = np.concatenate(dl_chunks)
-                dlu = dlu_full[nz]
-            else:
-                dlu = np.zeros(len(uniq))
-                dlu[inv] = np.concatenate(dl_chunks)
-            agg = agg * np.log1p(dlu)
-        if mode == "and" or min_match is not None:
-            need = len(terms) if mode == "and" else min_match
-            keep = matched >= need
-            uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
-            if len(uniq) == 0:
-                return []
-        if after is not None:
-            # search_after cursor: strictly after (s, doc) in
-            # (score desc, doc_id asc) order — one vectorized compare,
-            # then the SAME kth-partition top-k on the survivors
-            s_a, d_a = float(after[0]), int(after[1])
-            keep = (agg < s_a) | ((agg == s_a) & (uniq > d_a))
-            uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
-            if len(uniq) == 0:
-                return []
-        return [
-            (int(uniq[i]), float(agg[i]), int(matched[i]))
-            for i in _topk(agg, k)
-        ]
+            docs = np.concatenate(doc_chunks)
+            scores = np.concatenate(score_chunks)
+        need = 1
+        if mode == "and":
+            need = len(terms)
+        elif min_match is not None:
+            need = min_match
+        return _grouped_topk(
+            docs, scores, k, need=need, within=within, after=after,
+            combine=combine, tiebreak=tiebreak,
+            dls=(
+                np.concatenate(dl_chunks).astype(np.float64)
+                if fvf is not None else None
+            ),
+        )

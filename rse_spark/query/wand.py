@@ -53,6 +53,7 @@ from rse_spark.index.codec import (
 )
 from rse_spark.query.engine import idf as idf_fn
 from rse_spark.query.engine import query_terms
+from rse_spark.query.kernel import _grouped_topk
 
 
 class _ListIter:
@@ -328,30 +329,6 @@ def intersect_and_lists(
         target += 1
 
 
-def group_sum_by_doc(
-    docs: np.ndarray, scores: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(uniq_docs, summed_scores, match_counts) grouped by doc id.
-
-    When the id RANGE is compact relative to the posting count (the
-    common case: dense per-corpus or per-segment ids), accumulate by
-    offset bincount — O(n + range) with no sort; np.unique's argsort
-    was ~1/3 of the whole cold-query profile at 500k docs. Falls back
-    to unique+inverse for sparse ranges. Both paths add weights in
-    identical input order, so sums are bit-identical."""
-    lo = int(docs.min())
-    width = int(docs.max()) - lo + 1
-    if width <= max(4 * len(docs), 1 << 20):
-        keys = docs - lo
-        cnt = np.bincount(keys, minlength=width)
-        agg = np.bincount(keys, weights=scores, minlength=width)
-        nz = np.flatnonzero(cnt)
-        return nz + lo, agg[nz], cnt[nz].astype(np.int64)
-    uniq, inv = np.unique(docs, return_inverse=True)
-    agg = np.bincount(inv, weights=scores)
-    return uniq, agg, np.bincount(inv).astype(np.int64)
-
-
 def score_segment_vectorized(
     lists: "list[tuple[bytes, float]]", k: int, avgdl: float,
     n_terms: int, mode: str,
@@ -366,7 +343,10 @@ def score_segment_vectorized(
     block-max metadata only delivers on impact-skewed lists (the
     Lucene analogue: BooleanScorer vs WANDScorer chosen per cost
     model). The BMW loop stays available (algo='wand') and remains
-    the serving-tier scale story."""
+    the serving-tier scale story. Grouping, the and-mode filter and
+    the top-k are the serving replica's own kernel
+    (``kernel._grouped_topk``), so both tiers rank with one
+    implementation."""
     docs_c, score_c = [], []
     for payload, w in lists:
         doc_ids, tfs, dls = decode_postings(payload)
@@ -376,23 +356,10 @@ def score_segment_vectorized(
         score_c.append(w * bm25_impact(tfs, dls, avgdl))
     if not docs_c:
         return []
-    docs = np.concatenate(docs_c)
-    scores = np.concatenate(score_c)
-    uniq, agg, matched = group_sum_by_doc(docs, scores)
-    if mode == "and":
-        keep = matched >= n_terms
-        uniq, agg, matched = uniq[keep], agg[keep], matched[keep]
-        if not len(uniq):
-            return []
-    if len(uniq) > k:
-        kth = np.partition(agg, len(agg) - k)[len(agg) - k]
-        cand = np.nonzero(agg >= kth)[0]
-    else:
-        cand = np.arange(len(uniq))
-    order = sorted(cand.tolist(), key=lambda i: (-agg[i], uniq[i]))[:k]
-    return [
-        (int(uniq[i]), float(agg[i]), int(matched[i])) for i in order
-    ]
+    return _grouped_topk(
+        np.concatenate(docs_c), np.concatenate(score_c), k,
+        need=n_terms if mode == "and" else 1,
+    )
 
 
 def wand_search(

@@ -1,5 +1,5 @@
 """The serving tier's positional kernel: sorted-list intersection,
-run-length counting and the one numpy top-k (query/serve.py), checked
+run-length counting and the one numpy top-k (query/kernel.py), checked
 against brute-force references — first the helpers on seeded random
 arrays, then every positional surface on a small seeded corpus whose
 per-doc answers are recounted from the token lists."""
@@ -11,13 +11,13 @@ import pandas as pd
 import pytest
 
 from rse_spark.index.positions import build_positions
-from rse_spark.query.serve import (
+from rse_spark.query.kernel import (
     _GALLOP_RATIO,
-    DirectSearcher,
     _intersect_sorted,
     _run_lengths,
     _topk,
 )
+from rse_spark.query.serve import DirectSearcher
 
 
 def _strict(rng, n, hi):

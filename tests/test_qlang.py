@@ -859,6 +859,51 @@ def test_phrase_prefix_atom_semantics(planted_pos):
     assert search_ql(s, '"alpha zzz*"', **kw) == []
 
 
+def test_phrase_atom_and_terms_sorted_hits(spark, tmp_path_factory):
+    """A phrase atom ANDed with term atoms: the phrase surfaces return
+    hits in count order (here the reverse of doc order), match_ql
+    sorts them once, and the clause's sorted-list merges — including
+    the binary-search branch, a 1-doc term set against 20 phrase
+    hits — qualify exactly the right docs, through the positional
+    sidecar and through the content store alike."""
+    import numpy as np
+
+    from rse_spark.query.qlang import match_ql
+    from rse_spark.streaming.stream_index import append_batch
+
+    rows = [
+        (i, " ".join(["xq yq"] * (i + 1))
+         + (" zq" if i in (3, 11) else "") + (" wq" if i == 3 else ""))
+        for i in range(20)
+    ] + [(20, "zq alone")]
+    base = tmp_path_factory.mktemp("qlang_phrase_and")
+    corpus_path = str(base / "corpus.parquet")
+    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(corpus_path)
+    root = str(base / "idx")
+    append_batch(spark, spark.read.parquet(corpus_path), root,
+                 analyzer="simple", content_col="text", batch_id=0,
+                 with_positions=True)
+    to_src = {
+        int(r["doc_id"]): int(r["src_doc_id"])
+        for r in spark.read.parquet(f"{root}/enriched")
+        .select("doc_id", "src_doc_id").collect()
+    }
+    s = DirectSearcher(root, analyzer="simple")
+    ph = [d for d, _n in s.phrase_search_positions("xq yq", k=100)]
+    assert len(ph) == 20 and ph != sorted(ph)
+    for kw in ({}, dict(corpus_path=corpus_path, key_col="src_doc_id")):
+        for q, want in (('"xq yq"', set(range(20))),
+                        ('"xq yq" AND zq', {3, 11}),
+                        ('"xq yq" AND wq', {3}),
+                        ('"xq yq" AND zq AND wq', {3}),
+                        ('"xq yq" AND -zq AND xq', set(range(20)) - {3, 11}),
+                        ('"xq yq" AND wq OR zq', {3, 11, 20})):
+            qualified, _boosts = match_ql(s, q, **kw)
+            assert (np.diff(qualified) > 0).all(), q
+            assert {to_src[int(d)] for d in qualified} == want, (q, kw)
+            assert _src_ids(search_ql(s, q, k=50, **kw), to_src) == want
+
+
 def test_phrase_prefix_atom_needs_sidecar(planted):
     root, corpus_path, _to_src = planted
     s = DirectSearcher(root, analyzer="simple")

@@ -157,21 +157,21 @@ def test_cold_pruned_skips_row_groups(spark, tmp_path):
 
 
 def test_group_sum_dense_equals_sparse():
-    """The dense offset-bincount grouping is BIT-IDENTICAL to the
-    unique+inverse path (both accumulate weights in input order)."""
+    """The kernel's dense offset-bincount grouping is BIT-IDENTICAL to
+    its unique+inverse path (both accumulate weights in input order)."""
     import numpy as np
 
-    from rse_spark.query.wand import group_sum_by_doc
+    from rse_spark.query.kernel import _grouped_topk
 
     rng = np.random.default_rng(7)
     docs = rng.integers(0, 5000, 20000).astype(np.int64)
     scores = rng.random(20000)
-    u1, a1, m1 = group_sum_by_doc(docs, scores)  # dense route
-    docs2 = docs * 1_000_003  # same groups, range >> 4n -> sparse route
-    u2, a2, m2 = group_sum_by_doc(docs2, scores)
-    assert np.array_equal(u1 * 1_000_003, u2)
-    assert np.array_equal(a1, a2)  # bit-identical float sums
-    assert np.array_equal(m1, m2)
+    n = len(np.unique(docs))
+    dense = _grouped_topk(docs, scores, n)
+    # same groups, range >> 4n -> sparse route
+    sparse = _grouped_topk(docs * 1_000_003, scores, n)
+    assert len(dense) == n
+    assert [(d * 1_000_003, s, m) for d, s, m in dense] == sparse
 
 
 def test_direct_last_stats_thread_local(root):
@@ -312,6 +312,22 @@ def test_explain_matches_search_scores(root):
     # a doc matching nothing explains to zero
     ex0 = searcher.explain("zzzmissingterm", hits[0][0])
     assert ex0["score"] == 0.0 and ex0["n_terms_matched"] == 0
+
+
+def test_explain_score_equals_search_bitwise(root):
+    """explain() multiplies each term's weight by the same memoized
+    impact the scorer sums, in the scorer's term order, so its score
+    is search()'s score to the last bit — for or and and queries,
+    repeated terms (query tf 2) and single-term queries."""
+    searcher = DirectSearcher(root, analyzer="code")
+    for q, mode in (("parse index merge", "or"), ("class return", "and"),
+                    ("parse parse index", "or"), ("merge", "or")):
+        hits = searcher.search(q, k=20, mode=mode)
+        assert hits, q
+        for d, s, m in hits:
+            ex = searcher.explain(q, d)
+            assert ex["score"] == s, (q, d, ex["score"], s)
+            assert ex["n_terms_matched"] == m
 
 
 def test_suggest_ranking(root):
