@@ -26,9 +26,14 @@ import pyarrow.parquet as pq
 from rse_spark.query.engine import idf as idf_fn
 from rse_spark.query.engine import query_terms
 from rse_spark.query.kernel import (
+    _chain_counts,
+    _chain_start,
+    _chain_step,
     _grouped_topk,
     _intersect_sorted,
+    _is_compact,
     _run_lengths,
+    _SlotSpace,
     _sorted_member,
     _topk,
 )
@@ -493,10 +498,16 @@ class DirectSearcher:
         }
         # decoded positional keys per term (phrase/NEAR serving path):
         # LRU, byte-budgeted like the bucket cache, invalidated on
-        # generation change
+        # generation change. A dense term's slot bitmap
+        # (_term_bitmap) is charged to the same budget and evicted
+        # with its term's keys.
         self._pos_keys: OrderedDict[str, object] = OrderedDict()
+        self._pos_bitmaps: dict[str, object] = {}
         self._pos_keys_bytes = 0
         self.max_pos_keys_bytes = 256 << 20
+        # this generation's dense token slots (kernel._SlotSpace): None
+        # until first built, False when the doc-id range is not compact
+        self._slots = None
         # packed-key split for positional matching: low ``_pos_bits``
         # bits hold the token position, the rest the doc id. Chosen at
         # sidecar build time from the real id/length ranges and read
@@ -630,7 +641,9 @@ class DirectSearcher:
             self._bucket_disk_bytes.clear()
             self._bucket_files_cache.clear()
             self._pos_keys.clear()
+            self._pos_bitmaps.clear()
             self._pos_keys_bytes = 0
+            self._slots = None
             self._meta_docs_cache.clear()
             self._enriched_ranges_cache = None
             self._result_cache.clear()
@@ -2133,8 +2146,8 @@ class DirectSearcher:
         is over the analyzed token stream (Lucene semantics; for the
         ``simple`` analyzer this equals whitespace adjacency, proven
         by the equivalence pytest). Occurrences are counted by
-        :meth:`_phrase_occurrence_counts` (a sorted-list intersection
-        chain over packed position keys); the top-k is one
+        :meth:`_phrase_occurrence_counts` (a chain over position key
+        lists and dense terms' slot bitmaps); the top-k is one
         kth-partition + stable sort (``_topk``).
 
         Raises ValueError when the index has no positional sidecar."""
@@ -2153,39 +2166,50 @@ class DirectSearcher:
                                   within=None):
         """(doc_ids, counts) numpy pair of per-document exact-phrase
         occurrence counts for pre-analyzed ``terms``, ascending by doc
-        id. Every occurrence is one packed key
-        (doc_id << pos_bits) | pos, so each term's keys form one
-        strictly increasing array and the doc id rides along in the
-        high bits — matches can never cross documents. The chain keeps
-        the keys of the phrase's current LAST word: step j intersects
-        (cur + 1) with term_j's keys (``_intersect_sorted``: a merge of
-        two sorted runs, or a binary search when one side is much
-        shorter). ``cur`` stays sorted throughout, so the per-doc
-        counts are run lengths of its doc ids. Cost ~ sum of the
-        terms' position-list sizes (the textbook positional-query
-        bound), independent of candidate count.
+        id. The chain holds the occurrences of the phrase's current
+        LAST word in one of two representations (query/kernel.py):
+        every term has its strictly increasing packed keys
+        (doc_id << pos_bits) | pos, and a dense term — at least one
+        key per 64 slots of the generation's slot space, so the bitmap
+        is no larger than the keys — also has a bitmap over the slots
+        ``start[doc] + pos`` (:meth:`_term_bitmap`). One spacer slot
+        after each document means adjacency never crosses documents
+        in either form. Each step (``_chain_step``) is a shifted word
+        AND of two bitmaps, one gather of slots +-1 when one side is a
+        list, or a merge of two lists (``_intersect_sorted``). A chain
+        that ends as keys is counted by run lengths of its doc ids, one
+        that ends as a bitmap by popcount prefix sums at the document
+        starts. Cost ~ the sparse terms' list sizes plus n_slots / 64
+        words per dense step, independent of candidate count. An index
+        whose doc-id range is not compact has no slot space and chains
+        on keys only.
 
         ``within`` (sorted unique int64 doc-id ndarray) drops chain
         starts outside the set up front, bounding the chain work by
-        the candidate window — the rescore path's contract."""
+        the candidate window — the rescore path's contract. The chain
+        then starts from the first word's keys, even for a dense
+        term."""
         import numpy as np
 
-        keys: dict[str, "np.ndarray"] = {}
+        word: dict[str, tuple] = {}
         empty = (np.empty(0, dtype=np.int64),
                  np.empty(0, dtype=np.int64))
         for t in sorted(set(terms)):
-            keys[t] = self._term_position_keys(t)
-            if not len(keys[t]):
+            word[t] = self._chain_word(t)
+            if not (len(word[t][0]) or word[t][1]):  # absent term
                 return empty
+        space = self._slot_space()
         shift = np.int64(self._pos_bits)
-        cur = keys[terms[0]]
         if within is not None:
+            cur = self._term_position_keys(terms[0])
             cur = cur[_sorted_member(within, cur >> shift)]
+        else:
+            cur = _chain_start(*word[terms[0]])
         for t in terms[1:]:
-            if not len(cur):
+            if cur.dtype == np.int64 and not len(cur):
                 return empty
-            cur = _intersect_sorted(cur + 1, keys[t])
-        return _run_lengths(cur >> shift)
+            cur = _chain_step(space, cur, *word[t])
+        return _chain_counts(space, cur, shift)
 
     def search_rescored(self, qtext: str, phrase: str, k: int = 10,
                         window: int = 50, weight: float = 2.0,
@@ -2320,7 +2344,12 @@ class DirectSearcher:
         phrase_search_positions; the final step tests membership in
         the UNION of the expanded terms' position keys (expansion
         capped and ordered like every other rewrite). A single-word
-        query degenerates to presence-counting of the expansion."""
+        query degenerates to presence-counting of the expansion. The
+        head words chain through ``_chain_step`` exactly as in
+        :meth:`_phrase_occurrence_counts` (slot bitmaps for dense
+        words, key lists otherwise); the last step reads the dense
+        expansions' bitmaps and one sorted union of the sparse ones'
+        keys."""
         import itertools
 
         import numpy as np
@@ -2336,26 +2365,34 @@ class DirectSearcher:
                                       max_expansions)
         if not expanded:
             return []
-        last_keys = [
-            ks for t in expanded
-            if len(ks := self._term_position_keys(t))
+        last = [
+            t for t in expanded if len(self._term_position_keys(t))
         ]
-        if not last_keys:
+        if not last:
             return []
+        space = self._slot_space()
         # one position holds one token, so the union of distinct
         # terms' keys is again strictly increasing
-        tail = np.sort(np.concatenate(last_keys))
-        cur = tail
-        if head:
-            cur = self._term_position_keys(head[0])
-            # the last step's "term" is ANY expanded term
-            for t_keys in itertools.chain(
-                (self._term_position_keys(t) for t in head[1:]), [tail]
+        if not head:
+            cur = np.sort(np.concatenate(
+                [self._term_position_keys(t) for t in last]
+            ))
+        else:
+            cur = _chain_start(*self._chain_word(head[0]))
+            sparse, dense = [], []
+            for t in last:
+                ks, bitmaps = self._chain_word(t)
+                sparse.append(ks)
+                dense.extend(bitmaps)
+            # the last step's word is ANY expanded term
+            for t_keys, t_bitmaps in itertools.chain(
+                map(self._chain_word, head[1:]),
+                [(np.sort(np.concatenate(sparse)), dense)],
             ):
-                if not len(cur):
+                if cur.dtype == np.int64 and not len(cur):
                     return []
-                cur = _intersect_sorted(cur + 1, t_keys)
-        uniq, counts = _run_lengths(cur >> np.int64(self._pos_bits))
+                cur = _chain_step(space, cur, t_keys, t_bitmaps)
+        uniq, counts = _chain_counts(space, cur, np.int64(self._pos_bits))
         return [
             (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
         ]
@@ -2430,7 +2467,7 @@ class DirectSearcher:
             cur = kt[hi > lo]
         if not len(cur):
             return np.empty(0, dtype=np.int64)
-        return np.unique(cur >> np.int64(self._pos_bits))
+        return _run_lengths(cur >> np.int64(self._pos_bits))[0]
 
     def _positions_pairs(self, t1: str, t2: str, max_dist: int,
                          ordered: bool = True):
@@ -2472,9 +2509,8 @@ class DirectSearcher:
         keep = cnt > 0
         if not keep.any():
             return empty
-        docs = k1[keep] >> np.int64(self._pos_bits)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        return uniq, np.bincount(inv, weights=cnt[keep]).astype(np.int64)
+        uniq, runs = _run_lengths(k1[keep] >> np.int64(self._pos_bits))
+        return uniq, np.add.reduceat(cnt[keep], np.cumsum(runs) - runs)
 
     def _term_position_keys(self, term: str):
         """Sorted packed occurrence keys (doc_id << pos_bits) | pos for
@@ -2484,10 +2520,14 @@ class DirectSearcher:
         arithmetic — round-5 VERDICT item 3 lifted the fixed
         doc_id < 2^31 bound); the guards below re-check it against the
         decoded data so a corrupted/mismatched sidecar fails loudly
-        instead of matching across documents. Decoded arrays are
-        LRU-cached under ``max_pos_keys_bytes`` so repeated phrase/NEAR
-        terms skip the parquet read + varint decode; the generation
-        check clears the cache on writer commits."""
+        instead of matching across documents, and when the generation
+        has a slot space (:meth:`_slot_space`) every position must be
+        below its doc's ``doc_len``. Decoded arrays are LRU-cached under
+        ``max_pos_keys_bytes`` so repeated phrase/NEAR terms skip the
+        parquet read + varint decode; a dense term's slot bitmap
+        (:meth:`_term_bitmap`) is charged to the same budget and leaves
+        with its keys. The generation check clears the cache on writer
+        commits. NEAR, slop and span_first read these keys only."""
         import numpy as np
 
         with self._meta_lock:
@@ -2525,17 +2565,92 @@ class DirectSearcher:
                 f"positional sidecar repeats an occurrence of "
                 f"{term!r} — rebuild it with build_positions"
             )
+        if space := self._slot_space():
+            space.check(keys, term)
         with self._meta_lock:
             if term not in self._pos_keys:
                 self._pos_keys[term] = keys
                 self._pos_keys_bytes += keys.nbytes
-                while (
-                    len(self._pos_keys) > 1
-                    and self._pos_keys_bytes > self.max_pos_keys_bytes
-                ):
-                    _t, old = self._pos_keys.popitem(last=False)
-                    self._pos_keys_bytes -= old.nbytes
+                self._evict_pos_keys()
         return keys
+
+    def _chain_word(self, term: str):
+        """``(keys, bitmaps)`` of one word for ``_chain_step``: a dense
+        term's bitmap and no keys, else the term's keys and no
+        bitmap."""
+        keys = self._term_position_keys(term)
+        bits = self._term_bitmap(term, keys)
+        return (keys, ()) if bits is None else (keys[:0], (bits,))
+
+    def _term_bitmap(self, term: str, keys):
+        """The slot bitmap of a dense term (kernel._SlotSpace), or None
+        for a sparse term or when the generation has no slot space.
+        Dense means the bitmap (n_slots / 64 words) is no larger than
+        the term's key list. Built lazily from ``keys`` (the term's
+        ``_term_position_keys``) in bounded chunks, memoized while
+        those keys are, and charged to ``max_pos_keys_bytes``."""
+        space = self._slot_space()
+        if not space or not space.dense(len(keys)):
+            return None
+        with self._meta_lock:
+            bits = self._pos_bitmaps.get(term)
+        if bits is not None:
+            return bits
+        bits = space.bitmap(keys)
+        with self._meta_lock:
+            if (self._pos_keys.get(term) is keys
+                    and term not in self._pos_bitmaps):
+                self._pos_bitmaps[term] = bits
+                self._pos_keys_bytes += bits.nbytes
+                self._pos_keys.move_to_end(term)
+                self._evict_pos_keys()
+        return bits
+
+    def _evict_pos_keys(self) -> None:
+        """Drop least recently used terms' keys, with their bitmaps,
+        until the memo fits ``max_pos_keys_bytes`` or holds one term.
+        Caller holds ``_meta_lock``."""
+        while (
+            len(self._pos_keys) > 1
+            and self._pos_keys_bytes > self.max_pos_keys_bytes
+        ):
+            t, old = self._pos_keys.popitem(last=False)
+            self._pos_keys_bytes -= old.nbytes
+            bits = self._pos_bitmaps.pop(t, None)
+            if bits is not None:
+                self._pos_keys_bytes -= bits.nbytes
+
+    def _slot_space(self):
+        """This generation's dense token slots (kernel._SlotSpace),
+        built once per generation from the per-doc ``doc_len`` of
+        ``docs_meta`` (``enriched`` when docs_meta is virtual), or
+        False when the doc-id range is not compact (the same width
+        rule as ``_grouped_topk``) or no doc_len column exists —
+        phrases then chain on key lists only."""
+        import numpy as np
+        import pyarrow.dataset as pads
+
+        with self._meta_lock:
+            if self._slots is not None:
+                return self._slots
+            gen = self._gen_sig
+        space = False
+        path = os.path.join(self.root, "docs_meta")
+        if not os.path.isdir(path):
+            path = os.path.join(self.root, "enriched")
+        dset = pads.dataset(path, format="parquet", partitioning="hive")
+        if {"doc_id", "doc_len"} <= set(dset.schema.names):
+            tbl = dset.to_table(columns=["doc_id", "doc_len"])
+            ids = tbl["doc_id"].to_numpy().astype(np.int64)
+            if len(ids) and _is_compact(
+                int(ids.max()) - int(ids.min()) + 1, len(ids)
+            ):
+                lens = tbl["doc_len"].to_numpy().astype(np.int64)
+                space = _SlotSpace(ids, lens, self._pos_bits)
+        with self._meta_lock:
+            if self._gen_sig == gen:
+                self._slots = space
+        return space
 
     def _check_positions_coverage(self) -> None:
         """Sidecar presence + coverage: every live postings group must

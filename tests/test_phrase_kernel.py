@@ -1,20 +1,35 @@
 """The serving tier's positional kernel: sorted-list intersection,
-run-length counting and the one numpy top-k (query/kernel.py), checked
-against brute-force references — first the helpers on seeded random
-arrays, then every positional surface on a small seeded corpus whose
-per-doc answers are recounted from the token lists."""
+run-length counting, the one numpy top-k and the slot-bitmap helpers
+(query/kernel.py), checked against brute-force references — first the
+helpers on seeded random arrays, then every positional surface on small
+seeded corpora whose per-doc answers are recounted from the token lists:
+dense terms chain as slot bitmaps, sparse ones as key lists, and an
+index with a non-compact doc-id range chains on lists only."""
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+from collections import Counter
+
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
 
 from rse_spark.index.positions import build_positions
+from rse_spark.query import serve
 from rse_spark.query.kernel import (
     _GALLOP_RATIO,
+    _bits_test,
     _intersect_sorted,
+    _popcount64,
+    _range_counts,
     _run_lengths,
+    _shift_and,
     _topk,
 )
 from rse_spark.query.serve import DirectSearcher
@@ -65,6 +80,71 @@ def test_topk_matches_reference(seed):
         ref = sorted(range(len(vals)), key=lambda i: (-vals[i], i))
         for k in (0, 1, 2, 5, 10, len(vals), len(vals) + 3):
             assert _topk(vals, k).tolist() == ref[:k], (vals, k)
+
+
+def _bools(bits):
+    """Bit i of a uint64 bitmap as element i (word i // 64, bit i % 64)."""
+    return np.array([(int(bits[i // 64]) >> (i % 64)) & 1
+                     for i in range(64 * len(bits))], dtype=bool)
+
+
+def _words(rng, n, density=0.5):
+    return np.packbits(rng.random(64 * n) < density,
+                       bitorder="little").view("<u8").astype(np.uint64)
+
+
+def test_popcount64_matches_bin():
+    rng = np.random.default_rng(5)
+    w = np.concatenate([
+        np.array([0, 1, 2**63, 2**64 - 1, 0x5555555555555555],
+                 dtype=np.uint64),
+        rng.integers(0, 2**64 - 1, 500, dtype=np.uint64, endpoint=True),
+        _words(rng, 200, 0.03),
+    ])
+    got = _popcount64(w)
+    assert got.dtype == np.int64
+    assert got.tolist() == [bin(int(x)).count("1") for x in w]
+
+
+def test_shift_and_and_bits_test_cross_word_boundaries():
+    one = np.uint64(1)
+    # bit 63 of word 0 carries into bit 0 of word 1; bit 0 moves to 1;
+    # bit 63 of the last word falls off the end
+    cur = np.array([one << np.uint64(63) | one, one << np.uint64(63)],
+                   dtype=np.uint64)
+    full = np.full(2, 2**64 - 1, dtype=np.uint64)
+    assert _shift_and(cur, full).tolist() == [2, 1]
+    assert _shift_and(cur, np.array([0, 2**64 - 1],
+                                    dtype=np.uint64)).tolist() == [0, 1]
+    assert not _shift_and(cur, np.array([1, 2], dtype=np.uint64)).any()
+    rng = np.random.default_rng(6)
+    for n in (1, 2, 7):
+        a, b = _words(rng, n), _words(rng, n)
+        ba, bb = _bools(a), _bools(b)
+        want = np.r_[False, ba[:-1]] & bb
+        assert np.array_equal(_bools(_shift_and(a, b)), want)
+        assert np.array_equal(_bools(a), ba)  # inputs untouched
+        every = np.arange(64 * n, dtype=np.int64)
+        assert np.array_equal(_bits_test(a, every), ba)
+        assert np.array_equal(_bits_test(a, every[::-7]), ba[::-7])
+
+
+def test_range_counts_matches_brute_force():
+    rng = np.random.default_rng(7)
+    for n, density in ((1, 0.5), (4, 0.5), (5, 0.05), (3, 1.0)):
+        bits = _words(rng, n, density)
+        ref = _bools(bits)
+        edges = np.arange(0, 64 * n, 64)  # every word boundary
+        rand = rng.integers(0, 64 * n, 12)
+        bounds = np.sort(np.r_[edges, rand, rand[:3],
+                               64 * n - 1]).astype(np.int64)  # dups: empty
+        want = [int(ref[a:b].sum()) for a, b in zip(bounds, bounds[1:])]
+        assert _range_counts(bits, bounds).tolist() == want
+    bits = _words(rng, 3)
+    assert _range_counts(bits, np.array([5], dtype=np.int64)).tolist() == []
+    assert _range_counts(bits, np.array([64, 64, 128],
+                                        dtype=np.int64)).tolist() == \
+        [0, int(_bools(bits)[64:128].sum())]
 
 
 VOCAB = ["alpha", "beta", "betamax", "gamma", "rare"]
@@ -191,7 +271,9 @@ def test_search_rescored_within_matches_brute_force(small):
     s, docs = small
     for q, p, window in [("rare gamma", "alpha rare", 20),
                          ("beta", "alpha alpha", 30),
-                         ("betamax rare", "rare alpha", 10)]:
+                         ("betamax rare", "rare alpha", 10),
+                         ("alpha", "alpha beta alpha", 40),
+                         ("gamma beta", "beta gamma rare", 25)]:
         counts = _phrase_counts(docs, p.split())
         base = s.search(q, k=window)
         want = sorted(
@@ -204,3 +286,279 @@ def test_search_rescored_within_matches_brute_force(small):
             [(d, m, n) for d, _s, m, n in want], (q, p)
         for g, w in zip(got, want):
             assert abs(g[1] - w[1]) < 1e-9
+
+
+# 3- and 4-word chains through every step pairing: in ``small`` only
+# ``rare`` is sparse, so e.g. "alpha beta rare" steps bitmap x bitmap,
+# then bitmap x list, and "rare alpha beta" list x bitmap twice
+CHAINS = ["alpha beta gamma", "alpha beta rare", "rare alpha beta",
+          "alpha rare rare", "rare rare alpha", "alpha alpha beta rare",
+          "rare rare alpha gamma", "alpha rare alpha rare",
+          "gamma rare beta alpha", "beta alpha alpha beta",
+          "alpha gamma alpha"]
+
+
+def test_dense_terms_carry_bitmaps(small):
+    """A term has a slot bitmap exactly when the bitmap is no larger than
+    its key list: alpha (~55% of tokens) does, rare (~1%) does not."""
+    s, docs = small
+    s.phrase_search_positions("alpha rare")
+    space = s._slot_space()
+    assert space.n_words == (1 + sum(len(d) + 1 for d in docs)) // 64 + 1
+    dense = {
+        t for t in VOCAB
+        if s._term_bitmap(t, s._term_position_keys(t)) is not None
+    }
+    assert "alpha" in dense and "rare" not in dense
+    assert dense == {
+        t for t in VOCAB
+        if len(s._term_position_keys(t)) >= space.n_words
+    }
+
+
+def test_chain_pairings_match_brute_force(small, monkeypatch):
+    s, docs = small
+    seen = set()
+    step = serve._chain_step
+
+    def spy(space, cur, keys, bitmaps=()):
+        seen.add((cur.dtype == np.uint64, bool(bitmaps)))
+        return step(space, cur, keys, bitmaps)
+
+    monkeypatch.setattr(serve, "_chain_step", spy)
+    hits = 0
+    for p in CHAINS:
+        want = _phrase_counts(docs, p.split())
+        hits += any(want.values())
+        for k in (2, 10**6):
+            assert s.phrase_search_positions(p, k=k) == _ranked(want, k), p
+    assert hits >= len(CHAINS) - 2
+    # (chain is a bitmap, next word has one): bitmap x bitmap,
+    # bitmap x list, list x bitmap, list x list
+    assert seen == {(True, True), (True, False), (False, True),
+                    (False, False)}
+
+
+def _build(spark, root, docs, ids=None, **layout):
+    from rse_spark.index.storage import build_resumable
+
+    corpus = spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(len(docs)) if ids is None else ids,
+        "text": [" ".join(d) for d in docs],
+    }))
+    build_resumable(spark, corpus, root, analyzer="simple",
+                    content_col="text", **layout)
+    build_positions(spark, corpus, root, analyzer="simple",
+                    content_col="text")
+    return DirectSearcher(root, analyzer="simple")
+
+
+# (last token of doc 2i, first token of doc 2i + 1)
+JOINTS = [("edge", "edge"), ("edge", "edger"), ("edger", "edge"),
+          ("edger", "edger"), ("f0", "edge"), ("edger", "f1")]
+
+
+@pytest.fixture(scope="module")
+def cut(spark, tmp_path_factory):
+    """Terms at the density cut: ``edge`` has exactly n_words keys (its
+    bitmap is as large as its key list, so it has one) and ``edger``
+    n_words - 1 (a list). Both also end and start documents (JOINTS), so
+    their phrases meet at document boundaries."""
+    rng = np.random.default_rng(11)
+    lens = rng.integers(8, 40, 60)
+    n_words = (1 + int((lens + 1).sum())) // 64 + 1
+    docs = [list(rng.choice(["f0", "f1", "f2"], size=int(n)))
+            for n in lens]
+    for i, (a, b) in enumerate(JOINTS):
+        docs[2 * i][-1], docs[2 * i + 1][0] = a, b
+    interior = [(i, j) for i, d in enumerate(docs)
+                for j in range(1, len(d) - 1)]
+    placed = Counter(t for d in docs for t in d)
+    slots = iter(rng.permutation(len(interior)))
+    for t, n in (("edge", n_words), ("edger", n_words - 1)):
+        for _ in range(n - placed[t]):
+            i, j = interior[next(slots)]
+            docs[i][j] = t
+    root = str(tmp_path_factory.mktemp("cut_idx"))
+    return _build(spark, root, docs, docs_per_segment=16,
+                  segments_per_group=2), docs, n_words
+
+
+def test_density_cut_and_spacers(cut):
+    s, docs, n_words = cut
+    s.phrase_search_positions("edge edger")
+    assert s._slot_space().n_words == n_words
+    edge, edger = (s._term_position_keys(t) for t in ("edge", "edger"))
+    assert (len(edge), len(edger)) == (n_words, n_words - 1)
+    assert s._term_bitmap("edge", edge) is not None
+    assert s._term_bitmap("edger", edger) is None
+    stream = [t for d in docs for t in d]
+    for a, b in JOINTS:
+        want = _phrase_counts(docs, [a, b])
+        assert s.phrase_search_positions(f"{a} {b}", k=10**6) == \
+            _ranked(want, 10**6), (a, b)
+        # the pair also meets across a doc boundary: the spacer slot
+        # after each doc is what keeps that out of the counts
+        across = sum(stream[i:i + 2] == [a, b]
+                     for i in range(len(stream) - 1))
+        assert across > sum(want.values()), (a, b)
+    for p in ["f0 edge edger", "edge edger edge", "edger edge f2 f0",
+              "f1 f1 edge", "edge edge edger edger", "edger edger f1"]:
+        want = _phrase_counts(docs, p.split())
+        assert s.phrase_search_positions(p, k=10**6) == \
+            _ranked(want, 10**6), p
+    # "edge" expands to edge (a bitmap) and edger (a list)
+    assert [bool(s._chain_word(t)[1]) for t in s.expand_prefix("edge")] \
+        == [True, False]
+    for head, pre in [(["f0"], "edge"), (["edger"], "ed"),
+                      (["edge"], "edg"), (["f0", "edge"], "e"),
+                      (["edge", "edge"], "f"), (["edger", "f2"], "f")]:
+        want = {
+            d: sum(
+                toks[i:i + len(head)] == head
+                and toks[i + len(head)].startswith(pre)
+                for i in range(len(toks) - len(head))
+            )
+            for d, toks in enumerate(docs)
+        }
+        assert s.phrase_prefix_search(" ".join(head + [pre]), k=10**6) \
+            == _ranked(want, 10**6), (head, pre)
+
+
+SPREAD = 100_003
+
+
+@pytest.fixture(scope="module")
+def spread(spark, tmp_path_factory, small):
+    """``small``'s documents under doc ids SPREAD apart: the id range is
+    far wider than the doc count, so the replica builds no slot space."""
+    _s, docs = small
+    root = str(tmp_path_factory.mktemp("spread_idx"))
+    return _build(spark, root, docs,
+                  ids=[i * SPREAD for i in range(len(docs))],
+                  docs_per_segment=1 << 20, segments_per_group=8)
+
+
+def test_non_compact_ids_chain_on_lists(small, spread):
+    s, _docs = small
+    for p in PHRASES + CHAINS:
+        assert spread.phrase_search_positions(p, k=10**6) == [
+            (d * SPREAD, n) for d, n in s.phrase_search_positions(p, k=10**6)
+        ], p
+    for q in ("alpha be", "rare alpha a", "alpha alpha g"):
+        assert spread.phrase_prefix_search(q, k=10**6) == [
+            (d * SPREAD, n) for d, n in s.phrase_prefix_search(q, k=10**6)
+        ], q
+    assert spread._slot_space() is False
+    assert not spread._pos_bitmaps
+
+
+def test_bitmaps_evicted_with_keys_within_budget(small):
+    """Under a small ``max_pos_keys_bytes`` a term's bitmap leaves with
+    its keys, the held total (keys + bitmaps) stays within the budget,
+    and counts stay exact."""
+    s0, docs = small
+    s0.phrase_search_positions(" ".join(VOCAB))
+    size = {
+        t: s0._pos_keys[t].nbytes
+        + (s0._pos_bitmaps[t].nbytes if t in s0._pos_bitmaps else 0)
+        for t in VOCAB
+    }
+    assert "alpha" in s0._pos_bitmaps
+    s = DirectSearcher(s0.root, analyzer="simple")
+    s.max_pos_keys_bytes = size["alpha"] + size["rare"]
+    built = set()
+    for _ in range(2):
+        for p in PHRASES + CHAINS:
+            want = _phrase_counts(docs, p.split())
+            assert s.phrase_search_positions(p, k=10**6) == \
+                _ranked(want, 10**6), p
+            assert set(s._pos_bitmaps) <= set(s._pos_keys)
+            held = sum(k.nbytes for k in s._pos_keys.values()) + sum(
+                b.nbytes for b in s._pos_bitmaps.values())
+            assert held == s._pos_keys_bytes <= s.max_pos_keys_bytes
+            built.update(id(b) for b in s._pos_bitmaps.values())
+    # alpha's bitmap was evicted and rebuilt, not kept beside the budget
+    assert len(built) > len(VOCAB)
+
+
+@pytest.mark.parametrize("source", ["enriched", "docs_meta"])
+def test_doc_len_shorter_than_position_raises(small, tmp_path, source):
+    """A doc_len below a stored position would put the occurrence in its
+    doc's spacer slot or the next doc: the replica refuses the keys,
+    whether doc_len comes from enriched or from a physical docs_meta."""
+    s0, _docs = small
+    root = str(tmp_path / "idx")
+    shutil.copytree(s0.root, root)
+    if source == "docs_meta":
+        # a physical docs_meta takes precedence over enriched
+        tbl = pads.dataset(os.path.join(root, "enriched"),
+                           partitioning="hive").to_table(
+            columns=["doc_id", "doc_len"])
+        os.makedirs(os.path.join(root, "docs_meta"))
+        pq.write_table(tbl, os.path.join(root, "docs_meta", "p.parquet"))
+    for f in glob.glob(os.path.join(root, source, "**", "*.parquet"),
+                       recursive=True):
+        tbl = pq.read_table(f)
+        i = tbl.schema.get_field_index("doc_len")
+        pq.write_table(tbl.set_column(
+            i, "doc_len", pc.subtract(tbl["doc_len"], 1)), f)
+    s = DirectSearcher(root, analyzer="simple")
+    with pytest.raises(ValueError, match="doc_len"):
+        s.phrase_search_positions("alpha beta", k=5)
+    assert not s._pos_keys  # nothing unchecked was cached
+
+
+def test_slot_space_follows_upsert_generation(spark, tmp_path_factory):
+    """A live replica that holds a slot space and bitmaps, then an upsert
+    that replaces documents with longer ones: after the generation bump
+    the replica rebuilds both, and its counts equal a recount of the new
+    corpus."""
+    from rse_spark.index.upsert import upsert_docs
+    from rse_spark.streaming.stream_index import append_batch
+
+    rng = np.random.default_rng(9)
+    docs = [list(rng.choice(VOCAB, size=int(rng.integers(3, 40)),
+                            p=WEIGHTS)) for _ in range(120)]
+
+    def frame(ids, ds):
+        return spark.createDataFrame(pd.DataFrame({
+            "doc_id": list(ids), "text": [" ".join(d) for d in ds],
+        }))
+
+    root = str(tmp_path_factory.mktemp("slots_upsert"))
+    append_batch(spark, frame(range(len(docs)), docs), root,
+                 analyzer="simple", content_col="text",
+                 docs_per_segment=32, segments_per_group=2,
+                 with_positions=True)
+    live = DirectSearcher(root, analyzer="simple")
+    phrases = ["alpha alpha", "alpha rare", "rare alpha beta",
+               "alpha beta alpha", "gamma gamma alpha"]
+    for p in phrases:
+        live.phrase_search_positions(p, k=10)
+    old_space, old_bits = live._slot_space(), live._pos_bitmaps["alpha"]
+
+    new = {i: ["alpha", "beta"] * 30 + docs[i] for i in range(0, 120, 12)}
+    assert upsert_docs(spark, frame(new, new.values()), root,
+                       key=("src_doc_id",), analyzer="simple",
+                       content_col="text") == (len(new), len(new))
+    text_of = {**dict(enumerate(docs)), **new}
+    ids = pads.dataset(os.path.join(root, "enriched"),
+                       partitioning="hive").to_table(
+        columns=["doc_id", "src_doc_id"])
+    now = {int(d): text_of[int(src)] for d, src in zip(
+        ids["doc_id"].to_pylist(), ids["src_doc_id"].to_pylist())}
+    assert len(now) == len(docs)
+    for p in phrases:
+        words = p.split()
+        want = {
+            d: sum(t[i:i + len(words)] == words
+                   for i in range(len(t) - len(words) + 1))
+            for d, t in now.items()
+        }
+        assert live.phrase_search_positions(p, k=10**6) == \
+            _ranked(want, 10**6), p
+    space = live._slot_space()
+    assert space is not old_space and space.n_words > old_space.n_words
+    assert live._pos_bitmaps["alpha"] is not old_bits
+    assert len(live._pos_bitmaps["alpha"]) == space.n_words

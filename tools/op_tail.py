@@ -1,0 +1,86 @@
+"""Where a serve_warm stream spends its time: replay one seeded stream
+in process against an index root, and print per-kind medians and the
+slowest ops.
+
+    python tools/op_tail.py INDEX_ROOT [--seed 7] [--passes 3]
+                            [--slowest 20]
+
+INDEX_ROOT is an sf0.1 index built like perfbench's serving index
+(``perfbench/common.py``: ``build_index`` with ``LAYOUT``). The ops are
+the ones a ``perfbench/run.py --workload serve_warm --seed N`` run times
+(``perfbench/streams.py`` and ``perfbench/workloads.py``, imported
+read-only), on a replica set up the same way: warmed with the stream's
+first search texts, then one untimed pass over every op to fill the lazy
+caches. Each timed pass runs every op once; an op's time is its median
+over the passes. Results are not checked here; the benchmark checks
+them.
+"""
+
+from __future__ import annotations
+
+import argparse
+import os
+import statistics
+import sys
+import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("root", help="index root to serve")
+    ap.add_argument("--seed", type=int, default=7)
+    ap.add_argument("--passes", type=int, default=3)
+    ap.add_argument("--slowest", type=int, default=20,
+                    help="how many of the slowest ops to list")
+    args = ap.parse_args(argv)
+
+    import pandas as pd
+    from oracle import Oracle
+    from streams import WARM_MIX, Stream, run_op
+    from workloads import WARM_OPS, WARM_TEXTS
+
+    from rse_spark.fixtures import corpus_path
+    from rse_spark.query.serve import DirectSearcher
+    from rse_spark.tokenizer import tokenize
+
+    corpus = pd.read_parquet(corpus_path(0.1))
+    ops = Stream(Oracle(corpus, tokenize), args.seed, WARM_MIX).take(
+        WARM_OPS)
+    searcher = DirectSearcher(args.root)
+    searcher.warm([a for k, a in ops[:WARM_TEXTS]
+                   if k in ("or", "and", "ql")])
+    for kind, arg in ops:
+        run_op(searcher, kind, arg)
+    times: list[list[float]] = [[] for _ in ops]
+    for _ in range(args.passes):
+        for i, (kind, arg) in enumerate(ops):
+            t0 = time.perf_counter()
+            run_op(searcher, kind, arg)
+            times[i].append(1e3 * (time.perf_counter() - t0))
+    med = [statistics.median(t) for t in times]
+
+    by_kind: dict[str, list[float]] = {}
+    for (kind, _arg), ms in zip(ops, med):
+        by_kind.setdefault(kind, []).append(ms)
+    print(f"seed {args.seed}: {len(ops)} ops, median of {args.passes} "
+          f"timed passes each")
+    print(f"{'kind':<8} {'ops':>5} {'median ms':>10} {'mean ms':>9} "
+          f"{'max ms':>8}")
+    for kind in sorted(by_kind):
+        ms = by_kind[kind]
+        print(f"{kind:<8} {len(ms):>5} {statistics.median(ms):>10.3f} "
+              f"{statistics.fmean(ms):>9.3f} {max(ms):>8.2f}")
+    print(f"{'all':<8} {len(med):>5} {statistics.median(med):>10.3f} "
+          f"{statistics.fmean(med):>9.3f} {max(med):>8.2f}")
+    print(f"\nslowest {args.slowest} ops:")
+    order = sorted(range(len(ops)), key=lambda i: -med[i])
+    for i in order[: args.slowest]:
+        print(f"{med[i]:8.2f} ms  {ops[i][0]:<7} {ops[i][1]}")
+
+
+if __name__ == "__main__":
+    main()
