@@ -102,7 +102,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--content-col", default="text")
     s.add_argument("--id-col", default="doc_id")
     s.add_argument("--max-bucket-mb", type=int, default=None,
-                   help="LRU budget for the columnar bucket cache")
+                   help="LRU budget for the bucket cache: Arrow "
+                   "tables plus the term lists decoded from them")
     s.add_argument("--max-vocab", type=int, default=10_000_000,
                    help="above this vocab size, skip the in-memory "
                         "dict and use per-term parquet lookups")

@@ -6,7 +6,10 @@ these helpers: sorted-list membership and intersection, run lengths,
 the tie-keeping top-k, grouped top-k over per-posting score
 contributions with its filters (min-match, search_after cursor,
 candidate universe) and score shapes (dismax, field-value factor), and
-the exact-phrase chain. All doc-id arrays are int64.
+the exact-phrase chain, and one index generation's per-document
+lengths (``_DocLens``). Doc-id arrays are int64, except that a decoded
+term list stores its ids as int32 when they fit; offsets derived from
+either are built as ``intp`` in one step.
 
 A phrase chain holds the occurrences of the phrase's current last word
 in one of two representations, picked per term by density as Roaring
@@ -72,6 +75,18 @@ def _sorted_member(sorted_set, vals):
     return sorted_set[pos] == vals
 
 
+def _mark_members(hit, vals, sorted_set) -> None:
+    """Set ``hit[i]`` where ``vals[i]`` occurs in ``sorted_set``, for
+    strictly increasing ``vals``: the shorter side is binary-searched
+    into the longer one."""
+    if len(sorted_set) >= len(vals):
+        hit |= _sorted_member(sorted_set, vals)
+        return
+    pos = np.searchsorted(vals, sorted_set)
+    pos[pos == len(vals)] = 0
+    hit[pos[vals[pos] == sorted_set]] = True
+
+
 def _intersect_sorted(a, b):
     """Values present in both of two STRICTLY increasing int64 arrays,
     in increasing order (sorted-list intersection as in HERO, SIGMOD
@@ -123,7 +138,8 @@ def _topk(vals, k: int):
 def _grouped_topk(docs, scores, k: int, *, need: int = 1, within=None,
                   after: "tuple[float, int] | None" = None,
                   combine: str = "sum", tiebreak: float = 0.0,
-                  dls=None) -> "list[tuple[int, float, int]]":
+                  lens: "_DocLens | None" = None
+                  ) -> "list[tuple[int, float, int]]":
     """Top ``k`` docs by summed per-posting contributions:
     ``[(doc_id, score, n_matched)]`` in (score desc, doc_id asc) order.
 
@@ -133,9 +149,10 @@ def _grouped_topk(docs, scores, k: int, *, need: int = 1, within=None,
     was ~1/3 of the cold-query profile at 500k docs), else by
     unique+inverse; both add in input order, so sums are
     bit-identical. ``combine='dismax'`` scores a slot as its best
-    contribution plus ``tiebreak`` times the rest; ``dls`` (per-posting
-    doc lengths, float) multiplies the score by ln(1 + dl) before the
-    top-k (ES field_value_factor, modifier=ln1p).
+    contribution plus ``tiebreak`` times the rest; ``lens`` (the
+    generation's ``_DocLens``) multiplies each matched doc's score by
+    ln(1 + doc_len) before the top-k (ES field_value_factor,
+    modifier=ln1p).
 
     A slot qualifies when at least ``need`` postings landed in it, it
     sorts strictly after the ``after`` = (score, doc_id) cursor (ES
@@ -154,7 +171,9 @@ def _grouped_topk(docs, scores, k: int, *, need: int = 1, within=None,
     width = int(docs.max()) - lo + 1
     if _is_compact(width, len(docs)):
         ids = None
-        keys = docs - lo
+        # int32 doc ids would give int32 offsets, which bincount casts
+        # to intp on every call
+        keys = np.subtract(docs, lo, dtype=np.intp)
         n = width
     else:
         ids, keys = np.unique(docs, return_inverse=True)
@@ -165,14 +184,14 @@ def _grouped_topk(docs, scores, k: int, *, need: int = 1, within=None,
         best = np.zeros(n)
         np.maximum.at(best, keys, scores)
         vals = best + tiebreak * (vals - best)
-    if dls is not None:
-        # every posting of a doc carries the same dl: one scatter
-        dlu = np.zeros(n)
-        dlu[keys] = dls
-        vals = vals * np.log1p(dlu)
 
     def doc_of(slots):
         return slots + lo if ids is None else ids[slots]
+
+    if lens is not None:
+        # an unmatched slot scores 0 either way: gather matched docs only
+        hit = np.flatnonzero(cnt)
+        vals[hit] *= np.log1p(lens.of(doc_of(hit)))
 
     need = max(int(need), 1)
     if after is not None:
@@ -263,19 +282,56 @@ def _range_counts(bits, bounds):
     return np.diff(cum[w] + _popcount64(bits[w] & low))
 
 
+class _DocLens:
+    """The per-document lengths of one index generation, gathered by doc
+    id (``of``): an array indexed by ``id - lo`` when the id range is
+    compact (``_is_compact``), else the sorted ids, searched per gather.
+    An id with no row reads as -1."""
+
+    def __init__(self, doc_ids, doc_lens):
+        ids = np.asarray(doc_ids, dtype=np.int64)
+        lens = np.asarray(doc_lens, dtype=np.int64)
+        order = np.argsort(ids, kind="stable")
+        ids, lens = ids[order], lens[order]
+        self.lo = int(ids[0]) if len(ids) else 0
+        width = int(ids[-1]) - self.lo + 1 if len(ids) else 0
+        if _is_compact(width, len(ids)):
+            # one entry past the range reads -1 for any id outside it
+            self.ids = None
+            self.lens = np.full(width + 1, -1, dtype=np.int64)
+            self.lens[ids - self.lo] = lens
+        else:
+            self.ids, self.lens = ids, lens
+        self.nbytes = self.lens.nbytes + (
+            0 if self.ids is None else self.ids.nbytes)
+
+    def of(self, docs):
+        """int64 lengths of the doc-id array ``docs``."""
+        if self.ids is None:
+            off = np.subtract(docs, self.lo, dtype=np.intp)
+            n = len(self.lens) - 1
+            if len(off) and (off.min() < 0 or off.max() >= n):
+                off[(off < 0) | (off > n)] = n
+            return self.lens[off]
+        pos = np.searchsorted(self.ids, docs)
+        pos[pos == len(self.ids)] = 0
+        out = self.lens[pos]
+        out[self.ids[pos] != docs] = -1
+        return out
+
+
 class _SlotSpace:
     """Dense token slots of one index generation: doc ``d``'s position
     ``p`` is slot ``start[d - lo] + p``, slot 0 and one slot after each
     document are spacers, and ``lo`` is the least doc id, so ids of any
     size work as long as their range is compact (``_is_compact``).
-    Built from the per-document lengths; ``check`` rejects a key whose
+    Built from the generation's compact ``_DocLens`` (an id without a
+    row is a document of length 0); ``check`` rejects a key whose
     position does not fit its document."""
 
-    def __init__(self, doc_ids, doc_lens, pos_bits: int):
-        self.lo = int(doc_ids.min())
-        dl = np.zeros(int(doc_ids.max()) - self.lo + 1, dtype=np.int64)
-        dl[doc_ids - self.lo] = doc_lens
-        self.dl = dl
+    def __init__(self, lens: _DocLens, pos_bits: int):
+        self.lo = lens.lo
+        dl = self.dl = np.maximum(lens.lens[:-1], 0)
         self.start = np.empty(len(dl) + 1, dtype=np.int64)
         self.start[0] = 1
         np.cumsum(dl + 1, out=self.start[1:])
@@ -325,39 +381,45 @@ class _SlotSpace:
         return bits
 
 
-def _chain_start(keys, bitmaps=()):
-    """A chain's first word (``_chain_step``'s ``keys, bitmaps``) as
+def _chain_start(lists, bitmaps=()):
+    """A chain's first word (``_chain_step``'s ``lists, bitmaps``) as
     the chain: its bitmap if it has one, else its keys."""
-    return bitmaps[0] if bitmaps else keys
+    return bitmaps[0] if bitmaps else lists[0]
 
 
-def _chain_step(space, cur, keys, bitmaps=()):
+def _chain_step(space, cur, lists, bitmaps=()):
     """One exact-phrase step: the occurrences of the next word that
     directly follow an occurrence in ``cur``. The next word occurs at
-    the sorted packed ``keys`` and at the slots set in any of
-    ``bitmaps``: a word is one sparse term's keys or one dense term's
-    bitmap, and a phrase prefix's last word is any of its expansions.
-    ``cur`` is sorted packed keys (int64) or a bitmap (uint64) over
-    ``space``'s slots, and so is the result; ``space`` may be None only
-    when neither side is a bitmap."""
+    the keys of any of ``lists`` (sorted packed keys) and at the slots
+    set in any of ``bitmaps``: a word is one sparse term's keys or one
+    dense term's bitmap, and a phrase prefix's last word is all of its
+    expansions. ``cur`` is sorted packed keys (int64) or a bitmap
+    (uint64) over ``space``'s slots, and so is the result; ``space`` may
+    be None only when neither side is a bitmap."""
     if cur.dtype == np.int64:
         nxt = cur + 1
-        if not bitmaps:
-            return _intersect_sorted(nxt, keys)
-        # a last token's successor is its doc's spacer slot, never set
-        slots = space.slots(nxt)
-        hit = _sorted_member(keys, nxt)
-        for bits in bitmaps:
-            hit |= _bits_test(bits, slots)
+        if len(lists) == 1 and not bitmaps:
+            return _intersect_sorted(nxt, lists[0])
+        hit = np.zeros(len(nxt), dtype=bool)
+        for keys in lists:
+            _mark_members(hit, nxt, keys)
+        if bitmaps:
+            # a last token's successor is its doc's spacer slot, never set
+            slots = space.slots(nxt)
+            for bits in bitmaps:
+                hit |= _bits_test(bits, slots)
         return nxt[hit]
     # slot 0 is a spacer, so a doc's first slot minus one is >= 0
-    after = keys[_bits_test(cur, space.slots(keys) - 1)]
+    after = [keys[_bits_test(cur, space.slots(keys) - 1)] for keys in lists]
     if not bitmaps:
-        return after
+        # distinct terms' hits are distinct keys: only hits are sorted
+        return after[0] if len(after) == 1 else np.sort(np.concatenate(after))
     out = _shift_and(cur, bitmaps[0])
     for bits in bitmaps[1:]:
         out |= _shift_and(cur, bits)
-    return space.bitmap(after, out)
+    for keys in after:
+        space.bitmap(keys, out)
+    return out
 
 
 def _chain_counts(space, cur, shift):

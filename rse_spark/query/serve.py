@@ -29,9 +29,9 @@ from rse_spark.query.kernel import (
     _chain_counts,
     _chain_start,
     _chain_step,
+    _DocLens,
     _grouped_topk,
     _intersect_sorted,
-    _is_compact,
     _run_lengths,
     _SlotSpace,
     _sorted_member,
@@ -337,20 +337,23 @@ class _TermRows(list):
 
 class _TermList:
     """One term's postings across its segment rows, decoded once and
-    concatenated in doc-id order: ``docs``, ``tfs`` and ``dls`` (int64)
-    and, on first use, ``impacts`` — the idf-less BM25 impact at the
-    ``avgdl`` the list was built with. Segments partition the doc-id
+    concatenated in doc-id order, at 16 bytes per posting: ``docs``
+    (int32 while the last id is below 2^31, else int64), ``tfs`` (int32)
+    and ``impacts`` (float64), the idf-less BM25 impact at the ``avgdl``
+    the list was built with. Doc lengths are not kept per posting: the
+    generation's ``kernel._DocLens`` is their one source, and the
+    payload's own lengths must equal it. Segments partition the doc-id
     space, so the rows are ordered by their first doc id and the
     concatenation must be strictly increasing; a term whose rows
     overlap raises. Every array is read-only: ``term_docs`` hands
     ``docs`` out as is."""
 
-    __slots__ = ("docs", "tfs", "dls", "avgdl", "_imp")
+    __slots__ = ("docs", "tfs", "impacts")
 
-    def __init__(self, term: str, rows, avgdl: float):
+    def __init__(self, term: str, rows, lens: _DocLens, avgdl: float):
         import numpy as np
 
-        from rse_spark.index.codec import decode_postings
+        from rse_spark.index.codec import bm25_impact, decode_postings
 
         parts = [decode_postings(r["payload"]) for r in rows]
         parts = sorted(
@@ -363,29 +366,28 @@ class _TermList:
                 np.concatenate([p[i] for p in parts]) for i in range(3)
             )
         else:
-            docs = np.empty(0, dtype=np.int64)
-            tfs, dls = docs.copy(), docs.copy()
+            docs = tfs = dls = np.empty(0, dtype=np.int64)
         if len(docs) > 1 and not (docs[1:] > docs[:-1]).all():
             raise ValueError(
                 f"posting rows of term {term!r} overlap: doc ids are "
                 f"not strictly increasing across its segments"
             )
-        for a in (docs, tfs, dls):
+        if not np.array_equal(lens.of(docs), dls):
+            raise ValueError(
+                f"posting payload of {term!r} carries doc lengths that "
+                f"disagree with the index's per-document doc_len — "
+                f"rebuild the index"
+            )
+        self.impacts = bm25_impact(tfs, dls, avgdl)
+        if len(docs) and docs[-1] < 1 << 31:
+            docs = docs.astype(np.int32)
+        self.docs, self.tfs = docs, tfs.astype(np.int32)
+        for a in (self.docs, self.tfs, self.impacts):
             a.flags.writeable = False
-        self.docs, self.tfs, self.dls = docs, tfs, dls
-        self.avgdl = avgdl
-        self._imp = None
 
     @property
-    def impacts(self):
-        imp = self._imp
-        if imp is None:
-            from rse_spark.index.codec import bm25_impact
-
-            imp = bm25_impact(self.tfs, self.dls, self.avgdl)
-            imp.flags.writeable = False
-            self._imp = imp
-        return imp
+    def nbytes(self) -> int:
+        return self.docs.nbytes + self.tfs.nbytes + self.impacts.nbytes
 
 
 class DirectSearcher:
@@ -395,11 +397,17 @@ class DirectSearcher:
                  max_bucket_bytes: int | None = None,
                  max_vocab_in_memory: int = 10_000_000,
                  seg_groups: "list | None" = None):
-        """``max_bucket_bytes`` bounds the columnar bucket cache: when
-        the Arrow tables held exceed the budget, least-recently-queried
-        buckets (and their extracted term rows) are evicted and reload
-        on the next miss. ``None`` = unbounded (bench/replica default
-        where the working set is known to fit).
+        """``max_bucket_bytes`` bounds the columnar bucket cache: each
+        resident bucket is charged its Arrow tables plus the decoded
+        term lists (``_TermList``) built from its rows, and when the
+        total exceeds the budget, least-recently-queried buckets (with
+        their term rows and decoded lists) are evicted and reload on
+        the next miss; the bucket in use always stays. Term rows read
+        cold are charged the same way against
+        ``max_cold_rows_bytes``. ``cached_bucket_bytes`` reports the
+        Arrow bytes alone, ``held_bytes`` everything the caches hold.
+        ``None`` = unbounded (bench/replica default where the working
+        set is known to fit).
 
         ``max_vocab_in_memory``: above this vocabulary size (read from
         parquet footers, no data scan) the driver-side dict is NOT
@@ -456,7 +464,10 @@ class DirectSearcher:
         from collections import OrderedDict
 
         self._bucket_tables: OrderedDict[int, list] = OrderedDict()
+        # bytes charged per resident bucket (its Arrow tables plus its
+        # rows' decoded term lists), and the Arrow part alone
         self._bucket_bytes: dict[int, int] = {}
+        self._table_bytes: dict[int, int] = {}
         self._term_rows: dict[tuple[int, str], _TermRows] = {}
         # cold-path O(term) reads (r7): when a bucket is NOT resident
         # and its on-disk size exceeds ``cold_pruned_min_bytes``, a
@@ -505,8 +516,11 @@ class DirectSearcher:
         self._pos_bitmaps: dict[str, object] = {}
         self._pos_keys_bytes = 0
         self.max_pos_keys_bytes = 256 << 20
-        # this generation's dense token slots (kernel._SlotSpace): None
-        # until first built, False when the doc-id range is not compact
+        # this generation's per-document lengths (kernel._DocLens) and
+        # dense token slots (kernel._SlotSpace): None until first
+        # built; the slots are False when the doc-id range is not
+        # compact
+        self._lens = None
         self._slots = None
         # packed-key split for positional matching: low ``_pos_bits``
         # bits hold the token position, the rest the doc id. Chosen at
@@ -634,6 +648,7 @@ class DirectSearcher:
             self._load_meta()
             self._bucket_tables.clear()
             self._bucket_bytes.clear()
+            self._table_bytes.clear()
             self._term_rows.clear()
             self._cold_rows.clear()
             self._cold_rows_bytes.clear()
@@ -643,6 +658,7 @@ class DirectSearcher:
             self._pos_keys.clear()
             self._pos_bitmaps.clear()
             self._pos_keys_bytes = 0
+            self._lens = None
             self._slots = None
             self._meta_docs_cache.clear()
             self._enriched_ranges_cache = None
@@ -674,8 +690,21 @@ class DirectSearcher:
 
     @property
     def cached_bucket_bytes(self) -> int:
+        """Arrow bytes of the resident buckets' tables."""
         with self._meta_lock:
-            return sum(self._bucket_bytes.values())
+            return sum(self._table_bytes.values())
+
+    @property
+    def held_bytes(self) -> int:
+        """Bytes the budgeted caches hold: resident buckets' tables and
+        cold term rows, the decoded term lists built from either, and
+        the positional keys with their slot bitmaps."""
+        with self._meta_lock:
+            return (
+                sum(self._bucket_bytes.values())
+                + sum(self._cold_rows_bytes.values())
+                + self._pos_keys_bytes
+            )
 
     def _bucket_lock(self, bucket: int):
         with self._meta_lock:
@@ -694,23 +723,28 @@ class DirectSearcher:
 
     def _publish(self, bucket: int, tables: list) -> None:
         """Install a freshly loaded bucket and evict least-recently
-        used buckets beyond the byte budget (the newcomer itself is
-        always kept so every query can run)."""
+        used buckets beyond the byte budget."""
         nbytes = sum(tbl.nbytes for tbl, _spans in tables)
         with self._meta_lock:
             self._bucket_tables[bucket] = tables
             self._bucket_tables.move_to_end(bucket)
-            self._bucket_bytes[bucket] = nbytes
-            if self.max_bucket_bytes is None:
-                return
-            while (
-                len(self._bucket_tables) > 1
-                and sum(self._bucket_bytes.values()) > self.max_bucket_bytes
-            ):
-                victim, _ = self._bucket_tables.popitem(last=False)
-                self._bucket_bytes.pop(victim, None)
-                for key in [k for k in self._term_rows if k[0] == victim]:
-                    del self._term_rows[key]
+            self._bucket_bytes[bucket] = self._table_bytes[bucket] = nbytes
+            self._evict_buckets()
+
+    def _evict_buckets(self) -> None:
+        """Drop least recently used buckets, with their term rows and
+        the decoded lists on them, until the charged bytes fit
+        ``max_bucket_bytes`` or one bucket is left (the newest, which
+        the caller is using). Caller holds ``_meta_lock``."""
+        if self.max_bucket_bytes is None:
+            return
+        total = sum(self._bucket_bytes.values())
+        while len(self._bucket_tables) > 1 and total > self.max_bucket_bytes:
+            victim, _ = self._bucket_tables.popitem(last=False)
+            total -= self._bucket_bytes.pop(victim)
+            del self._table_bytes[victim]
+            for key in [k for k in self._term_rows if k[0] == victim]:
+                del self._term_rows[key]
 
     def _bucket_files(self, bucket: int) -> list[str]:
         # memoized per generation: the size probe, the metadata scan
@@ -879,13 +913,16 @@ class DirectSearcher:
             self._cold_rows[key] = rows
             self._cold_rows.move_to_end(key)
             self._cold_rows_bytes[key] = nbytes
-            while (
-                len(self._cold_rows) > 1
-                and sum(self._cold_rows_bytes.values())
-                > self.max_cold_rows_bytes
-            ):
-                victim, _ = self._cold_rows.popitem(last=False)
-                self._cold_rows_bytes.pop(victim, None)
+            self._evict_cold_rows()
+
+    def _evict_cold_rows(self) -> None:
+        """Drop least recently used cold term rows, with their decoded
+        lists, until the charged bytes fit ``max_cold_rows_bytes`` or
+        one entry is left (the newest). Caller holds ``_meta_lock``."""
+        total = sum(self._cold_rows_bytes.values())
+        while len(self._cold_rows) > 1 and total > self.max_cold_rows_bytes:
+            victim, _ = self._cold_rows.popitem(last=False)
+            total -= self._cold_rows_bytes.pop(victim)
 
     def _load_bucket(self, bucket: int) -> list:
         """Read one bucket's parquet files into Arrow tables and build
@@ -986,9 +1023,10 @@ class DirectSearcher:
                 rows.extend(_rows_zero_copy(tbl.slice(off, ln)))
         with self._meta_lock:
             # cache the row form only while its bucket is resident,
-            # so eviction keeps the budget honest
+            # so eviction keeps the budget honest; a racer's rows (and
+            # the decoded list charged for them) win over ours
             if bucket in self._bucket_tables:
-                self._term_rows[key] = rows
+                rows = self._term_rows.setdefault(key, rows)
         return rows
 
     def _term_list(self, term: str) -> "_TermList | None":
@@ -996,15 +1034,57 @@ class DirectSearcher:
         (None when it is not indexed), memoized on the term's cached
         rows — a warm replica pays the varint decode and the
         cross-segment concatenation once per term, not once per
-        query."""
-        info = self.term_dict.get(term)
-        if not info:
-            return None
-        rows = self._bucket_rows(info[1], term)
-        plist = rows.plist
-        if plist is None:
-            plist = rows.plist = _TermList(term, rows, self.avgdl)
-        return plist
+        query. The memo's bytes are charged to the cache holding the
+        rows (:meth:`_charge_memo`).
+
+        A writer that commits between reading the rows and reading the
+        doc-length table leaves the two from different generations, so
+        the decode's length check fails with no fault in the index: the
+        replica then reloads (:meth:`_check_generation`) and reads both
+        once more."""
+        for retry in (False, True):
+            gen = self._gen_sig
+            info = self.term_dict.get(term)
+            if not info:
+                return None
+            key = (info[1], term)
+            rows = self._bucket_rows(*key)
+            if rows.plist is not None:
+                return rows.plist
+            try:
+                plist = _TermList(term, rows, self._doc_lens(), self.avgdl)
+            except ValueError as err:
+                if self._gen_stat() == gen:
+                    raise  # the index disagrees with itself
+                if retry:
+                    raise ValueError(
+                        f"term {term!r} was read across two writer "
+                        f"commits in a row; retry the query"
+                    ) from err
+                self._check_generation()
+                continue
+            with self._meta_lock:
+                if rows.plist is None:
+                    rows.plist = plist
+                    self._charge_memo(key, rows, plist.nbytes)
+                return rows.plist
+
+    def _charge_memo(self, key: tuple[int, str], rows: _TermRows,
+                     nbytes: int) -> None:
+        """Charge a decoded list built on ``rows`` to the cache entry
+        holding them — the resident bucket's bytes or the cold rows'
+        — and evict past that cache's budget; the entry itself stays.
+        Rows no cache holds (their bucket was evicted meanwhile) carry
+        their memo only as long as the query does. Caller holds
+        ``_meta_lock``."""
+        if self._term_rows.get(key) is rows:
+            self._bucket_bytes[key[0]] += nbytes
+            self._bucket_tables.move_to_end(key[0])
+            self._evict_buckets()
+        elif self._cold_rows.get(key) is rows:
+            self._cold_rows_bytes[key] += nbytes
+            self._cold_rows.move_to_end(key)
+            self._evict_cold_rows()
 
     def _prefetch_buckets(self, buckets) -> None:
         """Load the given buckets' files concurrently if not cached.
@@ -1820,6 +1900,7 @@ class DirectSearcher:
             )
             if info
         )
+        lens = self._doc_lens()
         doc_chunks, score_chunks = [], []
         for g in groups:
             infos = [
@@ -1835,16 +1916,11 @@ class DirectSearcher:
                 continue
             docs = np.concatenate([p.docs for p in plists])
             tfs = np.concatenate([p.tfs for p in plists])
-            dls = np.concatenate([p.dls for p in plists])
             uniq, inv = np.unique(docs, return_inverse=True)
             tf_sum = np.bincount(inv, weights=tfs)
-            # every posting of a doc carries the same doc_len; any
-            # member's value stands for the blended pseudo-term's
-            dl_doc = np.zeros(len(uniq))
-            dl_doc[inv] = dls
             doc_chunks.append(uniq)
-            score_chunks.append(idf * bm25_impact(tf_sum, dl_doc,
-                                                  self.avgdl))
+            score_chunks.append(
+                idf * bm25_impact(tf_sum, lens.of(uniq), self.avgdl))
         if not doc_chunks:
             return []
         # a doc appears once per group, so ``need`` = every group is
@@ -2005,7 +2081,7 @@ class DirectSearcher:
                 ids = plist.docs
                 pos = int(np.searchsorted(ids, doc_id))
                 if pos < len(ids) and ids[pos] == doc_id:
-                    dl = int(plist.dls[pos])
+                    dl = int(self._doc_lens().of(ids[pos: pos + 1])[0])
                     contrib = float(
                         qtf[t] * detail["idf"] * plist.impacts[pos]
                     )
@@ -2196,7 +2272,7 @@ class DirectSearcher:
                  np.empty(0, dtype=np.int64))
         for t in sorted(set(terms)):
             word[t] = self._chain_word(t)
-            if not (len(word[t][0]) or word[t][1]):  # absent term
+            if not (word[t][0] or word[t][1]):  # absent term
                 return empty
         space = self._slot_space()
         shift = np.int64(self._pos_bits)
@@ -2344,12 +2420,14 @@ class DirectSearcher:
         phrase_search_positions; the final step tests membership in
         the UNION of the expanded terms' position keys (expansion
         capped and ordered like every other rewrite). A single-word
-        query degenerates to presence-counting of the expansion. The
-        head words chain through ``_chain_step`` exactly as in
+        query degenerates to counting the expansions' occurrences per
+        doc: their per-term run lengths, summed by ``_grouped_topk``.
+        The head words chain through ``_chain_step`` exactly as in
         :meth:`_phrase_occurrence_counts` (slot bitmaps for dense
-        words, key lists otherwise); the last step reads the dense
-        expansions' bitmaps and one sorted union of the sparse ones'
-        keys."""
+        words, key lists otherwise); the last step tests the chain
+        against every expansion — each sparse one's sorted keys and
+        each dense one's bitmap — and ORs the hits, so the
+        expansions' keys are never merged into one sorted union."""
         import itertools
 
         import numpy as np
@@ -2370,29 +2448,38 @@ class DirectSearcher:
         ]
         if not last:
             return []
-        space = self._slot_space()
-        # one position holds one token, so the union of distinct
-        # terms' keys is again strictly increasing
+        shift = np.int64(self._pos_bits)
         if not head:
-            cur = np.sort(np.concatenate(
-                [self._term_position_keys(t) for t in last]
-            ))
-        else:
-            cur = _chain_start(*self._chain_word(head[0]))
-            sparse, dense = [], []
-            for t in last:
-                ks, bitmaps = self._chain_word(t)
-                sparse.append(ks)
-                dense.extend(bitmaps)
-            # the last step's word is ANY expanded term
-            for t_keys, t_bitmaps in itertools.chain(
-                map(self._chain_word, head[1:]),
-                [(np.sort(np.concatenate(sparse)), dense)],
-            ):
-                if cur.dtype == np.int64 and not len(cur):
-                    return []
-                cur = _chain_step(space, cur, t_keys, t_bitmaps)
-        uniq, counts = _chain_counts(space, cur, np.int64(self._pos_bits))
+            # one position holds one token, so a doc's count is the sum
+            # of its expansions' run lengths
+            runs = [
+                _run_lengths(self._term_position_keys(t) >> shift)
+                for t in last
+            ]
+            hits = _grouped_topk(
+                np.concatenate([d for d, _c in runs]),
+                np.concatenate([c for _d, c in runs]).astype(np.float64),
+                k,
+            )
+            return [(d, int(c)) for d, c, _n in hits]
+        head = [self._chain_word(t) for t in head]
+        if not all(t_lists or t_bitmaps for t_lists, t_bitmaps in head):
+            return []  # a head word with no occurrences
+        space = self._slot_space()
+        cur = _chain_start(*head[0])
+        lists, bitmaps = [], []
+        for t in last:
+            t_lists, t_bitmaps = self._chain_word(t)
+            lists.extend(t_lists)
+            bitmaps.extend(t_bitmaps)
+        # the last step's word is ANY expanded term
+        for t_lists, t_bitmaps in itertools.chain(
+            head[1:], [(lists, bitmaps)],
+        ):
+            if cur.dtype == np.int64 and not len(cur):
+                return []
+            cur = _chain_step(space, cur, t_lists, t_bitmaps)
+        uniq, counts = _chain_counts(space, cur, shift)
         return [
             (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
         ]
@@ -2575,12 +2662,14 @@ class DirectSearcher:
         return keys
 
     def _chain_word(self, term: str):
-        """``(keys, bitmaps)`` of one word for ``_chain_step``: a dense
-        term's bitmap and no keys, else the term's keys and no
-        bitmap."""
+        """``(lists, bitmaps)`` of one word for ``_chain_step``: a dense
+        term's bitmap and no key list, a sparse term's keys and no
+        bitmap, or neither for a term with no occurrences."""
         keys = self._term_position_keys(term)
         bits = self._term_bitmap(term, keys)
-        return (keys, ()) if bits is None else (keys[:0], (bits,))
+        if bits is not None:
+            return (), (bits,)
+        return ((keys,) if len(keys) else ()), ()
 
     def _term_bitmap(self, term: str, keys):
         """The slot bitmap of a dense term (kernel._SlotSpace), or None
@@ -2620,35 +2709,54 @@ class DirectSearcher:
             if bits is not None:
                 self._pos_keys_bytes -= bits.nbytes
 
-    def _slot_space(self):
-        """This generation's dense token slots (kernel._SlotSpace),
-        built once per generation from the per-doc ``doc_len`` of
-        ``docs_meta`` (``enriched`` when docs_meta is virtual), or
-        False when the doc-id range is not compact (the same width
-        rule as ``_grouped_topk``) or no doc_len column exists —
-        phrases then chain on key lists only."""
-        import numpy as np
+    def _doc_lens(self) -> _DocLens:
+        """This generation's per-document lengths (kernel._DocLens), the
+        one source of ``doc_len`` for scoring, ``explain``, synonym
+        groups, fvf and the slot space: read once per generation from
+        ``docs_meta`` (``enriched`` when docs_meta is virtual). Raises
+        ValueError for an index that stores no per-document
+        doc_len."""
         import pyarrow.dataset as pads
 
         with self._meta_lock:
-            if self._slots is not None:
-                return self._slots
+            if self._lens is not None:
+                return self._lens
             gen = self._gen_sig
-        space = False
+        pre = self._gen_stat()
         path = os.path.join(self.root, "docs_meta")
         if not os.path.isdir(path):
             path = os.path.join(self.root, "enriched")
         dset = pads.dataset(path, format="parquet", partitioning="hive")
-        if {"doc_id", "doc_len"} <= set(dset.schema.names):
-            tbl = dset.to_table(columns=["doc_id", "doc_len"])
-            ids = tbl["doc_id"].to_numpy().astype(np.int64)
-            if len(ids) and _is_compact(
-                int(ids.max()) - int(ids.min()) + 1, len(ids)
-            ):
-                lens = tbl["doc_len"].to_numpy().astype(np.int64)
-                space = _SlotSpace(ids, lens, self._pos_bits)
+        if not {"doc_id", "doc_len"} <= set(dset.schema.names):
+            raise ValueError(
+                f"{path} has no doc_id/doc_len columns: the index stores "
+                f"no per-document lengths to score with"
+            )
+        tbl = dset.to_table(columns=["doc_id", "doc_len"])
+        lens = _DocLens(tbl["doc_id"].to_numpy(), tbl["doc_len"].to_numpy())
+        post = self._gen_stat()
         with self._meta_lock:
-            if self._gen_sig == gen:
+            # a table read while a writer committed, or one of a newer
+            # generation than the replica has loaded, serves this call
+            # only
+            if self._gen_sig == gen == pre == post:
+                self._lens = lens
+        return lens
+
+    def _slot_space(self):
+        """This generation's dense token slots (kernel._SlotSpace),
+        built once per generation from :meth:`_doc_lens`, or False when
+        the doc-id range is not compact (the same width rule as
+        ``_grouped_topk``) — phrases then chain on key lists only."""
+        with self._meta_lock:
+            if self._slots is not None:
+                return self._slots
+            gen = self._gen_sig
+        lens = self._doc_lens()
+        space = _SlotSpace(lens, self._pos_bits) if lens.ids is None \
+            else False
+        with self._meta_lock:
+            if self._gen_sig == gen and self._lens is lens:
                 self._slots = space
         return space
 
@@ -3074,19 +3182,19 @@ class DirectSearcher:
 
         from rse_spark.index.codec import bm25_impact
 
-        doc_chunks, score_chunks, dl_chunks = [], [], []
+        own_avgdl = avgdl is None or avgdl == self.avgdl
+        lens = None if own_avgdl and fvf is None else self._doc_lens()
+        doc_chunks, score_chunks = [], []
         for t in terms:
             plist = self._term_list(t)
             if plist is None or not len(plist.docs):
                 continue
-            if avgdl is None or avgdl == self.avgdl:
+            if own_avgdl:
                 imp = plist.impacts
             else:
-                imp = bm25_impact(plist.tfs, plist.dls, avgdl)
+                imp = bm25_impact(plist.tfs, lens.of(plist.docs), avgdl)
             doc_chunks.append(plist.docs)
             score_chunks.append(weights[t] * imp)
-            if fvf is not None:
-                dl_chunks.append(plist.dls)
         if not doc_chunks:
             return []
         if len(doc_chunks) == 1:
@@ -3102,8 +3210,5 @@ class DirectSearcher:
         return _grouped_topk(
             docs, scores, k, need=need, within=within, after=after,
             combine=combine, tiebreak=tiebreak,
-            dls=(
-                np.concatenate(dl_chunks).astype(np.float64)
-                if fvf is not None else None
-            ),
+            lens=lens if fvf is not None else None,
         )

@@ -25,11 +25,14 @@ from rse_spark.query import serve
 from rse_spark.query.kernel import (
     _GALLOP_RATIO,
     _bits_test,
+    _chain_step,
+    _DocLens,
     _intersect_sorted,
     _popcount64,
     _range_counts,
     _run_lengths,
     _shift_and,
+    _SlotSpace,
     _topk,
 )
 from rse_spark.query.serve import DirectSearcher
@@ -130,21 +133,76 @@ def test_shift_and_and_bits_test_cross_word_boundaries():
 
 
 def test_range_counts_matches_brute_force():
+    """Exact per-range counts, for random, empty, full and single-bit
+    word-boundary bitmaps, with ranges ending and starting at every
+    word boundary and straddling each."""
     rng = np.random.default_rng(7)
-    for n, density in ((1, 0.5), (4, 0.5), (5, 0.05), (3, 1.0)):
-        bits = _words(rng, n, density)
+    cases = [_words(rng, n, d) for n, d in
+             ((1, 0.5), (4, 0.5), (5, 0.05), (3, 1.0))]
+    cases += [np.zeros(3, dtype=np.uint64),
+              np.full(3, np.uint64(2**64 - 1), dtype=np.uint64)]
+    edge = np.zeros(4, dtype=np.uint64)  # bits 63, 64, 191, 192
+    edge[0], edge[1] = np.uint64(1 << 63), np.uint64(1)
+    edge[2], edge[3] = np.uint64(1 << 63), np.uint64(1)
+    cases.append(edge)
+    for bits in cases:
+        n = len(bits)
         ref = _bools(bits)
         edges = np.arange(0, 64 * n, 64)  # every word boundary
         rand = rng.integers(0, 64 * n, 12)
-        bounds = np.sort(np.r_[edges, rand, rand[:3],
-                               64 * n - 1]).astype(np.int64)  # dups: empty
-        want = [int(ref[a:b].sum()) for a, b in zip(bounds, bounds[1:])]
-        assert _range_counts(bits, bounds).tolist() == want
+        for bounds in (
+            np.sort(np.r_[edges, rand, rand[:3],
+                          64 * n - 1]).astype(np.int64),  # dups: empty
+            np.sort(np.r_[edges - 1, edges + 1, 64 * n - 1]
+                    ).clip(0).astype(np.int64),  # straddle boundaries
+        ):
+            want = [int(ref[a:b].sum()) for a, b in zip(bounds, bounds[1:])]
+            assert _range_counts(bits, bounds).tolist() == want
     bits = _words(rng, 3)
     assert _range_counts(bits, np.array([5], dtype=np.int64)).tolist() == []
     assert _range_counts(bits, np.array([64, 64, 128],
                                         dtype=np.int64)).tolist() == \
         [0, int(_bools(bits)[64:128].sum())]
+
+
+@pytest.mark.parametrize("seed", range(3))
+def test_chain_step_any_of_several_terms(seed):
+    """A step whose next word is any of several terms — key lists,
+    bitmaps, or both, from a key-list or a bitmap chain — keeps exactly
+    the occurrences that directly follow the chain, never across a
+    document boundary."""
+    rng = np.random.default_rng(seed)
+    lens = rng.integers(1, 40, 30)
+    ids = np.arange(30) + 5
+    space = _SlotSpace(_DocLens(ids, lens), 32)
+    toks = [rng.choice(list("abcd"), size=n) for n in lens]
+    keys = {
+        t: np.array([(int(d) << 32) | p for d, doc in zip(ids, toks)
+                     for p in np.flatnonzero(doc == t)], dtype=np.int64)
+        for t in "abcd"
+    }
+
+    def slots(x):
+        if x.dtype == np.int64:
+            return set(space.slots(x).tolist())
+        return set(np.flatnonzero(_bools(x)).tolist())
+
+    for cur in (keys["a"], space.bitmap(keys["a"])):
+        for lists in ((), ("b",), ("b", "c")):
+            for bitmaps in ((), ("d",), ("d", "a")):
+                if not (lists or bitmaps):
+                    continue
+                want = {
+                    s + 1 for s in slots(cur)
+                    if s + 1 in set().union(*(slots(keys[t]) for t in
+                                              lists + bitmaps))
+                }
+                got = _chain_step(
+                    space, cur, [keys[t] for t in lists],
+                    [space.bitmap(keys[t]) for t in bitmaps])
+                assert slots(got) == want, (cur.dtype, lists, bitmaps)
+                if got.dtype == np.int64:
+                    assert (np.diff(got) > 0).all()
 
 
 VOCAB = ["alpha", "beta", "betamax", "gamma", "rare"]
@@ -218,7 +276,11 @@ def test_phrase_search_matches_brute_force(small):
 def test_phrase_prefix_matches_brute_force(small):
     s, docs = small
     for head, pre in [(["alpha"], "be"), (["gamma", "alpha"], "al"),
-                      ([], "bet"), (["rare"], "a"), (["alpha"], "zz")]:
+                      ([], "bet"), (["rare"], "a"), (["alpha"], "zz"),
+                      # a head word that is not indexed: first, after a
+                      # dense word, and after a sparse one
+                      (["zzz"], "al"), (["alpha", "zzz"], "al"),
+                      (["rare", "zzz", "alpha"], "al")]:
         want = {
             d: sum(
                 toks[i:i + len(head)] == head
@@ -467,7 +529,7 @@ def test_bitmaps_evicted_with_keys_within_budget(small):
     assert "alpha" in s0._pos_bitmaps
     s = DirectSearcher(s0.root, analyzer="simple")
     s.max_pos_keys_bytes = size["alpha"] + size["rare"]
-    built = set()
+    built = []  # held, so a freed bitmap's id cannot name a new one
     for _ in range(2):
         for p in PHRASES + CHAINS:
             want = _phrase_counts(docs, p.split())
@@ -477,9 +539,9 @@ def test_bitmaps_evicted_with_keys_within_budget(small):
             held = sum(k.nbytes for k in s._pos_keys.values()) + sum(
                 b.nbytes for b in s._pos_bitmaps.values())
             assert held == s._pos_keys_bytes <= s.max_pos_keys_bytes
-            built.update(id(b) for b in s._pos_bitmaps.values())
+            built.extend(s._pos_bitmaps.values())
     # alpha's bitmap was evicted and rebuilt, not kept beside the budget
-    assert len(built) > len(VOCAB)
+    assert len({id(b) for b in built}) > len(VOCAB)
 
 
 @pytest.mark.parametrize("source", ["enriched", "docs_meta"])

@@ -11,7 +11,7 @@ import pytest
 
 from rse_spark.index.codec import bm25_impact, encode_postings
 from rse_spark.query import kernel
-from rse_spark.query.kernel import _grouped_topk
+from rse_spark.query.kernel import _DocLens, _grouped_topk
 from rse_spark.query.serve import DirectSearcher, _TermList
 
 
@@ -101,15 +101,18 @@ def test_grouped_topk_matches_reference(seed, spread):
 def test_grouped_topk_dismax_and_fvf(seed):
     rng = np.random.default_rng(10 + seed)
     docs, scores, dls = _postings(rng, 4, 5000, 2000)
+    uniq, first = np.unique(docs, return_index=True)
+    table = _DocLens(uniq, dls[first].astype(np.int64))
     for combine, tb in (("sum", 0.0), ("dismax", 0.0), ("dismax", 0.3)):
         for use_dl in (False, True):
-            kw = dict(combine=combine, tiebreak=tb,
-                      dls=dls if use_dl else None)
+            kw = dict(combine=combine, tiebreak=tb)
             for need in (1, 2):
                 for k in (1, 10, 100):
-                    assert _grouped_topk(docs, scores, k, need=need,
-                                         **kw) == \
-                        _reference(docs, scores, k, need, **kw)
+                    assert _grouped_topk(
+                        docs, scores, k, need=need,
+                        lens=table if use_dl else None, **kw,
+                    ) == _reference(docs, scores, k, need,
+                                    dls=dls if use_dl else None, **kw)
 
 
 def test_grouped_topk_adversarial_sample():
@@ -142,36 +145,76 @@ def _row(docs, tfs, dls):
     return {"payload": payload}
 
 
+# the doc lengths of the hand-made rows below
+LENS = _DocLens([0, 5, 9, 12, 40, 100, 4, 6, 11],
+                [10, 20, 30, 15, 25, 50, 3, 3, 3])
+
+
 def test_term_list_doc_order_and_read_only():
     """Rows handed over out of segment order concatenate in doc-id
-    order; every array is read-only; impacts are the codec's."""
+    order; every array is read-only; impacts are the codec's, at the
+    doc-length table's lengths."""
     r1 = _row([0, 5, 9], [1, 2, 3], [10, 20, 30])
     r2 = _row([12, 40], [4, 1], [15, 25])
     r3 = _row([100], [2], [50])
     empty = {"payload": b""}
-    pl = _TermList("t", [r3, empty, r1, r2], avgdl=20.0)
+    pl = _TermList("t", [r3, empty, r1, r2], LENS, avgdl=20.0)
     assert pl.docs.tolist() == [0, 5, 9, 12, 40, 100]
     assert pl.tfs.tolist() == [1, 2, 3, 4, 1, 2]
-    assert pl.dls.tolist() == [10, 20, 30, 15, 25, 50]
-    assert np.array_equal(pl.impacts, bm25_impact(pl.tfs, pl.dls, 20.0))
-    for a in (pl.docs, pl.tfs, pl.dls, pl.impacts):
+    assert LENS.of(pl.docs).tolist() == [10, 20, 30, 15, 25, 50]
+    assert np.array_equal(
+        pl.impacts, bm25_impact(pl.tfs, LENS.of(pl.docs), 20.0))
+    assert (pl.docs.dtype, pl.tfs.dtype) == (np.int32, np.int32)
+    assert pl.nbytes == 16 * len(pl.docs)
+    for a in (pl.docs, pl.tfs, pl.impacts):
         assert not a.flags.writeable
         with pytest.raises(ValueError):
             a[0] = 1
-    one = _TermList("t", [r2], avgdl=20.0)
+    one = _TermList("t", [r2], LENS, avgdl=20.0)
     assert one.docs.tolist() == [12, 40] and not one.docs.flags.writeable
-    none = _TermList("t", [], avgdl=20.0)
+    none = _TermList("t", [], LENS, avgdl=20.0)
     assert none.docs.dtype == np.int64 and not len(none.impacts)
 
 
 def test_term_list_overlapping_rows_raise():
-    r1 = _row([0, 5, 9], [1, 1, 1], [3, 3, 3])
-    r2 = _row([9, 11], [1, 1], [3, 3])  # doc 9 in two segments
+    r1 = _row([0, 5, 9], [1, 1, 1], [10, 20, 30])
+    r2 = _row([9, 11], [1, 1], [30, 3])  # doc 9 in two segments
     with pytest.raises(ValueError, match="overlap"):
-        _TermList("dup", [r2, r1], avgdl=3.0)
+        _TermList("dup", [r2, r1], LENS, avgdl=3.0)
     r3 = _row([4, 6], [1, 1], [3, 3])  # interleaves with r1
     with pytest.raises(ValueError, match="overlap"):
-        _TermList("dup", [r1, r3], avgdl=3.0)
+        _TermList("dup", [r1, r3], LENS, avgdl=3.0)
+
+
+def test_term_list_doc_lengths_must_match_table():
+    """A payload whose doc lengths disagree with the generation's
+    table, or that names a doc the table lacks, raises naming the
+    term."""
+    with pytest.raises(ValueError, match="'bad'.*doc_len"):
+        _TermList("bad", [_row([0, 5], [1, 1], [10, 21])], LENS, 20.0)
+    with pytest.raises(ValueError, match="'gone'.*doc_len"):
+        _TermList("gone", [_row([7], [1], [3])], LENS, 20.0)
+    with pytest.raises(ValueError, match="'past'.*doc_len"):
+        _TermList("past", [_row([101], [1], [3])], LENS, 20.0)
+
+
+@pytest.mark.parametrize("ids", [
+    np.arange(0, 40, 3),  # compact: direct gather
+    np.array([5, 10**9, 2**40, 2**40 + 7]),  # sparse: searchsorted
+])
+def test_doc_lens_gather(ids):
+    rng = np.random.default_rng(3)
+    lens = rng.integers(0, 500, len(ids))
+    order = rng.permutation(len(ids))
+    table = _DocLens(ids[order], lens[order])
+    assert (table.ids is None) == (len(ids) > 5)
+    assert table.of(ids).tolist() == lens.tolist()
+    assert table.of(ids[::-1].astype(np.int64)).tolist() == \
+        lens[::-1].tolist()
+    missing = np.array([int(ids[0]) - 1, int(ids[1]) + 1,
+                        int(ids[-1]) + 1])
+    assert table.of(missing).tolist() == [-1, -1, -1]
+    assert not len(table.of(ids[:0]))
 
 
 def test_term_list_follows_upsert_generation(spark, tmp_path_factory):

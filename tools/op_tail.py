@@ -11,9 +11,9 @@ the ones a ``perfbench/run.py --workload serve_warm --seed N`` run times
 (``perfbench/streams.py`` and ``perfbench/workloads.py``, imported
 read-only), on a replica set up the same way: warmed with the stream's
 first search texts, then one untimed pass over every op to fill the lazy
-caches. Each timed pass runs every op once; an op's time is its median
-over the passes. Results are not checked here; the benchmark checks
-them.
+caches. After that pass it prints the bytes each cache holds. Each
+timed pass runs every op once; an op's time is its median over the
+passes. Results are not checked here; the benchmark checks them.
 """
 
 from __future__ import annotations
@@ -27,6 +27,34 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+
+def held_bytes_rows(searcher) -> "list[tuple[str, int]]":
+    """(what, bytes) of everything a replica's caches hold: the Arrow
+    tables, the decoded term lists by array, the positional keys and
+    slot bitmaps, and the generation's doc-length table and slot
+    space; last, ``held_bytes``, the total the budgets charge."""
+    with searcher._meta_lock:
+        rows = [*searcher._term_rows.values(), *searcher._cold_rows.values()]
+        keys = sum(k.nbytes for k in searcher._pos_keys.values())
+        bitmaps = sum(b.nbytes for b in searcher._pos_bitmaps.values())
+        lens, slots = searcher._lens, searcher._slots
+    plists = [r.plist for r in rows if r.plist is not None]
+    out = [("tables (Arrow)", searcher.cached_bucket_bytes)]
+    out += [
+        (f"term lists: {a} ({len(plists)} lists)",
+         sum(getattr(p, a).nbytes for p in plists))
+        for a in ("docs", "tfs", "impacts")
+    ]
+    out += [
+        ("positional keys", keys),
+        ("slot bitmaps", bitmaps),
+        ("doc-length table", lens.nbytes if lens else 0),
+        ("slot space", slots.start.nbytes + slots.dl.nbytes
+         if slots else 0),
+        ("held_bytes (budgeted caches)", searcher.held_bytes),
+    ]
+    return out
 
 
 def main(argv=None) -> None:
@@ -55,6 +83,10 @@ def main(argv=None) -> None:
                    if k in ("or", "and", "ql")])
     for kind, arg in ops:
         run_op(searcher, kind, arg)
+    print("held after the filling pass:")
+    for what, n in held_bytes_rows(searcher):
+        print(f"  {what:<38} {n / 1e6:>9.1f} MB")
+    print()
     times: list[list[float]] = [[] for _ in ops]
     for _ in range(args.passes):
         for i, (kind, arg) in enumerate(ops):
