@@ -895,8 +895,8 @@ def q_span_first(spark, sf_dir):
     without a separate field. One posexplode + scan-side predicate on
     (token, position) + hash-agg count; the position filter prunes
     before any join or shuffle. Serving twin:
-    DirectSearcher.span_first_search (one mask over the packed
-    position keys)."""
+    DirectSearcher.span_first_search (the term's token slots within
+    their document's first SPAN_END slots)."""
     return (
         _docs(spark, sf_dir)
         .select(

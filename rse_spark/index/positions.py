@@ -123,9 +123,9 @@ def decode_position_list(
 # build job
 # ---------------------------------------------------------------------------
 
-# arithmetic slack the serving tier may add to a position (phrase
-# offsets, NEAR windows, slop gaps) without crossing a packed-key doc
-# boundary; build_positions reserves it above the longest document
+# the widest window the serving tier's NEAR and slop accept (and the
+# headroom its token-slot space keeps for that window arithmetic);
+# build_positions also reserves it above the longest document
 _POS_SLACK = 4096
 
 _POS_ROWS_SCHEMA = T.StructType([
@@ -256,20 +256,16 @@ def build_positions(
         if not missing:
             return 0
 
-    # ---- packed-key bit split ----------------------------------------
-    # The serving tier matches phrases on packed (doc_id << pos_bits) |
-    # position int64 keys (query/serve.py). A fixed 32/32 split bounds
-    # doc_id < 2^31 — real at ~2 B docs (round-5 VERDICT item 3). The
-    # split is therefore CHOSEN AT BUILD TIME from the actual id/length
-    # ranges and recorded in the manifest: position bits cover the
-    # longest document plus arithmetic slack (queries add/subtract up
-    # to _POS_SLACK to positions: phrase offsets, NEAR windows, slop
-    # gaps — the no-doc-boundary-crossing arguments in serve.py need
-    # real positions to stay that far below 2^pos_bits), the rest go
-    # to doc ids; an index that genuinely cannot fit (doc_bits +
-    # pos_bits > 63) fails HERE, loudly, instead of silently matching
-    # across documents at query time. Incremental maintenance keeps
-    # the recorded split and checks only the NEW groups against it —
+    # ---- bit split check ---------------------------------------------
+    # The serving tier places each occurrence in the generation's token
+    # slots (query/kernel.py _SlotSpace) and checks every position
+    # against its doc's doc_len. ``pos_bits`` only validates the build:
+    # position bits cover the longest document plus _POS_SLACK and the
+    # rest go to doc ids, so an index whose (doc_id, position) pairs
+    # cannot fit one int64 (doc_bits + pos_bits > 63) fails HERE,
+    # loudly. The split is chosen from the actual id/length ranges and
+    # recorded in the manifest; incremental maintenance keeps the
+    # recorded split and checks only the NEW groups against it —
     # per-batch work stays proportional to the batch, not the index.
     bounds_meta = store.docs_meta(spark)
     prev = done.get("positions", {})

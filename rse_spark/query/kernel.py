@@ -11,19 +11,19 @@ lengths (``_DocLens``). Doc-id arrays are int64, except that a decoded
 term list stores its ids as int32 when they fit; offsets derived from
 either are built as ``intp`` in one step.
 
-A phrase chain holds the occurrences of the phrase's current last word
-in one of two representations, picked per term by density as Roaring
-and HERO (SIGMOD 2024) do. A sparse term is its sorted packed position
-keys ``(doc << pos_bits) | pos`` (int64). A dense term, one with at
-least ``n_slots / 64`` keys, is also a packed ``uint64`` bitmap over the
-generation's dense token slots ``slot = start[doc] + pos``
-(``_SlotSpace``), so the bitmap is no larger than its key list. Each
-document is followed by one spacer slot that no term occupies, so
-"the next slot" never crosses into the next document. One chain step
-(``_chain_step``) is a shifted word AND (bitmap x bitmap), one gather of
-slots +-1 (list x bitmap), or a merge of two sorted lists; a chain that
-ends as a bitmap is counted per document by popcount prefix sums at the
-document starts (``_range_counts``).
+Every positional surface reads a term's occurrences as one sorted
+array of token slots (``_SlotSpace``, int32 while the space fits):
+document rank ``r``'s position ``p`` is slot ``start[r] + p``, and one
+spacer slot after each document keeps "the next slot" inside it; wider
+windows (NEAR, slop, span-first) are clamped to their document's slots
+(``_SlotSpace.runs``). A phrase chain holds the occurrences of its
+current last word as slots or, for a dense term, as a packed
+``uint64`` bitmap over the slots, picked per term by density as
+Roaring and HERO (SIGMOD 2024) do. One chain step (``_chain_step``) is
+a shifted word AND (bitmap x bitmap), one gather of slots +-1 (list x
+bitmap), or a merge of two sorted lists; a chain that ends as a bitmap
+is counted per document by popcount prefix sums at the document starts
+(``_range_counts``).
 """
 
 from __future__ import annotations
@@ -54,8 +54,8 @@ _H01 = np.uint64(0x0101010101010101)
 # byte per slot
 _LOW_BYTE = 0 if sys.byteorder == "little" else 7
 
-# packed keys turned into bitmap bits per pass of _SlotSpace.bitmap, so
-# building a bitmap allocates far less than the term's key list
+# slots turned into bitmap bits per pass of _set_bits, so building a
+# bitmap allocates far less than the term's slot list
 _BITMAP_CHUNK = 1 << 16
 
 
@@ -88,15 +88,15 @@ def _mark_members(hit, vals, sorted_set) -> None:
 
 
 def _intersect_sorted(a, b):
-    """Values present in both of two STRICTLY increasing int64 arrays,
+    """Values present in both of two STRICTLY increasing integer arrays,
     in increasing order (sorted-list intersection as in HERO, SIGMOD
     2024). A much shorter side is binary-searched into the longer one,
     O(s log l); otherwise one stable sort of the concatenation merges
     the two runs in O(a + b) and a common value is a pair of equal
     neighbours — strictness on each side guarantees no other source
     of equal neighbours (every caller's inputs are sets: per-term doc
-    lists, presence sets, or positional key lists, which
-    ``DirectSearcher._term_position_keys`` checks)."""
+    lists, presence sets, or token slot lists, which
+    ``DirectSearcher._term_slots`` checks)."""
     if len(a) > len(b):
         a, b = b, a
     if not len(a):
@@ -109,7 +109,7 @@ def _intersect_sorted(a, b):
 
 
 def _run_lengths(docs):
-    """(values, counts) of a non-decreasing int64 array: np.unique's
+    """(values, counts) of a non-decreasing integer array: np.unique's
     answer without its sort."""
     if not len(docs):
         return docs, np.empty(0, dtype=np.int64)
@@ -250,7 +250,7 @@ def _popcount64(words):
 
 
 def _bits_test(bits, slots):
-    """Boolean mask over int64 ``slots``: which are set in ``bits``,
+    """Boolean mask over integer ``slots``: which are set in ``bits``,
     read one byte per slot (a quarter of the word gather's cost)."""
     idx = slots >> 3
     if _LOW_BYTE:
@@ -272,7 +272,7 @@ def _shift_and(cur, nxt):
 
 def _range_counts(bits, bounds):
     """Set bits of ``bits`` in each slot range [bounds[i], bounds[i+1])
-    for non-decreasing int64 ``bounds`` < 64 * len(bits): differences
+    for non-decreasing integer ``bounds`` < 64 * len(bits): differences
     of popcount prefix sums, read at whole words plus one masked
     partial word per bound."""
     cum = np.zeros(len(bits), dtype=np.int64)
@@ -321,112 +321,156 @@ class _DocLens:
 
 
 class _SlotSpace:
-    """Dense token slots of one index generation: doc ``d``'s position
-    ``p`` is slot ``start[d - lo] + p``, slot 0 and one slot after each
-    document are spacers, and ``lo`` is the least doc id, so ids of any
-    size work as long as their range is compact (``_is_compact``).
-    Built from the generation's compact ``_DocLens`` (an id without a
-    row is a document of length 0); ``check`` rejects a key whose
-    position does not fit its document."""
+    """Dense token slots of one index generation, built from its
+    ``_DocLens``. Documents are ranked by id (``id - lo`` for a compact
+    range, where an id without a row is a document of length 0, else
+    the rank in ``_DocLens.ids``); rank ``r``'s position ``p`` is slot
+    ``start[r] + p``, and slot 0 and one slot after each document are
+    spacers. Slots and ``start`` are ``dtype``: int32 while the space
+    plus ``slack`` (the widest window) stays below 2^31, else int64."""
 
-    def __init__(self, lens: _DocLens, pos_bits: int):
-        self.lo = lens.lo
-        dl = self.dl = np.maximum(lens.lens[:-1], 0)
-        self.start = np.empty(len(dl) + 1, dtype=np.int64)
-        self.start[0] = 1
-        np.cumsum(dl + 1, out=self.start[1:])
-        self.start[1:] += 1
-        self.n_words = int(self.start[-1]) // 64 + 1
-        self.shift = np.int64(pos_bits)
-        self.mask = np.int64((1 << pos_bits) - 1)
+    def __init__(self, lens: _DocLens, slack: int = 0):
+        self.lo, self.ids = lens.lo, lens.ids
+        dl = np.maximum(lens.lens if lens.ids is not None
+                        else lens.lens[:-1], 0)
+        start = np.empty(len(dl) + 1, dtype=np.int64)
+        start[0] = 1
+        np.cumsum(dl + 1, out=start[1:])
+        start[1:] += 1
+        self.n_words = int(start[-1]) // 64 + 1
+        self.dtype = np.dtype(
+            np.int32 if int(start[-1]) + slack < 1 << 31 else np.int64)
+        self.start = start.astype(self.dtype)
+        self.nbytes = self.start.nbytes
 
-    def check(self, keys, term: str) -> None:
-        """Raise ValueError unless every key's doc is in the table and
-        its position is below that doc's length."""
-        if not len(keys):
-            return
-        docs = (keys >> self.shift) - self.lo
-        if docs[0] < 0 or docs[-1] >= len(self.dl):
+    def doc_ids(self, ranks):
+        """int64 doc ids of document ranks."""
+        if self.ids is None:
+            return np.add(ranks, self.lo, dtype=np.int64)
+        return self.ids[ranks]
+
+    def rank(self, slots):
+        """The document rank of each slot."""
+        return np.searchsorted(self.start, slots, side="right") - 1
+
+    def counts(self, slots, end=None):
+        """Occurrences of a sorted slot array per document rank, only at
+        positions below ``end`` if given: the shorter of the slots and
+        the document starts is searched into the longer."""
+        if len(slots) > len(self.start):
+            if end is None:
+                return np.diff(np.searchsorted(slots, self.start))
+            first, span = self.start[:-1], np.diff(self.start)
+            # capped at the longest document, so no sum overflows
+            stop = first + np.minimum(span, min(end, int(span.max())))
+            return np.searchsorted(slots, stop) - np.searchsorted(slots, first)
+        ranks = self.rank(slots)
+        if end is not None:
+            ranks = ranks[slots - self.start[ranks] < end]
+        return np.bincount(ranks, minlength=len(self.start) - 1)
+
+    def runs(self, slots):
+        """(ranks, counts) of the documents a sorted slot array falls
+        in, ascending by rank, searched as in ``counts``."""
+        if len(slots) <= len(self.start):
+            return _run_lengths(self.rank(slots))
+        counts = self.counts(slots)
+        ranks = np.flatnonzero(counts)
+        return ranks, counts[ranks]
+
+    def put(self, out, at: int, doc_ids, lens, flat, term: str) -> int:
+        """Write one decoded position row's slots (ascending doc ids,
+        positions per doc, the positions) into ``out[at:]``; return
+        their end. Raises ValueError naming ``term`` unless every doc is
+        in the table and every position is below its doc's length."""
+        ranks = (
+            np.subtract(doc_ids, self.lo, dtype=np.intp) if self.ids is None
+            else np.searchsorted(self.ids, doc_ids)
+        ).clip(0, len(self.start) - 2)
+        if not (self.doc_ids(ranks) == doc_ids).all():
             raise ValueError(
                 f"positional sidecar holds {term!r} in a doc outside "
                 f"the index's doc ids — rebuild it with build_positions"
             )
-        if ((keys & self.mask) >= self.dl[docs]).any():
+        base = self.start[ranks]
+        dl = np.repeat(self.start[ranks + 1] - base - 1, lens)
+        if ((flat < 0) | (flat >= dl)).any():
             raise ValueError(
                 f"positional sidecar holds {term!r} at a position past "
                 f"its doc's doc_len — rebuild it with build_positions"
             )
+        end = at + len(flat)
+        np.add(np.repeat(base, lens), flat, out=out[at:end],
+               casting="unsafe")
+        return end
 
-    def slots(self, keys):
-        """Slots of packed keys that passed ``check``."""
-        return self.start[(keys >> self.shift) - self.lo] + (keys & self.mask)
+    def dense(self, n: int) -> bool:
+        """Whether a term of ``n`` occurrences gets a bitmap: one per 64
+        slots, so the bitmap is at most twice its int32 slots."""
+        return n >= self.n_words
 
-    def dense(self, n_keys: int) -> bool:
-        """Whether a bitmap of this term is no larger than its key
-        list."""
-        return n_keys >= self.n_words
+    def bitmap(self, slots):
+        """Packed bitmap of strictly increasing slots."""
+        return _set_bits(np.zeros(self.n_words, dtype=np.uint64), slots)
 
-    def bitmap(self, keys, bits=None):
-        """Packed bitmap of the slots of strictly increasing keys, built
-        ``_BITMAP_CHUNK`` keys at a time; set into ``bits`` when
-        given."""
-        if bits is None:
-            bits = np.zeros(self.n_words, dtype=np.uint64)
-        for c in range(0, len(keys), _BITMAP_CHUNK):
-            s = self.slots(keys[c: c + _BITMAP_CHUNK])
-            w = s >> 6
-            runs = np.flatnonzero(np.r_[True, w[1:] != w[:-1]])
-            ones = _ONE << (s & 63).astype(np.uint64)
-            bits[w[runs]] |= np.bitwise_or.reduceat(ones, runs)
-        return bits
+
+def _set_bits(bits, slots):
+    """Set strictly increasing ``slots`` in the bitmap ``bits``,
+    ``_BITMAP_CHUNK`` slots at a time, and return it."""
+    for c in range(0, len(slots), _BITMAP_CHUNK):
+        s = slots[c: c + _BITMAP_CHUNK]
+        w = s >> 6
+        runs = np.flatnonzero(np.r_[True, w[1:] != w[:-1]])
+        ones = _ONE << (s & 63).astype(np.uint64)
+        bits[w[runs]] |= np.bitwise_or.reduceat(ones, runs)
+    return bits
 
 
 def _chain_start(lists, bitmaps=()):
     """A chain's first word (``_chain_step``'s ``lists, bitmaps``) as
-    the chain: its bitmap if it has one, else its keys."""
+    the chain: its bitmap if it has one, else its slots."""
     return bitmaps[0] if bitmaps else lists[0]
 
 
-def _chain_step(space, cur, lists, bitmaps=()):
+def _chain_step(cur, lists, bitmaps=()):
     """One exact-phrase step: the occurrences of the next word that
     directly follow an occurrence in ``cur``. The next word occurs at
-    the keys of any of ``lists`` (sorted packed keys) and at the slots
-    set in any of ``bitmaps``: a word is one sparse term's keys or one
+    the slots of any of ``lists`` (sorted slot arrays) and at the slots
+    set in any of ``bitmaps``: a word is one sparse term's slots or one
     dense term's bitmap, and a phrase prefix's last word is all of its
-    expansions. ``cur`` is sorted packed keys (int64) or a bitmap
-    (uint64) over ``space``'s slots, and so is the result; ``space`` may
-    be None only when neither side is a bitmap."""
-    if cur.dtype == np.int64:
+    expansions. ``cur`` is sorted slots or a ``uint64`` bitmap, and so
+    is the result; a slot array keeps the slots' dtype."""
+    if cur.dtype != np.uint64:
+        # a last token's successor is its doc's spacer slot, never set
         nxt = cur + 1
         if len(lists) == 1 and not bitmaps:
             return _intersect_sorted(nxt, lists[0])
         hit = np.zeros(len(nxt), dtype=bool)
-        for keys in lists:
-            _mark_members(hit, nxt, keys)
-        if bitmaps:
-            # a last token's successor is its doc's spacer slot, never set
-            slots = space.slots(nxt)
-            for bits in bitmaps:
-                hit |= _bits_test(bits, slots)
+        for slots in lists:
+            _mark_members(hit, nxt, slots)
+        for bits in bitmaps:
+            hit |= _bits_test(bits, nxt)
         return nxt[hit]
     # slot 0 is a spacer, so a doc's first slot minus one is >= 0
-    after = [keys[_bits_test(cur, space.slots(keys) - 1)] for keys in lists]
+    after = [slots[_bits_test(cur, slots - 1)] for slots in lists]
     if not bitmaps:
-        # distinct terms' hits are distinct keys: only hits are sorted
+        # distinct terms' hits are distinct slots: only hits are sorted
         return after[0] if len(after) == 1 else np.sort(np.concatenate(after))
     out = _shift_and(cur, bitmaps[0])
     for bits in bitmaps[1:]:
         out |= _shift_and(cur, bits)
-    for keys in after:
-        space.bitmap(keys, out)
+    for slots in after:
+        _set_bits(out, slots)
     return out
 
 
-def _chain_counts(space, cur, shift):
+def _chain_counts(space, cur):
     """(doc_ids, counts) of a chain's occurrences, ascending by doc id,
-    from packed keys (``shift`` = pos_bits) or from a bitmap."""
-    if cur.dtype == np.int64:
-        return _run_lengths(cur >> shift)
-    counts = _range_counts(cur, space.start)
-    docs = np.flatnonzero(counts)
-    return docs + space.lo, counts[docs]
+    from sorted slots or from a bitmap over ``space``'s slots."""
+    if cur.dtype != np.uint64:
+        ranks, counts = space.runs(cur)
+    else:
+        counts = _range_counts(cur, space.start)
+        ranks = np.flatnonzero(counts)
+        counts = counts[ranks]
+    return space.doc_ids(ranks), counts

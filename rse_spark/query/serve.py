@@ -26,13 +26,13 @@ import pyarrow.parquet as pq
 from rse_spark.query.engine import idf as idf_fn
 from rse_spark.query.engine import query_terms
 from rse_spark.query.kernel import (
+    _bits_test,
     _chain_counts,
     _chain_start,
     _chain_step,
     _DocLens,
     _grouped_topk,
     _intersect_sorted,
-    _run_lengths,
     _SlotSpace,
     _sorted_member,
     _topk,
@@ -507,27 +507,19 @@ class DirectSearcher:
         self._cold_counters = {
             "row_groups_total": 0, "row_groups_read": 0, "terms": 0,
         }
-        # decoded positional keys per term (phrase/NEAR serving path):
+        # decoded token slots per term (phrase/NEAR serving path):
         # LRU, byte-budgeted like the bucket cache, invalidated on
         # generation change. A dense term's slot bitmap
         # (_term_bitmap) is charged to the same budget and evicted
-        # with its term's keys.
-        self._pos_keys: OrderedDict[str, object] = OrderedDict()
+        # with its term's slots.
+        self._pos_slots: OrderedDict[str, object] = OrderedDict()
         self._pos_bitmaps: dict[str, object] = {}
-        self._pos_keys_bytes = 0
-        self.max_pos_keys_bytes = 256 << 20
+        self._pos_bytes = 0
+        self.max_pos_bytes = 256 << 20
         # this generation's per-document lengths (kernel._DocLens) and
-        # dense token slots (kernel._SlotSpace): None until first
-        # built; the slots are False when the doc-id range is not
-        # compact
+        # token slots (kernel._SlotSpace): None until first built
         self._lens = None
         self._slots = None
-        # packed-key split for positional matching: low ``_pos_bits``
-        # bits hold the token position, the rest the doc id. Chosen at
-        # sidecar build time from the real id/length ranges and read
-        # from the manifest per query (_check_positions_coverage);
-        # 32 is the legacy default for pre-pos_bits sidecars.
-        self._pos_bits = 32
         # generation signature of the last passed
         # _check_positions_coverage (None: check on every query)
         self._pos_checked_sig = None
@@ -655,9 +647,9 @@ class DirectSearcher:
             self._bucket_meta.clear()
             self._bucket_disk_bytes.clear()
             self._bucket_files_cache.clear()
-            self._pos_keys.clear()
+            self._pos_slots.clear()
             self._pos_bitmaps.clear()
-            self._pos_keys_bytes = 0
+            self._pos_bytes = 0
             self._lens = None
             self._slots = None
             self._meta_docs_cache.clear()
@@ -698,12 +690,12 @@ class DirectSearcher:
     def held_bytes(self) -> int:
         """Bytes the budgeted caches hold: resident buckets' tables and
         cold term rows, the decoded term lists built from either, and
-        the positional keys with their slot bitmaps."""
+        the terms' token slots with their slot bitmaps."""
         with self._meta_lock:
             return (
                 sum(self._bucket_bytes.values())
                 + sum(self._cold_rows_bytes.values())
-                + self._pos_keys_bytes
+                + self._pos_bytes
             )
 
     def _bucket_lock(self, bucket: int):
@@ -2222,7 +2214,7 @@ class DirectSearcher:
         is over the analyzed token stream (Lucene semantics; for the
         ``simple`` analyzer this equals whitespace adjacency, proven
         by the equivalence pytest). Occurrences are counted by
-        :meth:`_phrase_occurrence_counts` (a chain over position key
+        :meth:`_phrase_occurrence_counts` (a chain over token slot
         lists and dense terms' slot bitmaps); the top-k is one
         kth-partition + stable sort (``_topk``).
 
@@ -2233,59 +2225,53 @@ class DirectSearcher:
         terms = tokenize(phrase, self.analyzer)  # ordered, dups kept
         if not terms:
             raise ValueError("phrase has no indexable terms")
-        uniq, counts = self._phrase_occurrence_counts(terms)
+        uniq, counts = self._in_one_space(
+            self._phrase_occurrence_counts, terms)
         return [
             (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
         ]
 
-    def _phrase_occurrence_counts(self, terms: "list[str]",
+    def _phrase_occurrence_counts(self, space, terms: "list[str]",
                                   within=None):
         """(doc_ids, counts) numpy pair of per-document exact-phrase
         occurrence counts for pre-analyzed ``terms``, ascending by doc
-        id. The chain holds the occurrences of the phrase's current
-        LAST word in one of two representations (query/kernel.py):
-        every term has its strictly increasing packed keys
-        (doc_id << pos_bits) | pos, and a dense term — at least one
-        key per 64 slots of the generation's slot space, so the bitmap
-        is no larger than the keys — also has a bitmap over the slots
-        ``start[doc] + pos`` (:meth:`_term_bitmap`). One spacer slot
-        after each document means adjacency never crosses documents
-        in either form. Each step (``_chain_step``) is a shifted word
-        AND of two bitmaps, one gather of slots +-1 when one side is a
-        list, or a merge of two lists (``_intersect_sorted``). A chain
-        that ends as keys is counted by run lengths of its doc ids, one
-        that ends as a bitmap by popcount prefix sums at the document
-        starts. Cost ~ the sparse terms' list sizes plus n_slots / 64
-        words per dense step, independent of candidate count. An index
-        whose doc-id range is not compact has no slot space and chains
-        on keys only.
+        id, over the query's slot ``space`` (:meth:`_in_one_space`).
+        The chain holds the occurrences of the phrase's current LAST
+        word (query/kernel.py) as token slots (:meth:`_term_slots`) or,
+        for a dense term (one occurrence per 64 slots), as a slot bitmap
+        (:meth:`_term_bitmap`); a spacer slot after each document keeps
+        adjacency inside it. Each step (``_chain_step``)
+        is a shifted word AND of two bitmaps, one gather of slots +-1
+        when one side is a list, or a merge of two lists; the end is
+        counted per document by run lengths or popcount prefix sums.
+        Cost ~ the sparse terms' list sizes plus n_slots / 64 words per
+        dense step, independent of candidate count.
 
         ``within`` (sorted unique int64 doc-id ndarray) drops chain
         starts outside the set up front, bounding the chain work by
         the candidate window — the rescore path's contract. The chain
-        then starts from the first word's keys, even for a dense
+        then starts from the first word's slots, even for a dense
         term."""
         import numpy as np
 
         word: dict[str, tuple] = {}
-        empty = (np.empty(0, dtype=np.int64),
-                 np.empty(0, dtype=np.int64))
+        empty = (np.empty(0, dtype=np.int64),) * 2
         for t in sorted(set(terms)):
-            word[t] = self._chain_word(t)
+            word[t] = self._chain_word(t, space)
             if not (word[t][0] or word[t][1]):  # absent term
                 return empty
-        space = self._slot_space()
-        shift = np.int64(self._pos_bits)
         if within is not None:
-            cur = self._term_position_keys(terms[0])
-            cur = cur[_sorted_member(within, cur >> shift)]
+            cur = self._term_slots(terms[0], space)
+            ranks, runs = space.runs(cur)
+            cur = cur[np.repeat(
+                _sorted_member(within, space.doc_ids(ranks)), runs)]
         else:
             cur = _chain_start(*word[terms[0]])
         for t in terms[1:]:
-            if cur.dtype == np.int64 and not len(cur):
+            if cur.dtype != np.uint64 and not len(cur):
                 return empty
-            cur = _chain_step(space, cur, *word[t])
-        return _chain_counts(space, cur, shift)
+            cur = _chain_step(cur, *word[t])
+        return _chain_counts(space, cur)
 
     def search_rescored(self, qtext: str, phrase: str, k: int = 10,
                         window: int = 50, weight: float = 2.0,
@@ -2325,9 +2311,8 @@ class DirectSearcher:
         win_ids = np.unique(
             np.array([d for d, _s, _m in hits], dtype=np.int64)
         )
-        docs, counts = self._phrase_occurrence_counts(
-            terms, within=win_ids
-        )
+        docs, counts = self._in_one_space(
+            self._phrase_occurrence_counts, terms, win_ids)
         occ = dict(zip(docs.tolist(), counts.tolist()))
         rescored = [
             (d, s + weight * occ.get(d, 0), m, int(occ.get(d, 0)))
@@ -2384,9 +2369,12 @@ class DirectSearcher:
         """Lucene SpanFirstQuery: docs where ``word`` occurs within
         the first ``end`` token positions (a title/lead-sensitive
         match without a separate field), with the count of qualifying
-        occurrences — one mask over the term's packed position keys
-        (the low bits ARE the 0-based position, so "first end tokens"
-        is ``pos < end``)."""
+        occurrences. A slot's 0-based position is its distance from its
+        document's first slot, so "first end tokens" is
+        ``s - start[doc(s)] < end``, counted per document by
+        ``_SlotSpace.counts``, or for a dense term with more occurrences
+        than ``end`` x documents by probing each document's first
+        ``end`` slots in its bitmap (a byte each, not a search)."""
         import numpy as np
 
         from rse_spark.tokenizer import tokenize
@@ -2400,14 +2388,25 @@ class DirectSearcher:
                 "span_first takes one word (compose phrases with "
                 "phrase_search_positions)"
             )
-        keys = self._term_position_keys(toks[0])
-        if not len(keys):
-            return []
-        mask = (keys & ((np.int64(1) << np.int64(self._pos_bits))
-                        - 1)) < end
-        uniq, counts = _run_lengths(
-            keys[mask] >> np.int64(self._pos_bits)
-        )
+
+        def first_counts(space):
+            slots = self._term_slots(toks[0], space)
+            if (space.dense(len(slots))
+                    and end * (len(space.start) - 1) < len(slots)):
+                bits = self._term_bitmap(toks[0], slots, space)
+                # a probe past its document's end stays on the spacer
+                probe, spacer = space.start[:-1].copy(), space.start[1:] - 1
+                per_doc = np.zeros(len(probe), dtype=np.intp)
+                for _ in range(end):
+                    per_doc += _bits_test(bits, probe)
+                    probe += 1
+                    np.minimum(probe, spacer, out=probe)
+            else:
+                per_doc = space.counts(slots, end)
+            ranks = np.flatnonzero(per_doc)
+            return space.doc_ids(ranks), per_doc[ranks]
+
+        uniq, counts = self._in_one_space(first_counts)
         return [
             (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
         ]
@@ -2418,18 +2417,16 @@ class DirectSearcher:
         phrase whose LAST word is a prefix — "merge jo" matches
         "merge join" and "merge joined". The chain runs exactly like
         phrase_search_positions; the final step tests membership in
-        the UNION of the expanded terms' position keys (expansion
+        the UNION of the expanded terms' token slots (expansion
         capped and ordered like every other rewrite). A single-word
         query degenerates to counting the expansions' occurrences per
-        doc: their per-term run lengths, summed by ``_grouped_topk``.
+        doc: their per-term run lengths, summed per document.
         The head words chain through ``_chain_step`` exactly as in
         :meth:`_phrase_occurrence_counts` (slot bitmaps for dense
-        words, key lists otherwise); the last step tests the chain
-        against every expansion — each sparse one's sorted keys and
+        words, slot lists otherwise); the last step tests the chain
+        against every expansion — each sparse one's sorted slots and
         each dense one's bitmap — and ORs the hits, so the
-        expansions' keys are never merged into one sorted union."""
-        import itertools
-
+        expansions' slots are never merged into one sorted union."""
         import numpy as np
 
         from rse_spark.tokenizer import tokenize
@@ -2443,43 +2440,34 @@ class DirectSearcher:
                                       max_expansions)
         if not expanded:
             return []
-        last = [
-            t for t in expanded if len(self._term_position_keys(t))
-        ]
-        if not last:
-            return []
-        shift = np.int64(self._pos_bits)
-        if not head:
-            # one position holds one token, so a doc's count is the sum
-            # of its expansions' run lengths
-            runs = [
-                _run_lengths(self._term_position_keys(t) >> shift)
-                for t in last
-            ]
-            hits = _grouped_topk(
-                np.concatenate([d for d, _c in runs]),
-                np.concatenate([c for _d, c in runs]).astype(np.float64),
-                k,
-            )
-            return [(d, int(c)) for d, c, _n in hits]
-        head = [self._chain_word(t) for t in head]
-        if not all(t_lists or t_bitmaps for t_lists, t_bitmaps in head):
-            return []  # a head word with no occurrences
-        space = self._slot_space()
-        cur = _chain_start(*head[0])
-        lists, bitmaps = [], []
-        for t in last:
-            t_lists, t_bitmaps = self._chain_word(t)
-            lists.extend(t_lists)
-            bitmaps.extend(t_bitmaps)
-        # the last step's word is ANY expanded term
-        for t_lists, t_bitmaps in itertools.chain(
-            head[1:], [(lists, bitmaps)],
-        ):
-            if cur.dtype == np.int64 and not len(cur):
-                return []
-            cur = _chain_step(space, cur, t_lists, t_bitmaps)
-        uniq, counts = _chain_counts(space, cur, shift)
+        none = (np.empty(0, dtype=np.int64),) * 2
+
+        def prefix_counts(space):
+            if not head:
+                # one position holds one token, so a doc's count is the
+                # sum of its expansions' run lengths
+                per_doc = sum(space.counts(self._term_slots(t, space))
+                              for t in expanded)
+                ranks = np.flatnonzero(per_doc)
+                return space.doc_ids(ranks), per_doc[ranks]
+            # the last step's word is ANY expanded term
+            lists, bitmaps = [], []
+            for t in expanded:
+                t_lists, t_bitmaps = self._chain_word(t, space)
+                lists.extend(t_lists)
+                bitmaps.extend(t_bitmaps)
+            chain = [self._chain_word(t, space) for t in head] + [
+                (lists, bitmaps)]
+            if not all(t_lists or t_bitmaps for t_lists, t_bitmaps in chain):
+                return none  # a word with no occurrences
+            cur = _chain_start(*chain[0])
+            for t_lists, t_bitmaps in chain[1:]:
+                if cur.dtype != np.uint64 and not len(cur):
+                    return none
+                cur = _chain_step(cur, t_lists, t_bitmaps)
+            return _chain_counts(space, cur)
+
+        uniq, counts = self._in_one_space(prefix_counts)
         return [
             (int(uniq[i]), int(counts[i])) for i in _topk(counts, k)
         ]
@@ -2492,13 +2480,17 @@ class DirectSearcher:
         ``max_dist`` tokens (Lucene NEAR); ``ordered=False`` is
         SpanNearQuery inOrder=false — the pair qualifies whichever
         word comes first (|gap| <= max_dist), counted once per
-        ``first`` occurrence. Pair counting is fully vectorized per
-        candidate: searchsorted window counts over the two position
-        arrays (the symmetric window cannot cross a doc boundary for
-        the same _POS_SLACK headroom reason the forward one cannot).
-        Raw query words are analyzed first; a word that splits into
-        several tokens is rejected (proximity over multi-token units
-        is a phrase query composition, not a pair query)."""
+        ``first`` occurrence. Fully vectorized on token slots: the
+        ``second`` occurrences in each ``first`` occurrence s's window
+        (s, s + max_dist] (ordered) or [s - max_dist, s + max_dist]
+        (unordered), clamped to s's document, are a pair of
+        searchsorted calls, summed per document over the run lengths
+        of ``first``'s slots. Raw query words are analyzed first; a
+        word that splits into several tokens is rejected (proximity
+        over multi-token units is a phrase query composition, not a
+        pair query)."""
+        import numpy as np
+
         from rse_spark.index.positions import _POS_SLACK
         from rse_spark.tokenizer import tokenize
 
@@ -2513,21 +2505,43 @@ class DirectSearcher:
             raise ValueError(
                 "proximity operands must each analyze to one token"
             )
-        uniq, sums = self._positions_pairs(t1[0], t2[0], max_dist,
-                                           ordered=ordered)
+        d = int(max_dist)
+
+        def pair_counts(space):
+            s1, s2 = (self._term_slots(t[0], space) for t in (t1, t2))
+            if not len(s1) or not len(s2):
+                return (np.empty(0, dtype=np.int64),) * 2
+            ranks, runs = space.runs(s1)
+            # a document's last slot is two before the next one's start
+            hi = np.minimum(s1 + d,
+                            np.repeat(space.start[ranks + 1] - 2, runs))
+            lo = s1 + 1 if ordered else np.maximum(
+                s1 - d, np.repeat(space.start[ranks], runs))
+            cnt = (np.searchsorted(s2, hi, side="right")
+                   - np.searchsorted(s2, lo))
+            if t1 == t2 and not ordered:
+                # same-term proximity: the symmetric window contains the
+                # occurrence itself (gap 0) — drop it, leaving each
+                # unordered pair counted from both sides, the same
+                # double-count the declarative positional join produces
+                cnt -= 1
+            sums = np.add.reduceat(cnt, np.cumsum(runs) - runs)
+            hit = np.flatnonzero(sums)
+            return space.doc_ids(ranks[hit]), sums[hit]
+
+        uniq, sums = self._in_one_space(pair_counts)
         return [(int(uniq[i]), int(sums[i])) for i in _topk(sums, k)]
 
     def phrase_chain_docs(self, phrase: str, max_gap: int = 1):
         """Sorted doc-id array of documents containing the phrase
         words IN ORDER with each successive gap <= ``max_gap`` tokens
         (1 = exact adjacency; this is the qlang ``\"…\"~N`` slop
-        atom's presence primitive). Vectorized chaining on packed
-        keys: a next-word occurrence q survives iff some current
-        occurrence p satisfies 0 < q - p <= max_gap — two
-        searchsorted calls per word. The underflow at q - max_gap
-        cannot cross into the previous document because
-        build_positions reserves _POS_SLACK positions of headroom
-        below 2^pos_bits — hence the cap on max_gap."""
+        atom's presence primitive). Vectorized chaining on token
+        slots: a next-word occurrence q survives iff its predecessor p
+        in the chain has max(q - max_gap, first slot of q's doc) <= p —
+        one searchsorted per word, the document clamp only where p is
+        within ``max_gap``. ``max_gap`` stays below _POS_SLACK, the
+        headroom the slot space keeps for window arithmetic."""
         import numpy as np
 
         from rse_spark.index.positions import _POS_SLACK
@@ -2541,173 +2555,135 @@ class DirectSearcher:
         terms = tokenize(phrase, self.analyzer)
         if not terms:
             raise ValueError("phrase has no indexable terms")
-        cur = self._term_position_keys(terms[0])
-        for t in terms[1:]:
-            if not len(cur):
-                break
-            kt = self._term_position_keys(t)
-            if not len(kt):
-                cur = kt
-                break
-            lo = np.searchsorted(cur, kt - max_gap, side="left")
-            hi = np.searchsorted(cur, kt, side="left")
-            cur = kt[hi > lo]
-        if not len(cur):
-            return np.empty(0, dtype=np.int64)
-        return _run_lengths(cur >> np.int64(self._pos_bits))[0]
 
-    def _positions_pairs(self, t1: str, t2: str, max_dist: int,
-                         ordered: bool = True):
-        """Fully vectorized pair counting on packed
-        (doc << pos_bits | pos) keys: for every occurrence of t1 the
-        number of t2 occurrences in its (pos, pos+max_dist] window
-        (ordered) or [pos-max_dist, pos+max_dist] window (unordered)
-        is a pair of searchsorted calls; window ends never cross the
-        doc boundary because build_positions reserves _POS_SLACK
-        positions of headroom above the longest document and max_dist
-        is capped below it — the backward window lands in the
-        PREVIOUS doc's reserved headroom, where no real position can
-        live, so it is equally safe."""
+        def chain_docs(space):
+            cur = self._term_slots(terms[0], space)
+            for t in terms[1:]:
+                if not len(cur):
+                    break
+                st = self._term_slots(t, space)
+                i = np.searchsorted(cur, st)
+                # cur[i - 1] is q's predecessor where i > 0
+                near = np.flatnonzero(
+                    (i > 0) & (cur[i - 1] >= st - int(max_gap)))
+                st, prev = st[near], cur[i[near] - 1]
+                ranks, runs = space.runs(st)
+                cur = st[prev >= np.repeat(space.start[ranks], runs)]
+            return _chain_counts(space, cur)[0]
+
+        return self._in_one_space(chain_docs)
+
+    def _in_one_space(self, fn, *args):
+        """``fn(space, *args)``: a query's terms all place their slots in
+        one slot space (:meth:`_slot_space`). Rows a writer committed
+        mid-query may not fit it; then, as in :meth:`_term_list`, the
+        replica reloads and runs ``fn`` once more."""
+        for retry in (False, True):
+            gen = self._gen_sig
+            try:
+                return fn(self._slot_space(), *args)
+            except ValueError as err:
+                if self._gen_stat() == gen:
+                    raise  # the index disagrees with itself
+                if retry:
+                    raise ValueError(
+                        "the positional sidecar was read across two "
+                        "writer commits in a row; retry the query"
+                    ) from err
+                self._check_generation()
+
+    def _term_slots(self, term: str, space):
+        """One analyzed term's occurrences as a strictly increasing,
+        read-only array of token slots in the query's slot ``space`` —
+        the one occurrence format of every positional surface. Each
+        sidecar row is decoded straight into one array sized up front,
+        sorted only when rows are out of doc order. A doc outside the
+        doc-length table, a position at or past its ``doc_len``, or a
+        repeated occurrence raises ValueError naming the term. Cached
+        (LRU, ``max_pos_bytes``, with a dense term's :meth:`_term_bitmap`)
+        while ``space`` is the replica's own (:meth:`_slot_space`);
+        the generation check clears the cache on writer commits."""
         import numpy as np
 
-        k1 = self._term_position_keys(t1)
-        k2 = self._term_position_keys(t2)
-        empty = (np.empty(0, dtype=np.int64),
-                 np.empty(0, dtype=np.int64))
-        if not len(k1) or not len(k2):
-            return empty
-        if ordered:
-            cnt = (
-                np.searchsorted(k2, k1 + max_dist, side="right")
-                - np.searchsorted(k2, k1, side="right")
-            )
-        else:
-            cnt = (
-                np.searchsorted(k2, k1 + max_dist, side="right")
-                - np.searchsorted(k2, k1 - max_dist, side="left")
-            )
-            if t1 == t2:
-                # same-term proximity: the symmetric window contains
-                # the occurrence itself (gap 0) — drop it, leaving
-                # each unordered pair counted from both sides, the
-                # same double-count the declarative positional join
-                # produces
-                cnt -= 1
-        keep = cnt > 0
-        if not keep.any():
-            return empty
-        uniq, runs = _run_lengths(k1[keep] >> np.int64(self._pos_bits))
-        return uniq, np.add.reduceat(cnt[keep], np.cumsum(runs) - runs)
-
-    def _term_position_keys(self, term: str):
-        """Sorted packed occurrence keys (doc_id << pos_bits) | pos for
-        one analyzed term. The bit split comes from the sidecar's
-        manifest record (build_positions sizes it from the real doc-id
-        and doc-length ranges and guarantees slack for query
-        arithmetic — round-5 VERDICT item 3 lifted the fixed
-        doc_id < 2^31 bound); the guards below re-check it against the
-        decoded data so a corrupted/mismatched sidecar fails loudly
-        instead of matching across documents, and when the generation
-        has a slot space (:meth:`_slot_space`) every position must be
-        below its doc's ``doc_len``. Decoded arrays are LRU-cached under
-        ``max_pos_keys_bytes`` so repeated phrase/NEAR terms skip the
-        parquet read + varint decode; a dense term's slot bitmap
-        (:meth:`_term_bitmap`) is charged to the same budget and leaves
-        with its keys. The generation check clears the cache on writer
-        commits. NEAR, slop and span_first read these keys only."""
-        import numpy as np
+        from rse_spark.index.positions import decode_position_list
 
         with self._meta_lock:
-            cached = self._pos_keys.get(term)
-            if cached is not None:
-                self._pos_keys.move_to_end(term)
+            cached = self._pos_slots.get(term)
+            if cached is not None and self._slots is space:
+                self._pos_slots.move_to_end(term)
                 return cached
-        rows, _ids = self._decode_positions_term(term)
-        pos_bits = self._pos_bits
-        parts = []
-        for doc_ids, lens, _starts, flat in rows:
-            if len(flat) and int(flat.max()) >> pos_bits:
-                raise ValueError(
-                    f"position {int(flat.max())} does not fit the "
-                    f"sidecar's {pos_bits}-bit position space"
-                )
-            if len(doc_ids) and int(doc_ids.max()) >> (63 - pos_bits):
-                raise ValueError(
-                    f"doc_id {int(doc_ids.max())} does not fit the "
-                    f"sidecar's {63 - pos_bits}-bit doc space"
-                )
-            parts.append(
-                (np.repeat(doc_ids, lens) << np.int64(pos_bits)) | flat
-            )
-        keys = (
-            np.sort(np.concatenate(parts))
-            if parts else np.empty(0, dtype=np.int64)
-        )
-        # the sorted-list intersection (_intersect_sorted) reads a
-        # pair of equal neighbours as a match, so a key list must be
-        # STRICTLY increasing: a repeated occurrence means a corrupt
-        # sidecar, and it must fail here rather than double-count
-        if not (keys[1:] > keys[:-1]).all():
+        payloads = self._position_payloads(term)
+        # one varint per position: count their last bytes
+        slots = np.empty(sum(
+            np.count_nonzero(np.frombuffer(pp, dtype=np.uint8) < 0x80)
+            for _dp, pp in payloads), dtype=space.dtype)
+        at = 0
+        for dp, pp in payloads:
+            at = space.put(slots, at, *decode_position_list(dp, pp), term)
+        if not (slots[1:] > slots[:-1]).all():
+            slots.sort()
+        # the sorted-list intersection (_intersect_sorted) reads equal
+        # neighbours as a match: a repeated occurrence must fail here
+        # rather than double-count
+        if at != len(slots) or not (slots[1:] > slots[:-1]).all():
             raise ValueError(
-                f"positional sidecar repeats an occurrence of "
-                f"{term!r} — rebuild it with build_positions"
+                f"positional sidecar repeats an occurrence of {term!r} or "
+                f"lists one in no document — rebuild it with build_positions"
             )
-        if space := self._slot_space():
-            space.check(keys, term)
+        slots.flags.writeable = False
         with self._meta_lock:
-            if term not in self._pos_keys:
-                self._pos_keys[term] = keys
-                self._pos_keys_bytes += keys.nbytes
-                self._evict_pos_keys()
-        return keys
+            if term not in self._pos_slots and self._slots is space:
+                self._pos_slots[term] = slots
+                self._pos_bytes += slots.nbytes
+                self._evict_pos_slots()
+        return slots
 
-    def _chain_word(self, term: str):
+    def _chain_word(self, term: str, space):
         """``(lists, bitmaps)`` of one word for ``_chain_step``: a dense
-        term's bitmap and no key list, a sparse term's keys and no
+        term's bitmap and no slot list, a sparse term's slots and no
         bitmap, or neither for a term with no occurrences."""
-        keys = self._term_position_keys(term)
-        bits = self._term_bitmap(term, keys)
+        slots = self._term_slots(term, space)
+        bits = self._term_bitmap(term, slots, space)
         if bits is not None:
             return (), (bits,)
-        return ((keys,) if len(keys) else ()), ()
+        return ((slots,) if len(slots) else ()), ()
 
-    def _term_bitmap(self, term: str, keys):
-        """The slot bitmap of a dense term (kernel._SlotSpace), or None
-        for a sparse term or when the generation has no slot space.
-        Dense means the bitmap (n_slots / 64 words) is no larger than
-        the term's key list. Built lazily from ``keys`` (the term's
-        ``_term_position_keys``) in bounded chunks, memoized while
-        those keys are, and charged to ``max_pos_keys_bytes``."""
-        space = self._slot_space()
-        if not space or not space.dense(len(keys)):
+    def _term_bitmap(self, term: str, slots, space):
+        """The slot bitmap of a dense term (kernel._SlotSpace.dense), or
+        None. Built lazily from ``slots`` (the term's :meth:`_term_slots`
+        in ``space``) in bounded chunks, memoized while those slots are,
+        and charged to ``max_pos_bytes``."""
+        if not space.dense(len(slots)):
             return None
         with self._meta_lock:
-            bits = self._pos_bitmaps.get(term)
+            bits = (self._pos_bitmaps.get(term)
+                    if self._pos_slots.get(term) is slots else None)
         if bits is not None:
             return bits
-        bits = space.bitmap(keys)
+        bits = space.bitmap(slots)
+        bits.flags.writeable = False
         with self._meta_lock:
-            if (self._pos_keys.get(term) is keys
+            if (self._pos_slots.get(term) is slots
                     and term not in self._pos_bitmaps):
                 self._pos_bitmaps[term] = bits
-                self._pos_keys_bytes += bits.nbytes
-                self._pos_keys.move_to_end(term)
-                self._evict_pos_keys()
+                self._pos_bytes += bits.nbytes
+                self._pos_slots.move_to_end(term)
+                self._evict_pos_slots()
         return bits
 
-    def _evict_pos_keys(self) -> None:
-        """Drop least recently used terms' keys, with their bitmaps,
-        until the memo fits ``max_pos_keys_bytes`` or holds one term.
+    def _evict_pos_slots(self) -> None:
+        """Drop least recently used terms' slots, with their bitmaps,
+        until the memo fits ``max_pos_bytes`` or holds one term.
         Caller holds ``_meta_lock``."""
         while (
-            len(self._pos_keys) > 1
-            and self._pos_keys_bytes > self.max_pos_keys_bytes
+            len(self._pos_slots) > 1
+            and self._pos_bytes > self.max_pos_bytes
         ):
-            t, old = self._pos_keys.popitem(last=False)
-            self._pos_keys_bytes -= old.nbytes
+            t, old = self._pos_slots.popitem(last=False)
+            self._pos_bytes -= old.nbytes
             bits = self._pos_bitmaps.pop(t, None)
             if bits is not None:
-                self._pos_keys_bytes -= bits.nbytes
+                self._pos_bytes -= bits.nbytes
 
     def _doc_lens(self) -> _DocLens:
         """This generation's per-document lengths (kernel._DocLens), the
@@ -2743,18 +2719,18 @@ class DirectSearcher:
                 self._lens = lens
         return lens
 
-    def _slot_space(self):
-        """This generation's dense token slots (kernel._SlotSpace),
-        built once per generation from :meth:`_doc_lens`, or False when
-        the doc-id range is not compact (the same width rule as
-        ``_grouped_topk``) — phrases then chain on key lists only."""
+    def _slot_space(self) -> _SlotSpace:
+        """This generation's token slots (kernel._SlotSpace), built once
+        per generation from :meth:`_doc_lens`, with _POS_SLACK slots of
+        headroom for the window arithmetic of NEAR and slop."""
         with self._meta_lock:
             if self._slots is not None:
                 return self._slots
             gen = self._gen_sig
+        from rse_spark.index.positions import _POS_SLACK
+
         lens = self._doc_lens()
-        space = _SlotSpace(lens, self._pos_bits) if lens.ids is None \
-            else False
+        space = _SlotSpace(lens, _POS_SLACK)
         with self._meta_lock:
             if self._gen_sig == gen and self._lens is lens:
                 self._slots = space
@@ -2796,7 +2772,6 @@ class DirectSearcher:
             )) as f:
                 rec = _json.load(f)
             built_with = rec.get("analyzer")
-            self._pos_bits = int(rec.get("pos_bits", 32))
         except (OSError, ValueError):
             built_with = None  # pre-manifest layout: nothing to check
         if built_with is not None and built_with != self.analyzer:
@@ -2824,40 +2799,21 @@ class DirectSearcher:
         if gen_file_sig is not None:
             self._pos_checked_sig = sig
 
-    def _decode_positions_term(self, term: str):
-        """Decode one term's positional rows:
-        ([(doc_ids, lens, starts, flat)], all_doc_ids) — shared by the
-        phrase and proximity paths; empty results for an absent
+    def _position_payloads(self, term: str) -> "list[tuple[bytes, bytes]]":
+        """One term's positional sidecar rows as (doc_payload,
+        pos_payload) pairs, one per segment group; empty for an absent
         term."""
-        import numpy as np
-
-        from rse_spark.index.positions import decode_position_list
-
-        pos_root = os.path.join(self.root, "positions")
         info = self.term_dict.get(term)
         if not info:
-            return [], np.empty(0, dtype=np.int64)
+            return []
         tbl = pq.read_table(
-            pos_root,
+            os.path.join(self.root, "positions"),
             filters=[("bucket", "==", info[1]), ("term", "==", term)],
             columns=["doc_payload", "pos_payload"],
         )
-        rows, ids_parts = [], []
-        for dp, pp in zip(
-            tbl["doc_payload"].to_pylist(),
-            tbl["pos_payload"].to_pylist(),
-        ):
-            doc_ids, lens, flat = decode_position_list(
-                bytes(dp), bytes(pp)
-            )
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            rows.append((doc_ids, lens, starts, flat))
-            ids_parts.append(doc_ids)
-        all_ids = (
-            np.unique(np.concatenate(ids_parts))
-            if ids_parts else np.empty(0, dtype=np.int64)
-        )
-        return rows, all_ids
+        return list(zip(
+            tbl["doc_payload"].to_pylist(), tbl["pos_payload"].to_pylist()
+        ))
 
     def _key_map(self, ids: list[int], key_col: "str | None",
                  fetch_stats: "dict[str, int] | None" = None

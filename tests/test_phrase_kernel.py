@@ -3,8 +3,8 @@ run-length counting, the one numpy top-k and the slot-bitmap helpers
 (query/kernel.py), checked against brute-force references — first the
 helpers on seeded random arrays, then every positional surface on small
 seeded corpora whose per-doc answers are recounted from the token lists:
-dense terms chain as slot bitmaps, sparse ones as key lists, and an
-index with a non-compact doc-id range chains on lists only."""
+dense terms chain as slot bitmaps, sparse ones as slot lists, and an
+index with a non-compact doc-id range ranks its documents by id."""
 
 from __future__ import annotations
 
@@ -165,43 +165,58 @@ def test_range_counts_matches_brute_force():
         [0, int(_bools(bits)[64:128].sum())]
 
 
+def _slots_of(space, ids, toks, t):
+    """Sorted slots of term ``t`` in documents ``toks`` (ids ``ids``),
+    written by ``_SlotSpace.put`` one document per row."""
+    out = np.empty(sum(int((doc == t).sum()) for doc in toks),
+                   dtype=space.dtype)
+    at = 0
+    for d, doc in zip(ids, toks):
+        pos = np.flatnonzero(doc == t)
+        if len(pos):
+            at = space.put(out, at, np.array([d]), np.array([len(pos)]),
+                           pos, t)
+    return out
+
+
 @pytest.mark.parametrize("seed", range(3))
 def test_chain_step_any_of_several_terms(seed):
-    """A step whose next word is any of several terms — key lists,
-    bitmaps, or both, from a key-list or a bitmap chain — keeps exactly
+    """A step whose next word is any of several terms — slot lists,
+    bitmaps, or both, from a slot-list or a bitmap chain — keeps exactly
     the occurrences that directly follow the chain, never across a
     document boundary."""
     rng = np.random.default_rng(seed)
     lens = rng.integers(1, 40, 30)
     ids = np.arange(30) + 5
-    space = _SlotSpace(_DocLens(ids, lens), 32)
+    space = _SlotSpace(_DocLens(ids, lens))
     toks = [rng.choice(list("abcd"), size=n) for n in lens]
-    keys = {
-        t: np.array([(int(d) << 32) | p for d, doc in zip(ids, toks)
-                     for p in np.flatnonzero(doc == t)], dtype=np.int64)
-        for t in "abcd"
-    }
+    slot_of = {t: _slots_of(space, ids, toks, t) for t in "abcd"}
+    # (doc, position) of every slot, to recount adjacency by hand
+    where = {int(space.start[i]) + p: (int(d), p)
+             for i, (d, n) in enumerate(zip(ids, lens)) for p in range(n)}
 
     def slots(x):
-        if x.dtype == np.int64:
-            return set(space.slots(x).tolist())
+        if x.dtype != np.uint64:
+            return set(x.tolist())
         return set(np.flatnonzero(_bools(x)).tolist())
 
-    for cur in (keys["a"], space.bitmap(keys["a"])):
+    for cur in (slot_of["a"], space.bitmap(slot_of["a"])):
         for lists in ((), ("b",), ("b", "c")):
             for bitmaps in ((), ("d",), ("d", "a")):
                 if not (lists or bitmaps):
                     continue
+                nxt = set().union(*(slots(slot_of[t]) for t in
+                                    lists + bitmaps))
                 want = {
-                    s + 1 for s in slots(cur)
-                    if s + 1 in set().union(*(slots(keys[t]) for t in
-                                              lists + bitmaps))
+                    s + 1 for s in slots(cur) if s + 1 in nxt
+                    and where[s + 1] == (where[s][0], where[s][1] + 1)
                 }
                 got = _chain_step(
-                    space, cur, [keys[t] for t in lists],
-                    [space.bitmap(keys[t]) for t in bitmaps])
+                    cur, [slot_of[t] for t in lists],
+                    [space.bitmap(slot_of[t]) for t in bitmaps])
                 assert slots(got) == want, (cur.dtype, lists, bitmaps)
-                if got.dtype == np.int64:
+                if got.dtype != np.uint64:
+                    assert got.dtype == space.dtype == np.int32
                     assert (np.diff(got) > 0).all()
 
 
@@ -264,8 +279,9 @@ def test_phrase_search_matches_brute_force(small):
             assert s.phrase_search_positions(p, k=k) == _ranked(want, k), \
                 (p, k)
     # the long-vs-short cases really are long vs short
-    n_alpha = len(s._term_position_keys("alpha"))
-    assert n_alpha >= _GALLOP_RATIO * len(s._term_position_keys("rare"))
+    space = s._slot_space()
+    n_alpha = len(s._term_slots("alpha", space))
+    assert n_alpha >= _GALLOP_RATIO * len(s._term_slots("rare", space))
     # ties at the k-th count exist and resolve by doc id
     counts = sorted(
         _phrase_counts(docs, ["alpha", "rare"]).values(), reverse=True
@@ -303,24 +319,31 @@ def test_span_first_matches_brute_force(small):
                 _ranked(want, k)
 
 
+def _near_counts(docs, a, b, dist, ordered):
+    """Per doc: for each ``a``, the ``b`` within ``dist`` tokens after
+    it (ordered) or on either side of it (unordered), itself excluded."""
+    want = {}
+    for d, toks in enumerate(docs):
+        n = 0
+        for i, t in enumerate(toks):
+            if t != a:
+                continue
+            lo = i + 1 if ordered else i - dist
+            n += sum(
+                toks[j] == b and j != i
+                for j in range(max(lo, 0), min(i + dist + 1, len(toks)))
+            )
+        want[d] = n
+    return want
+
+
 def test_near_matches_brute_force(small):
     s, docs = small
     for a, b, dist, ordered in [("alpha", "rare", 3, True),
                                 ("rare", "alpha", 2, False),
                                 ("alpha", "alpha", 2, False),
                                 ("gamma", "beta", 5, True)]:
-        want = {}
-        for d, toks in enumerate(docs):
-            n = 0
-            for i, t in enumerate(toks):
-                if t != a:
-                    continue
-                lo = i + 1 if ordered else i - dist
-                n += sum(
-                    toks[j] == b and j != i
-                    for j in range(max(lo, 0), min(i + dist + 1, len(toks)))
-                )
-            want[d] = n
+        want = _near_counts(docs, a, b, dist, ordered)
         for k in (3, 10**6):
             assert s.near_search_positions(
                 a, b, dist, k=k, ordered=ordered
@@ -369,13 +392,50 @@ def test_dense_terms_carry_bitmaps(small):
     assert space.n_words == (1 + sum(len(d) + 1 for d in docs)) // 64 + 1
     dense = {
         t for t in VOCAB
-        if s._term_bitmap(t, s._term_position_keys(t)) is not None
+        if s._term_bitmap(t, s._term_slots(t, space), space) is not None
     }
     assert "alpha" in dense and "rare" not in dense
     assert dense == {
         t for t in VOCAB
-        if len(s._term_position_keys(t)) >= space.n_words
+        if len(s._term_slots(t, space)) >= space.n_words
     }
+    # the memo's slot lists and bitmaps are read-only and int32 here
+    for t in VOCAB:
+        slots = s._term_slots(t, space)
+        assert slots.dtype == space.dtype == space.start.dtype == np.int32
+        assert not slots.flags.writeable
+    alpha = s._term_slots("alpha", space)
+    assert not s._term_bitmap("alpha", alpha, space).flags.writeable
+
+
+def test_slot_searches_never_cast(small, monkeypatch):
+    """Every binary search of a positional surface runs with needles and
+    haystack of one dtype: an int64 needle against int32 slots would
+    cast the whole haystack on every call."""
+    s, _docs = small
+    search = np.searchsorted
+    mixed = []
+
+    def spy(a, v, *args, **kw):
+        a, v = np.asarray(a), np.asarray(v)
+        if np.int32 in (a.dtype, v.dtype) and a.dtype != v.dtype:
+            mixed.append((a.dtype, v.dtype))
+        return search(a, v, *args, **kw)
+
+    monkeypatch.setattr(np, "searchsorted", spy)
+    for p in PHRASES + CHAINS:
+        s.phrase_search_positions(p, k=5)
+        s.phrase_chain_docs(p, max_gap=3)
+        s.phrase_prefix_search(p[:-1], k=5)
+        s.search_rescored(p, p, k=5, window=20)
+    for a, b in [("alpha", "rare"), ("rare", "rare"), ("beta", "alpha")]:
+        for ordered in (True, False):
+            s.near_search_positions(a, b, 4, ordered=ordered)
+    for w in VOCAB:
+        s.span_first_search(w, 2)
+        s.span_first_search(w, 50)
+        s.phrase_prefix_search(w[:2])
+    assert s._slot_space().dtype == np.int32 and not mixed, mixed
 
 
 def test_chain_pairings_match_brute_force(small, monkeypatch):
@@ -383,9 +443,9 @@ def test_chain_pairings_match_brute_force(small, monkeypatch):
     seen = set()
     step = serve._chain_step
 
-    def spy(space, cur, keys, bitmaps=()):
+    def spy(cur, lists, bitmaps=()):
         seen.add((cur.dtype == np.uint64, bool(bitmaps)))
-        return step(space, cur, keys, bitmaps)
+        return step(cur, lists, bitmaps)
 
     monkeypatch.setattr(serve, "_chain_step", spy)
     hits = 0
@@ -449,11 +509,12 @@ def cut(spark, tmp_path_factory):
 def test_density_cut_and_spacers(cut):
     s, docs, n_words = cut
     s.phrase_search_positions("edge edger")
-    assert s._slot_space().n_words == n_words
-    edge, edger = (s._term_position_keys(t) for t in ("edge", "edger"))
+    space = s._slot_space()
+    assert space.n_words == n_words
+    edge, edger = (s._term_slots(t, space) for t in ("edge", "edger"))
     assert (len(edge), len(edger)) == (n_words, n_words - 1)
-    assert s._term_bitmap("edge", edge) is not None
-    assert s._term_bitmap("edger", edger) is None
+    assert s._term_bitmap("edge", edge, space) is not None
+    assert s._term_bitmap("edger", edger, space) is None
     stream = [t for d in docs for t in d]
     for a, b in JOINTS:
         want = _phrase_counts(docs, [a, b])
@@ -470,8 +531,8 @@ def test_density_cut_and_spacers(cut):
         assert s.phrase_search_positions(p, k=10**6) == \
             _ranked(want, 10**6), p
     # "edge" expands to edge (a bitmap) and edger (a list)
-    assert [bool(s._chain_word(t)[1]) for t in s.expand_prefix("edge")] \
-        == [True, False]
+    assert [bool(s._chain_word(t, space)[1])
+            for t in s.expand_prefix("edge")] == [True, False]
     for head, pre in [(["f0"], "edge"), (["edger"], "ed"),
                       (["edge"], "edg"), (["f0", "edge"], "e"),
                       (["edge", "edge"], "f"), (["edger", "f2"], "f")]:
@@ -493,7 +554,8 @@ SPREAD = 100_003
 @pytest.fixture(scope="module")
 def spread(spark, tmp_path_factory, small):
     """``small``'s documents under doc ids SPREAD apart: the id range is
-    far wider than the doc count, so the replica builds no slot space."""
+    far wider than the doc count, so the replica's slot space ranks the
+    documents by id."""
     _s, docs = small
     root = str(tmp_path_factory.mktemp("spread_idx"))
     return _build(spark, root, docs,
@@ -501,44 +563,51 @@ def spread(spark, tmp_path_factory, small):
                   docs_per_segment=1 << 20, segments_per_group=8)
 
 
-def test_non_compact_ids_chain_on_lists(small, spread):
+def test_non_compact_ids_chain_on_rank_slots(small, spread):
     s, _docs = small
     for p in PHRASES + CHAINS:
         assert spread.phrase_search_positions(p, k=10**6) == [
             (d * SPREAD, n) for d, n in s.phrase_search_positions(p, k=10**6)
         ], p
-    for q in ("alpha be", "rare alpha a", "alpha alpha g"):
+    for q in ("alpha be", "rare alpha a", "alpha alpha g", "be", "a"):
         assert spread.phrase_prefix_search(q, k=10**6) == [
             (d * SPREAD, n) for d, n in s.phrase_prefix_search(q, k=10**6)
         ], q
-    assert spread._slot_space() is False
-    assert not spread._pos_bitmaps
+    space = spread._slot_space()
+    assert space.ids is not None and space.dtype == np.int32
+    assert np.array_equal(space.start, s._slot_space().start)
+    # the same terms are dense as under compact ids: exactly those with
+    # at least one occurrence per 64 slots
+    assert set(spread._pos_bitmaps) == {
+        t for t in VOCAB
+        if len(spread._term_slots(t, space)) >= space.n_words
+    } >= {"alpha"}
 
 
 def test_bitmaps_evicted_with_keys_within_budget(small):
-    """Under a small ``max_pos_keys_bytes`` a term's bitmap leaves with
+    """Under a small ``max_pos_bytes`` a term's bitmap leaves with
     its keys, the held total (keys + bitmaps) stays within the budget,
     and counts stay exact."""
     s0, docs = small
     s0.phrase_search_positions(" ".join(VOCAB))
     size = {
-        t: s0._pos_keys[t].nbytes
+        t: s0._pos_slots[t].nbytes
         + (s0._pos_bitmaps[t].nbytes if t in s0._pos_bitmaps else 0)
         for t in VOCAB
     }
     assert "alpha" in s0._pos_bitmaps
     s = DirectSearcher(s0.root, analyzer="simple")
-    s.max_pos_keys_bytes = size["alpha"] + size["rare"]
+    s.max_pos_bytes = size["alpha"] + size["rare"]
     built = []  # held, so a freed bitmap's id cannot name a new one
     for _ in range(2):
         for p in PHRASES + CHAINS:
             want = _phrase_counts(docs, p.split())
             assert s.phrase_search_positions(p, k=10**6) == \
                 _ranked(want, 10**6), p
-            assert set(s._pos_bitmaps) <= set(s._pos_keys)
-            held = sum(k.nbytes for k in s._pos_keys.values()) + sum(
+            assert set(s._pos_bitmaps) <= set(s._pos_slots)
+            held = sum(k.nbytes for k in s._pos_slots.values()) + sum(
                 b.nbytes for b in s._pos_bitmaps.values())
-            assert held == s._pos_keys_bytes <= s.max_pos_keys_bytes
+            assert held == s._pos_bytes <= s.max_pos_bytes
             built.extend(s._pos_bitmaps.values())
     # alpha's bitmap was evicted and rebuilt, not kept beside the budget
     assert len({id(b) for b in built}) > len(VOCAB)
@@ -568,7 +637,7 @@ def test_doc_len_shorter_than_position_raises(small, tmp_path, source):
     s = DirectSearcher(root, analyzer="simple")
     with pytest.raises(ValueError, match="doc_len"):
         s.phrase_search_positions("alpha beta", k=5)
-    assert not s._pos_keys  # nothing unchecked was cached
+    assert not s._pos_slots  # nothing unchecked was cached
 
 
 def test_slot_space_follows_upsert_generation(spark, tmp_path_factory):
@@ -624,3 +693,197 @@ def test_slot_space_follows_upsert_generation(spark, tmp_path_factory):
     assert space is not old_space and space.n_words > old_space.n_words
     assert live._pos_bitmaps["alpha"] is not old_bits
     assert len(live._pos_bitmaps["alpha"]) == space.n_words
+
+
+def test_slot_dtype_follows_the_space():
+    """Slots are int32 while the space plus its window headroom stays
+    below 2^31, else int64 — and int64 slots map back to the right
+    documents. The huge space is a few documents with huge lengths, so
+    nothing here allocates per slot."""
+    slack = 4096
+    huge = _SlotSpace(_DocLens([7, 9, 12], [2**30, 2**30, 5]), slack)
+    assert huge.dtype == huge.start.dtype == np.int64
+    assert int(huge.start[-1]) > 2**31
+    out = np.empty(6, dtype=huge.dtype)
+    at = huge.put(out, 0, np.array([7, 9]), np.array([2, 1]),
+                  np.array([0, 2**30 - 1, 2**30 - 1]), "t")
+    at = huge.put(out, at, np.array([12]), np.array([3]),
+                  np.array([0, 3, 4]), "t")
+    assert at == 6 and (out[1:] > out[:-1]).all() and out[-1] > 2**31
+    ranks, counts = huge.runs(out)
+    assert huge.doc_ids(ranks).tolist() == [7, 9, 12]
+    assert counts.tolist() == [2, 1, 3]
+    assert huge.doc_ids(huge.rank(out)).tolist() == [7, 7, 9, 12, 12, 12]
+    with pytest.raises(ValueError, match="'t' at a position past"):
+        huge.put(out, 0, np.array([12]), np.array([1]), np.array([5]), "t")
+    with pytest.raises(ValueError, match="'t' in a doc outside"):
+        huge.put(out, 0, np.array([13]), np.array([1]), np.array([0]), "t")
+    # the headroom decides at the edge
+    n = 2**31 - slack - 2  # start[-1] == n + 2
+    assert _SlotSpace(_DocLens([0], [n - 1]), slack).dtype == np.int32
+    assert _SlotSpace(_DocLens([0], [n]), slack).dtype == np.int64
+    assert _SlotSpace(_DocLens([0], [n]), 0).dtype == np.int32
+    normal = _SlotSpace(_DocLens(np.arange(100), np.full(100, 50)), slack)
+    assert normal.dtype == np.int32
+    # per-document counts below an end, from a list longer than the
+    # starts (searched) and shorter (ranked); an end past every document
+    # counts them whole
+    slots = (normal.start[:3, None] + np.arange(50)).ravel()
+    for part, end, want in [(slots, 7, [7] * 3), (slots, 2**40, [50] * 3),
+                            (slots[:60], 2**40, [50, 10]),
+                            (slots[:60], 12, [12, 10])]:
+        got = normal.counts(part, end)
+        assert got[:len(want)].tolist() == want and not got[3:].any()
+    # ids far apart are ranked by id: the same slots, int32
+    ranked = _SlotSpace(_DocLens([2**40, 2**41 + 5, 2**33], [3, 0, 4]),
+                        slack)
+    assert ranked.ids is not None and ranked.dtype == np.int32
+    assert ranked.start.tolist() == [1, 6, 10, 11]
+    assert ranked.doc_ids(ranked.rank(np.array(
+        [1, 4, 6, 8], dtype=np.int32))).tolist() == [2**33] * 2 + [2**40] * 2
+
+
+# ---------------------------------------------------------------------------
+# Document boundaries: every positional surface against brute force on a
+# corpus of very short documents (lengths 0 and 1 included) whose first
+# and last tokens are often the same term, under compact ids and under
+# ids past 2^31 that are far apart (a rank-indexed slot space), with
+# windows up to the largest the surfaces accept.
+# ---------------------------------------------------------------------------
+
+EDGE_VOCAB = ["ax", "ay", "bx", "cx", "zx"]
+EDGE_GAPS = (1, 2, 3, 4095)
+
+
+def _build_far(spark, root, docs):
+    """``docs`` appended in two stream batches whose id ranges start
+    past 2^31 and lie far apart, so the id range is not compact; returns
+    the replica and each document's index id."""
+    from rse_spark.index.storage import IndexStorage
+    from rse_spark.streaming.stream_index import append_batch
+
+    store = IndexStorage(root)
+    per_group = 16 * 2
+    half = len(docs) // 2
+    for batch, (g, part) in enumerate([
+        (2**31 // per_group + 7, range(half)),
+        (2**31 // per_group + 50_000, range(half, len(docs))),
+    ]):
+        # a placeholder group: the batch claims the groups above it
+        store.mark_done(
+            f"group={g:06d}", seg_group=g, doc_lo=g * per_group,
+            doc_hi=(g + 1) * per_group, rows=0, n_postings=0, sha="",
+            source_snapshot="synthetic-id-space-placeholder", wall_ms=0,
+        )
+        append_batch(spark, spark.createDataFrame(pd.DataFrame({
+            "doc_id": list(part),
+            "text": [" ".join(docs[i]) for i in part],
+        })), root, analyzer="simple", content_col="text",
+            docs_per_segment=16, segments_per_group=2, batch_id=batch,
+            with_positions=True)
+    tbl = pads.dataset(os.path.join(root, "enriched"),
+                       partitioning="hive").to_table(
+        columns=["doc_id", "src_doc_id"])
+    id_of = dict(zip(tbl["src_doc_id"].to_pylist(),
+                     tbl["doc_id"].to_pylist()))
+    return DirectSearcher(root, analyzer="simple"), [
+        id_of.get(i, -1 - i) for i in range(len(docs))]
+
+
+@pytest.fixture(scope="module")
+def edges(spark, tmp_path_factory):
+    rng = np.random.default_rng(2024)
+    lens = rng.choice([0, 1, 1, 2, 3, 5, 8, 13], size=80)
+    docs = [list(rng.choice(EDGE_VOCAB, size=int(n),
+                            p=[0.35, 0.1, 0.3, 0.2, 0.05])) for n in lens]
+    for d in docs[::3]:
+        if d:
+            d[0] = d[-1] = "ax"
+    # a few long documents make ax dense enough that span_first probes
+    # its bitmap for ends past the short documents' lengths
+    for i in (10, 30, 50, 70):
+        docs.insert(i, ["ax"] * 60 + ["bx"] + ["ax"] * 59)
+    compact = _build(spark, str(tmp_path_factory.mktemp("edge_compact")),
+                     docs, docs_per_segment=16, segments_per_group=2)
+    far = _build_far(spark, str(tmp_path_factory.mktemp("edge_far")), docs)
+    return {"compact": (compact, range(len(docs))), "far": far}, docs
+
+
+def _slop_docs(docs, words, gap):
+    """Docs holding ``words`` in order, each within ``gap`` tokens after
+    the one before."""
+    out = []
+    for d, toks in enumerate(docs):
+        cur = {i for i, t in enumerate(toks) if t == words[0]}
+        for w in words[1:]:
+            cur = {j for j, t in enumerate(toks)
+                   if t == w and any(0 < j - i <= gap for i in cur)}
+        if cur:
+            out.append(d)
+    return out
+
+
+@pytest.mark.parametrize("layout", ["compact", "far"])
+def test_windows_never_cross_documents(edges, layout):
+    built, docs = edges
+    s, ids = built[layout]
+
+    def mapped(counts):
+        return _ranked({ids[d]: n for d, n in counts.items()}, 10**6)
+
+    space = s._slot_space()
+    assert (space.ids is None) == (layout == "compact")
+    for p in ["ax ax", "ax bx", "bx ax", "ax ax ax", "cx ax bx", "zx ax"]:
+        assert s.phrase_search_positions(p, k=10**6) == \
+            mapped(_phrase_counts(docs, p.split())), p
+    for a, b in [("ax", "bx"), ("bx", "ax"), ("ax", "ax"), ("zx", "ax")]:
+        for dist in EDGE_GAPS:
+            for ordered in (True, False):
+                assert s.near_search_positions(
+                    a, b, dist, k=10**6, ordered=ordered
+                ) == mapped(_near_counts(docs, a, b, dist, ordered)), \
+                    (a, b, dist, ordered)
+    for p in ["ax bx", "bx ax", "ax ax", "ax bx cx", "zx zx"]:
+        for gap in EDGE_GAPS:
+            got = s.phrase_chain_docs(p, max_gap=gap)
+            assert got.tolist() == sorted(
+                ids[d] for d in _slop_docs(docs, p.split(), gap)
+            ), (p, gap)
+    # bitmap probes (dense words, short ends) and slot counts (the rest)
+    for word in ["ax", "cx", "zx"]:
+        for end in (1, 2, 3, 30, 4095):
+            assert s.span_first_search(word, end, k=10**6) == mapped(
+                {d: toks[:end].count(word) for d, toks in enumerate(docs)}
+            ), (word, end)
+    # ax up to end 3 is probed in its bitmap; end 30 counts its slots
+    ax = s._term_slots("ax", space)
+    assert s._term_bitmap("ax", ax, space) is not None
+    assert 3 * (len(space.start) - 1) < len(ax) < 30 * len(space.start)
+    for head, pre in [([], "a"), ([], "b"), (["ax"], "a"), (["bx"], "a"),
+                      (["ax", "ax"], "b"), (["cx", "zx"], "a")]:
+        want = {
+            d: sum(
+                toks[i:i + len(head)] == head
+                and toks[i + len(head)].startswith(pre)
+                for i in range(len(toks) - len(head))
+            )
+            for d, toks in enumerate(docs)
+        }
+        assert s.phrase_prefix_search(" ".join(head + [pre]), k=10**6) \
+            == mapped(want), (head, pre)
+    for q, p in [("ax", "ax ax"), ("bx cx", "bx ax"), ("zx", "ax bx")]:
+        n_of = {ids[d]: n for d, n in _phrase_counts(docs, p.split()).items()}
+        want = sorted(
+            ((d, sc + 2.0 * n_of[d], m, n_of[d])
+             for d, sc, m in s.search(q, k=40)),
+            key=lambda r: (-r[1], r[0]),
+        )[:20]
+        got = s.search_rescored(q, p, k=20, window=40, weight=2.0)
+        assert [(d, m, n) for d, _s, m, n in got] == \
+            [(d, m, n) for d, _s, m, n in want], (q, p)
+        for g, w in zip(got, want):
+            assert abs(g[1] - w[1]) < 1e-9
+    # the corpus does put pairs across document boundaries
+    stream = [t for d in docs for t in d]
+    assert sum(_near_counts([stream], "ax", "ax", 3, False).values()) > \
+        sum(_near_counts(docs, "ax", "ax", 3, False).values())

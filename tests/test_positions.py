@@ -238,19 +238,19 @@ def test_position_key_cache(spark, pos_index):
 
     s = DirectSearcher(pos_index, analyzer="simple")
     r1 = s.phrase_search_positions("the data", k=5)
-    assert len(s._pos_keys) >= 2  # 'the' and 'data' cached
+    assert len(s._pos_slots) >= 2  # 'the' and 'data' cached
     assert s.phrase_search_positions("the data", k=5) == r1  # hit path
     # eviction under a tiny budget keeps at least the newest entry
-    s.max_pos_keys_bytes = 1
+    s.max_pos_bytes = 1
     s.near_search_positions("merge", "join", 5, k=5)
-    assert len(s._pos_keys) == 1
+    assert len(s._pos_slots) == 1
     # a writer commit clears the cache via the generation check
-    s.max_pos_keys_bytes = 256 << 20
+    s.max_pos_bytes = 256 << 20
     s.phrase_search_positions("the data", k=5)
-    assert len(s._pos_keys) >= 1
+    assert len(s._pos_slots) >= 1
     IndexStorage(pos_index).bump_generation()
     s.search("the", k=1)  # any query path runs the generation check
-    assert len(s._pos_keys) == 0
+    assert len(s._pos_slots) == 0
 
 
 def test_near_search_matches_declarative(spark, pos_index):
@@ -559,18 +559,18 @@ def test_positions_coverage_memo(pos_index, tmp_path):
 
 def test_corrupt_position_keys_raise(pos_index):
     """A sidecar that repeats an occurrence would make the merge
-    intersection double-count; the key list is rejected on load."""
+    intersection double-count; the slot list is rejected on load."""
     s = DirectSearcher(pos_index, analyzer="simple")
-    decode = s._decode_positions_term
+    read = s._position_payloads
 
     def doubled(term):
-        rows, ids = decode(term)
-        return rows + rows, ids  # every occurrence listed twice
+        rows = read(term)
+        return rows + rows  # every occurrence listed twice
 
-    s._decode_positions_term = doubled
+    s._position_payloads = doubled
     with pytest.raises(ValueError, match="repeats an occurrence"):
         s.phrase_search_positions("the data", k=5)
-    assert not s._pos_keys  # nothing corrupt was cached
+    assert not s._pos_slots  # nothing corrupt was cached
 
 
 # ---------------------------------------------------------------------------
@@ -729,11 +729,12 @@ def test_keyless_batch_maintains_folded_sidecar(spark, tmp_path):
 
 
 def test_positions_doc_ids_beyond_2_31(spark, tmp_path):
-    """Packed positional keys must survive doc ids past 2^31 (the old
-    fixed 32/32 bit split silently required doc_id < 2^31 — round-5
-    VERDICT item 3). Simulated as a stream-grown index whose id space
-    has already consumed 2^31+ ids: the next batch claims a group
-    above that, so every indexed doc id exceeds 2^31."""
+    """Positional queries must survive doc ids past 2^31 (the old
+    fixed 32/32 bit split of packed keys silently required
+    doc_id < 2^31 — round-5 VERDICT item 3). Simulated as a
+    stream-grown index whose id space has already consumed 2^31+ ids:
+    the next batch claims a group above that, so every indexed doc id
+    exceeds 2^31."""
     from rse_spark.index.storage import IndexStorage
     from rse_spark.streaming.stream_index import append_batch
 

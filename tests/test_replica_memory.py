@@ -130,6 +130,66 @@ def test_commit_between_rows_and_lengths_is_retried(spark, tmp_path):
     _assert_lengths_match(s)
 
 
+@pytest.mark.parametrize("reload", [False, True])
+@pytest.mark.parametrize("surface", ["phrase", "near"])
+def test_commit_inside_a_positional_query_is_retried(spark, tmp_path,
+                                                     surface, reload):
+    """A writer commits after a positional query read its first term's
+    sidecar rows. The commit re-ids and lengthens a document, which
+    shifts every later document's slots; with ``reload`` another thread
+    also reloads the replica meanwhile. The query keeps one slot space,
+    so the new rows do not fit it rather than pairing slots of two
+    layouts: it reruns over the new generation and answers as a fresh
+    replica does."""
+    from rse_spark.index.upsert import upsert_docs
+    from rse_spark.streaming.stream_index import append_batch
+
+    docs = spark.read.parquet(DOCS)
+    root = str(tmp_path / "idx")
+    append_batch(spark, docs.filter(F.col("doc_id") < 80), root,
+                 analyzer="simple", content_col="text",
+                 docs_per_segment=32, segments_per_group=2, batch_id=0,
+                 with_positions=True)
+
+    def query(s):
+        if surface == "phrase":
+            return s.phrase_search_positions("sort group", k=10**6)
+        return s.near_search_positions("sort", "group", 3, k=10**6)
+
+    s = DirectSearcher(root, analyzer="simple")
+    before = query(s)
+    s._pos_slots.clear()
+    s._pos_bitmaps.clear()
+    s._pos_bytes = 0
+    old_space = s._slot_space()
+    orig = s._position_payloads
+    fired = []
+
+    def commit_after_rows(term):
+        rows = orig(term)
+        if not fired:
+            fired.append(term)
+            s._position_payloads = orig
+            updates = docs.filter(F.col("doc_id") == 7).withColumn(
+                "text", F.lit("sort group " * 6 + "window sort"))
+            assert upsert_docs(spark, updates, root, key=("src_doc_id",),
+                               analyzer="simple",
+                               content_col="text") == (1, 1)
+            if reload:
+                s._check_generation()
+        return rows
+
+    s._position_payloads = commit_after_rows
+    got = query(s)
+    assert fired == ["group" if surface == "phrase" else "sort"]
+    fresh = DirectSearcher(root, analyzer="simple")
+    want = query(fresh)
+    assert got == want and want != before
+    assert s._slot_space() is not old_space
+    assert np.array_equal(s._slot_space().start, fresh._slot_space().start)
+    assert query(s) == want
+
+
 @pytest.fixture(scope="module")
 def pos_index(spark, tmp_path_factory):
     """A batch-built index with a positional sidecar, over 300 docs."""
@@ -187,9 +247,9 @@ def _resident_ok(s: DirectSearcher, budget: int) -> None:
             assert s._bucket_bytes[b] == s._table_bytes[b] + memos
         total = sum(s._bucket_bytes.values())
         assert total <= budget or len(s._bucket_tables) == 1
-        assert s._pos_keys_bytes <= s.max_pos_keys_bytes \
-            or len(s._pos_keys) == 1
-        pos_bytes = s._pos_keys_bytes
+        assert s._pos_bytes <= s.max_pos_bytes \
+            or len(s._pos_slots) == 1
+        pos_bytes = s._pos_bytes
     assert s.held_bytes == total + pos_bytes
 
 
@@ -224,8 +284,9 @@ def test_bucket_budget_counts_decoded_lists(pos_index):
     budget = working_set // 3
     s = DirectSearcher(pos_index, analyzer="simple",
                        max_bucket_bytes=budget)
-    s.max_pos_keys_bytes = sum(
-        full._term_position_keys(t).nbytes for t in full.term_dict) // 4
+    s.max_pos_bytes = sum(
+        full._term_slots(t, full._slot_space()).nbytes
+        for t in full.term_dict) // 4
     first = sorted(s.term_dict)[0]
     first_list = s._term_list(first)
     first_bucket = s.term_dict[first][1]
@@ -303,7 +364,7 @@ def test_cold_rows_budget_counts_decoded_lists(pos_index):
                 assert s._cold_rows_bytes[key] == payload + memo
             total = sum(s._cold_rows_bytes.values())
             assert total <= budget or len(s._cold_rows) == 1
-            pos_bytes = s._pos_keys_bytes
+            pos_bytes = s._pos_bytes
         assert s.held_bytes == total + pos_bytes
     assert evicted
     t = sorted(s.term_dict)[0]

@@ -31,12 +31,12 @@ sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
 def held_bytes_rows(searcher) -> "list[tuple[str, int]]":
     """(what, bytes) of everything a replica's caches hold: the Arrow
-    tables, the decoded term lists by array, the positional keys and
+    tables, the decoded term lists by array, the terms' token slots and
     slot bitmaps, and the generation's doc-length table and slot
     space; last, ``held_bytes``, the total the budgets charge."""
     with searcher._meta_lock:
         rows = [*searcher._term_rows.values(), *searcher._cold_rows.values()]
-        keys = sum(k.nbytes for k in searcher._pos_keys.values())
+        slot_lists = list(searcher._pos_slots.values())
         bitmaps = sum(b.nbytes for b in searcher._pos_bitmaps.values())
         lens, slots = searcher._lens, searcher._slots
     plists = [r.plist for r in rows if r.plist is not None]
@@ -47,11 +47,11 @@ def held_bytes_rows(searcher) -> "list[tuple[str, int]]":
         for a in ("docs", "tfs", "impacts")
     ]
     out += [
-        ("positional keys", keys),
+        (f"positional slots ({slots.dtype.itemsize if slots else 0} "
+         f"B/occurrence)", sum(s.nbytes for s in slot_lists)),
         ("slot bitmaps", bitmaps),
         ("doc-length table", lens.nbytes if lens else 0),
-        ("slot space", slots.start.nbytes + slots.dl.nbytes
-         if slots else 0),
+        ("slot space", slots.nbytes if slots else 0),
         ("held_bytes (budgeted caches)", searcher.held_bytes),
     ]
     return out
