@@ -450,8 +450,6 @@ def build_resumable(
         )
         done = store.completed_units()
 
-    n_docs = done["docs"]["n_docs"]
-
     # ---- Stage B: posting segments, groups batched into big jobs ----
     # The unit of CHECKPOINTING stays the segment group, but the unit of
     # EXECUTION is a batch of ``groups_per_job`` groups: one Spark job
@@ -459,7 +457,13 @@ def build_resumable(
     # partition overwrite), which keeps every core busy — many tiny
     # per-group jobs leave the cluster mostly idle on scheduling and
     # Python-worker spin-up.
-    n_groups = (n_docs + docs_per_group - 1) // docs_per_group
+    # the groups are the enriched table's seg_group partitions, not
+    # range(n_docs / docs_per_group): doc ids need not start at 0 or be
+    # compact (a pre-keyed corpus), and a group with no rows has no
+    # postings to build
+    from rse_spark.index.positions import _group_dirs
+
+    groups = sorted(_group_dirs(store._p("enriched")))
     enriched_all = spark.read.parquet(store._p("enriched"))
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -518,7 +522,7 @@ def build_resumable(
                 wall_ms=wall // max(1, len(batch)),
             )
 
-    pending = [g for g in range(n_groups) if f"group={g:06d}" not in done]
+    pending = [g for g in groups if f"group={g:06d}" not in done]
     batches = [
         pending[i: i + groups_per_job]
         for i in range(0, len(pending), groups_per_job)

@@ -292,33 +292,119 @@ def _regex_literal_prefix(pattern: str) -> str:
     return "".join(lit)
 
 
-def _rows_zero_copy(sub) -> list[dict]:
-    """Arrow slice -> posting row dicts without materializing copies:
-    payload stays a zero-copy Arrow buffer (np.frombuffer consumes it
-    via the buffer protocol) and the block-metadata lists become
-    zero-copy numpy views — to_pylist() used to copy every payload
-    byte and box four int lists per row, a measured chunk of the cold
-    first touch."""
-    n = sub.num_rows
-    terms = sub["term"].to_pylist()
-    segs = sub["segment_id"].to_pylist()
-    pay = sub["payload"].combine_chunks()
-    bo = sub["block_offsets"].combine_chunks()
-    bl = sub["block_last"].combine_chunks()
-    bm = sub["block_max_tf"].combine_chunks()
-    bd = sub["block_min_dl"].combine_chunks()
-    return [
-        {
-            "term": terms[i],
-            "segment_id": segs[i],
-            "payload": pay[i].as_buffer(),
-            "block_offsets": bo[i].values.to_numpy(),
-            "block_last": bl[i].values.to_numpy(),
-            "block_max_tf": bm[i].values.to_numpy(),
-            "block_min_dl": bd[i].values.to_numpy(),
-        }
-        for i in range(n)
-    ]
+_BLOCK_COLS = ("block_offsets", "block_last", "block_max_tf", "block_min_dl")
+
+
+def _scan(files: "dict[int, list[str]]", columns: "list[str]") -> dict:
+    """bucket -> its record batches, read by ONE Arrow dataset scan over
+    the files of every bucket in ``files`` and kept as they arrive,
+    never combined. Arrow's own IO and CPU pools read the files, so no
+    pool of ours fans them out. A batch comes from one file, and the
+    file's ``bucket=`` directory (a hive partition column) names its
+    bucket."""
+    out: dict[int, list] = {b: [] for b in files}
+    paths = [f for fs in files.values() for f in fs]
+    if not paths:
+        return out
+    tbl = pq.read_table(paths, columns=[*columns, "bucket"],
+                        partitioning="hive")
+    for batch in tbl.to_batches():
+        if batch.num_rows:
+            out[batch.column("bucket")[0].as_py()].append(
+                batch.select(columns))
+    return out
+
+
+def _term_spans(batch) -> "list[tuple[str, int, int]]":
+    """(term, start, stop) of each run of equal terms in a record batch
+    of posting rows. The writer sorts postings by term before its
+    partitioned write (index/storage.py), but the files do not keep
+    that order, so a term may have several runs in one batch: each run
+    is one span."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = batch.num_rows
+    term = batch.column("term")
+    edges = (np.flatnonzero(pc.not_equal(
+        term.slice(1), term.slice(0, n - 1)
+    ).to_numpy(zero_copy_only=False)) + 1).tolist()
+    starts = [0, *edges]
+    names = term.take(starts).to_pylist()
+    return list(zip(names, starts, [*edges, n]))
+
+
+class _BatchRows:
+    """The numpy views one record batch of posting rows is sliced into
+    rows from, computed once per batch: ``segment_id``, the payload
+    offsets into the batch's data buffer, and the offsets and values of
+    the four ``block_*`` lists. Every view shares the batch's Arrow
+    buffers; nothing is copied."""
+
+    __slots__ = ("seg", "pay_off", "pay", "blocks")
+
+    def __init__(self, batch):
+        import numpy as np
+        import pyarrow as pa
+
+        pay = batch.column("payload")
+        _valid, offsets, data = pay.buffers()
+        width = np.int64 if pa.types.is_large_binary(pay.type) else np.int32
+        self.seg = batch.column("segment_id").to_numpy()
+        self.pay_off = np.frombuffer(offsets, dtype=width)[
+            pay.offset: pay.offset + len(pay) + 1]
+        self.pay = memoryview(data if data is not None else b"")
+        self.blocks = [
+            (col.offsets.to_numpy(), col.values.to_numpy())
+            for col in map(batch.column, _BLOCK_COLS)
+        ]
+
+    def rows(self, term: str, start: int, stop: int) -> list[dict]:
+        """Posting row dicts of rows ``[start, stop)``, all of ``term``:
+        the payload a memoryview of the data buffer, the block lists
+        numpy views."""
+        segs = self.seg[start:stop].tolist()
+        pay = self.pay_off[start: stop + 1].tolist()
+        blocks = [
+            (name, off[start: stop + 1].tolist(), vals)
+            for name, (off, vals) in zip(_BLOCK_COLS, self.blocks)
+        ]
+        out = []
+        for j, seg in enumerate(segs):
+            row = {"term": term, "segment_id": seg,
+                   "payload": self.pay[pay[j]: pay[j + 1]]}
+            for name, off, vals in blocks:
+                row[name] = vals[off[j]: off[j + 1]]
+            out.append(row)
+        return out
+
+
+class _Bucket:
+    """One resident bucket: its scan's record batches as they came
+    (``nbytes``, their Arrow bytes, is what the bucket budget charges),
+    each batch's views (:class:`_BatchRows`), and the span index
+    ``term -> [(views, start, stop)]`` over all of them. The views live
+    and die with the bucket's cache entry."""
+
+    __slots__ = ("batches", "nbytes", "spans")
+
+    def __init__(self, batches: list):
+        self.batches = batches
+        self.nbytes = sum(b.nbytes for b in batches)
+        self.spans: dict[str, list] = {}
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            views = _BatchRows(batch)
+            for term, start, stop in _term_spans(batch):
+                self.spans.setdefault(term, []).append((views, start, stop))
+
+    def rows(self, term: str) -> list[dict]:
+        return [
+            row
+            for views, start, stop in self.spans.get(term, ())
+            for row in views.rows(term, start, stop)
+        ]
 
 
 class _TermRows(list):
@@ -337,9 +423,11 @@ class _TermRows(list):
 
 class _TermList:
     """One term's postings across its segment rows, decoded once and
-    concatenated in doc-id order, at 16 bytes per posting: ``docs``
-    (int32 while the last id is below 2^31, else int64), ``tfs`` (int32)
-    and ``impacts`` (float64), the idf-less BM25 impact at the ``avgdl``
+    concatenated in doc-id order, at 13 to 16 bytes per posting:
+    ``docs`` (int32 while the last id is below 2^31, else int64),
+    ``tfs`` (the narrowest of uint8, uint16 and int32 that holds the
+    list's largest tf; a reader widens before it sums them) and
+    ``impacts`` (float64), the idf-less BM25 impact at the ``avgdl``
     the list was built with. Doc lengths are not kept per posting: the
     generation's ``kernel._DocLens`` is their one source, and the
     payload's own lengths must equal it. Segments partition the doc-id
@@ -381,7 +469,10 @@ class _TermList:
         self.impacts = bm25_impact(tfs, dls, avgdl)
         if len(docs) and docs[-1] < 1 << 31:
             docs = docs.astype(np.int32)
-        self.docs, self.tfs = docs, tfs.astype(np.int32)
+        top = int(tfs.max()) if len(tfs) else 0
+        self.docs, self.tfs = docs, tfs.astype(
+            np.uint8 if top < 1 << 8
+            else np.uint16 if top < 1 << 16 else np.int32)
         for a in (self.docs, self.tfs, self.impacts):
             a.flags.writeable = False
 
@@ -391,15 +482,22 @@ class _TermList:
 
 
 class DirectSearcher:
-    """Driver/process-local searcher over a persisted index root."""
+    """Driver/process-local searcher over a persisted index root.
+
+    A resident bucket is one Arrow scan's record batches, kept as they
+    arrived, with the numpy views each batch's rows are sliced from
+    (segment ids, payload offsets, the ``block_*`` lists' offsets and
+    values) and a term span index, all computed once at load
+    (:class:`_Bucket`). They belong to the bucket's cache entry, so
+    eviction and a writer commit drop them with it."""
 
     def __init__(self, root: str, analyzer: str = "code",
                  max_bucket_bytes: int | None = None,
                  max_vocab_in_memory: int = 10_000_000,
                  seg_groups: "list | None" = None):
         """``max_bucket_bytes`` bounds the columnar bucket cache: each
-        resident bucket is charged its Arrow tables plus the decoded
-        term lists (``_TermList``) built from its rows, and when the
+        resident bucket is charged its batches' Arrow bytes plus the
+        decoded term lists (``_TermList``) built from its rows, and when the
         total exceeds the budget, least-recently-queried buckets (with
         their term rows and decoded lists) are evicted and reload on
         the next miss; the bucket in use always stays. Term rows read
@@ -456,14 +554,14 @@ class DirectSearcher:
         # (round-4 VERDICT item 3).
         self._gen_path = os.path.join(root, "manifest", "GENERATION")
         self._gen_sig = self._gen_stat()
-        # bucket -> list of (arrow table, {term: (offset, length)})
-        # and a per-term extracted-row cache. Tables stay columnar
-        # (payload bytes remain Arrow buffers) so replica memory per
-        # bucket is ~the on-disk bucket size, not Python row dicts;
-        # row dicts exist only for terms actually queried.
+        # bucket -> _Bucket (its record batches, their numpy views and
+        # the term span index) and a per-term extracted-row cache.
+        # Batches stay columnar (payload bytes remain Arrow buffers) so
+        # replica memory per bucket is ~the on-disk bucket size, not
+        # Python row dicts; row dicts exist only for terms queried.
         from collections import OrderedDict
 
-        self._bucket_tables: OrderedDict[int, list] = OrderedDict()
+        self._bucket_tables: OrderedDict[int, _Bucket] = OrderedDict()
         # bytes charged per resident bucket (its Arrow tables plus its
         # rows' decoded term lists), and the Arrow part alone
         self._bucket_bytes: dict[int, int] = {}
@@ -492,12 +590,6 @@ class DirectSearcher:
         )
         self._cold_rows_bytes: dict[tuple[int, str], int] = {}
         self.max_cold_rows_bytes = 256 << 20
-        # fan-out of the per-file IO inside ONE cold term read;
-        # measured best SERIAL (1): the cross-term fan-out in
-        # _prefetch_terms already saturates the IO burst and nested
-        # pools only add contention (sf0.1 A/B: 41ms serial vs 63ms
-        # at 4 threads)
-        self.cold_io_threads = 1
         self._bucket_meta: dict[int, list] = {}
         self._bucket_disk_bytes: dict[int, int] = {}
         self._bucket_files_cache: dict[int, list[str]] = {}
@@ -705,7 +797,7 @@ class DirectSearcher:
                 lock = self._bucket_locks[bucket] = self._threading.Lock()
             return lock
 
-    def _touch(self, bucket: int) -> list | None:
+    def _touch(self, bucket: int) -> "_Bucket | None":
         """LRU-ordered cache lookup (newest at the right end)."""
         with self._meta_lock:
             tables = self._bucket_tables.get(bucket)
@@ -713,14 +805,14 @@ class DirectSearcher:
                 self._bucket_tables.move_to_end(bucket)
             return tables
 
-    def _publish(self, bucket: int, tables: list) -> None:
+    def _publish(self, bucket: int, loaded: _Bucket) -> None:
         """Install a freshly loaded bucket and evict least-recently
         used buckets beyond the byte budget."""
-        nbytes = sum(tbl.nbytes for tbl, _spans in tables)
         with self._meta_lock:
-            self._bucket_tables[bucket] = tables
+            self._bucket_tables[bucket] = loaded
             self._bucket_tables.move_to_end(bucket)
-            self._bucket_bytes[bucket] = self._table_bytes[bucket] = nbytes
+            self._bucket_bytes[bucket] = self._table_bytes[bucket] = (
+                loaded.nbytes)
             self._evict_buckets()
 
     def _evict_buckets(self) -> None:
@@ -810,19 +902,7 @@ class DirectSearcher:
                 maxs.append(st.max)
             return (f, md.num_row_groups, mins, maxs)
 
-        files = self._bucket_files(bucket)
-        if len(files) > 1 and self.cold_io_threads > 1:
-            # footer parses release the GIL in the parquet reader;
-            # a bucket spans one file per seg_group, so the first cold
-            # touch of a bucket otherwise pays them serially
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(self.cold_io_threads, len(files))
-            ) as ex:
-                meta = list(ex.map(_one, files))
-        else:
-            meta = [_one(f) for f in files]
+        meta = [_one(f) for f in self._bucket_files(bucket)]
         with self._meta_lock:
             self._bucket_meta[bucket] = meta
         return meta
@@ -832,7 +912,10 @@ class DirectSearcher:
         [min, max] statistics straddle ``term`` (files are written
         sorted by term, so they are contiguous), exactly the trick
         ``read_ids_pruned`` plays for the content store. The whole-
-        bucket columnar cache is untouched — warm() still fills it."""
+        bucket columnar cache is untouched — warm() still fills it.
+        The term's rows are filtered out of each file's row groups (a
+        copy of just them, which the cold budget charges) and sliced
+        into rows like a resident bucket's (:class:`_BatchRows`)."""
         import bisect
 
         import pyarrow.compute as pc
@@ -854,26 +937,15 @@ class DirectSearcher:
                 read += len(keep)
                 todo.append((f, keep))
 
-        def _read(item: tuple[str, list[int]]) -> list[dict]:
-            f, keep = item
+        rows = _TermRows()
+        for f, keep in todo:
             tbl = pq.ParquetFile(f).read_row_groups(
                 keep, columns=self._COLS
             )
-            sub = tbl.filter(pc.equal(tbl["term"], term))
-            return _rows_zero_copy(sub) if sub.num_rows else []
-
-        if len(todo) > 1 and self.cold_io_threads > 1:
-            # row-group reads release the GIL: overlap the per-
-            # seg_group files of the bucket
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(self.cold_io_threads, len(todo))
-            ) as ex:
-                parts = list(ex.map(_read, todo))
-        else:
-            parts = [_read(t) for t in todo]
-        rows = _TermRows(r for part in parts for r in part)
+            for batch in tbl.filter(pc.equal(tbl["term"], term)).to_batches():
+                if batch.num_rows:
+                    rows.extend(
+                        _BatchRows(batch).rows(term, 0, batch.num_rows))
         self._tls.cold_stats = {
             "row_groups_total": total, "row_groups_read": read,
         }
@@ -916,81 +988,40 @@ class DirectSearcher:
             victim, _ = self._cold_rows.popitem(last=False)
             total -= self._cold_rows_bytes.pop(victim)
 
-    def _load_bucket(self, bucket: int) -> list:
-        """Read one bucket's parquet files into Arrow tables and build
-        a term -> (offset, length) span index per file. Terms are
-        file-sorted (index/build.py sorts postings by term before the
-        segment write), so each term is one contiguous run."""
-        tables = self._touch(bucket)
-        if tables is not None:
-            return tables
+    def _load_bucket(self, bucket: int) -> _Bucket:
+        """Read one bucket's parquet files with ONE Arrow scan and keep
+        its record batches as they arrive (combining them would copy
+        the whole bucket once more). Each batch gets its numpy views
+        and term spans once, here (:class:`_Bucket`); a term's rows
+        are then slices of them."""
+        loaded = self._touch(bucket)
+        if loaded is not None:
+            return loaded
         with self._bucket_lock(bucket):
-            tables = self._touch(bucket)
-            if tables is not None:
-                return tables
+            loaded = self._touch(bucket)
+            if loaded is not None:
+                return loaded
             gen0 = self._gen_sig  # snapshot: don't cache across a reload
-            files = self._bucket_files(bucket)
-
-            def _read_one(path: str):
-                import numpy as np
-                import pyarrow.compute as pc
-
-                tbl = pq.read_table(path, columns=self._COLS)
-                # files are written sortWithinPartitions("term")
-                # (index/storage.py) so each term is one contiguous
-                # run; a span LIST keeps this correct even if a future
-                # writer interleaves runs. Run boundaries are found on
-                # the DICTIONARY INDICES (pure numpy diff) — the old
-                # to_pylist() + Python scan over every row was the
-                # dominant first-touch CPU cost on large buckets
-                # (round-5 VERDICT item 4: cold p95).
-                spans: dict[str, list[tuple[int, int]]] = {}
-                n = tbl.num_rows
-                if n:
-                    enc = pc.dictionary_encode(
-                        tbl["term"].combine_chunks()
-                    )
-                    idx = enc.indices.to_numpy()
-                    dic = enc.dictionary.to_pylist()
-                    bnd = np.flatnonzero(np.diff(idx)) + 1
-                    starts = np.concatenate(([0], bnd))
-                    ends = np.concatenate((bnd, [n]))
-                    for s_, e_ in zip(starts.tolist(), ends.tolist()):
-                        spans.setdefault(dic[idx[s_]], []).append(
-                            (s_, e_ - s_)
-                        )
-                return tbl, spans
-
-            if len(files) > 1:
-                # parallel first-touch: parquet IO + decode release the
-                # GIL, so a bucket's per-seg_group files load
-                # concurrently instead of serially (the cold path is
-                # IO-burst-bound on a noisy host)
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(
-                    max_workers=min(8, len(files))
-                ) as ex:
-                    tables = list(ex.map(_read_one, files))
-            else:
-                tables = [_read_one(f) for f in files]
+            loaded = _Bucket(_scan(
+                {bucket: self._bucket_files(bucket)}, self._COLS)[bucket])
             # publish only when fully built (evicts LRU past budget) —
             # and only if no generation flip happened mid-read, else a
             # pre-commit load would poison the just-invalidated cache
-            # (the current query still uses the tables it read)
+            # (the current query still uses the bucket it read)
             if self._gen_sig == gen0:
-                self._publish(bucket, tables)
-            return tables
+                self._publish(bucket, loaded)
+            return loaded
 
     def _bucket_rows(self, bucket: int, term: str) -> _TermRows:
         """All (segment) posting rows of one term.
 
-        Resident bucket: slice the term's contiguous run out of the
-        cached Arrow tables. Non-resident + ``cold_pruned``: O(term)
-        row-group-pruned read (``_term_rows_cold``), cached in its own
-        LRU byte budget — the bucket itself stays unloaded until a
-        warm()/prefetch fill asks for it. Legacy (cold_pruned=False):
-        first touch loads the whole bucket."""
+        Resident bucket: slice the term's runs out of the cached
+        batches' numpy views (:class:`_BatchRows`). Non-resident +
+        ``cold_pruned``: O(term) row-group-pruned read
+        (``_term_rows_cold``), cached in its own LRU byte budget — the
+        bucket itself stays unloaded until a warm()/prefetch fill asks
+        for it. Legacy (cold_pruned=False): first touch loads the whole
+        bucket."""
         key = (bucket, term)
         rows = self._term_rows.get(key)
         if rows is not None:
@@ -1009,10 +1040,7 @@ class DirectSearcher:
                 rows = self._term_rows_cold(bucket, term)
                 self._cold_rows_put(key, rows)
             return rows
-        rows = _TermRows()
-        for tbl, spans in self._load_bucket(bucket):
-            for off, ln in spans.get(term, ()):
-                rows.extend(_rows_zero_copy(tbl.slice(off, ln)))
+        rows = _TermRows(self._load_bucket(bucket).rows(term))
         with self._meta_lock:
             # cache the row form only while its bucket is resident,
             # so eviction keeps the budget honest; a racer's rows (and
@@ -1079,21 +1107,24 @@ class DirectSearcher:
             self._evict_cold_rows()
 
     def _prefetch_buckets(self, buckets) -> None:
-        """Load the given buckets' files concurrently if not cached.
-        A multi-term query whose terms hash to N distinct cold buckets
-        otherwise pays N serial first-touches; parquet IO + Arrow
-        decode release the GIL, so a thread pool overlaps them — the
-        same trick _load_bucket already plays across one bucket's
-        files, lifted across buckets. MoreLikeThis (10 rare terms) and
-        prefix queries (up to 64 expansions) feel this most."""
-        todo = [b for b in set(buckets) if self._touch(b) is None]
-        if len(todo) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(
-                max_workers=min(8, len(todo))
-            ) as ex:
-                list(ex.map(self._load_bucket, todo))
+        """Load the given buckets that are not cached with ONE Arrow
+        scan over all their files (:func:`_scan`), then give each its
+        views and span index (:class:`_Bucket`). A multi-term query
+        whose terms hash to N distinct cold buckets otherwise pays N
+        first-touches, each with the scan's fixed cost. MoreLikeThis
+        (10 rare terms) and prefix queries (up to 64 expansions) feel
+        this most."""
+        todo = sorted(b for b in set(buckets) if self._touch(b) is None)
+        if not todo:
+            return
+        gen0 = self._gen_sig
+        scanned = _scan({b: self._bucket_files(b) for b in todo}, self._COLS)
+        for b in todo:
+            # as in _load_bucket: a racer's load wins, and nothing read
+            # before a writer commit is cached after it
+            with self._bucket_lock(b):
+                if self._touch(b) is None and self._gen_sig == gen0:
+                    self._publish(b, _Bucket(scanned[b]))
 
     def _prefetch_terms(self, pairs) -> None:
         """Query-entry prefetch. Buckets BELOW the pruned-size
@@ -1140,20 +1171,21 @@ class DirectSearcher:
         serving. Returns the number of distinct buckets loaded.
         This is the whole-bucket warm-cache FILL: it always loads the
         full columnar bucket (cold_pruned only changes the per-query
-        cold path, never this)."""
-        buckets: set[int] = set()
-        for qtext in qtexts:
-            for t in query_terms(qtext, self.analyzer):
-                info = self.term_dict.get(t)
-                if info:
-                    buckets.add(info[1])
+        cold path, never this): one Arrow scan over all the buckets'
+        files (:meth:`_prefetch_buckets`), then each queried term's rows
+        sliced from the batches' views."""
+        pairs = [
+            (info[1], t)
+            for qtext in qtexts
+            for t in query_terms(qtext, self.analyzer)
+            for info in (self.term_dict.get(t),)
+            if info
+        ]
+        buckets = {b for b, _t in pairs}
         self._prefetch_buckets(buckets)
-        for qtext in qtexts:
-            for t in query_terms(qtext, self.analyzer):
-                info = self.term_dict.get(t)
-                if info:
-                    self._load_bucket(info[1])
-                    self._bucket_rows(info[1], t)
+        for b, t in pairs:
+            self._load_bucket(b)
+            self._bucket_rows(b, t)
         return len(buckets)
 
     def _matched_lists(self, terms: list[str], weights: dict[str, float]):
@@ -1907,6 +1939,7 @@ class DirectSearcher:
             if not plists:
                 continue
             docs = np.concatenate([p.docs for p in plists])
+            # bincount sums the (narrow) tfs as float64 weights
             tfs = np.concatenate([p.tfs for p in plists])
             uniq, inv = np.unique(docs, return_inverse=True)
             tf_sum = np.bincount(inv, weights=tfs)

@@ -743,6 +743,53 @@ def test_slot_dtype_follows_the_space():
         [1, 4, 6, 8], dtype=np.int32))).tolist() == [2**33] * 2 + [2**40] * 2
 
 
+@pytest.mark.parametrize("seed", range(4))
+def test_slot_ranks_match_brute_force(seed):
+    """``rank``, ``runs`` and ``counts`` of sorted slot lists shorter
+    and longer than the document starts equal a per-slot brute force,
+    with empty documents (length 0, and ids missing from a compact
+    range), under a compact id range, a non-compact one (ranked by id)
+    and an int64 space. ``rank`` also takes slot 0, spacer slots and
+    slots past the last document."""
+    rng = np.random.default_rng(seed)
+    n_docs = 60
+    lens = rng.integers(0, 6, n_docs)
+    lens[::7] = 0
+    gappy = np.sort(rng.choice(3 * n_docs, n_docs, replace=False)) + 5
+    far = np.sort(rng.choice(2**40, n_docs, replace=False)) + 2**31
+    for ids, slack in [(gappy, 0), (far, 0), (gappy, 2**31)]:
+        space = _SlotSpace(_DocLens(ids, lens), slack)
+        assert (space.ids is None) == (ids is gappy)
+        assert space.dtype == (np.int64 if slack else np.int32)
+        start = space.start.tolist()
+        every = np.arange(start[-1] + 3, dtype=space.dtype)
+        want = np.array([
+            max((r for r, st in enumerate(start) if st <= s), default=-1)
+            for s in every.tolist()
+        ])
+        # the occurrence slots: every position of every document (the
+        # slot before the next start is the document's spacer)
+        occ = np.concatenate([
+            np.arange(a, b - 1) for a, b in zip(start[:-1], start[1:])])
+        n_starts = len(start)
+        for n in (0, 1, n_starts - 1, n_starts, n_starts + 1, len(every)):
+            pick = np.sort(rng.choice(len(every), n, replace=False))
+            got = space.rank(every[pick])
+            assert got.dtype == np.intp
+            assert got.tolist() == want[pick].tolist(), n
+            pick = np.sort(rng.choice(occ, min(n, len(occ)), replace=False))
+            slots, ranks = every[pick], want[pick]
+            per_doc = np.bincount(ranks, minlength=n_starts - 1)
+            r, c = space.runs(slots)
+            assert r.tolist() == np.flatnonzero(per_doc).tolist()
+            assert c.tolist() == per_doc[r].tolist()
+            assert space.counts(slots).tolist() == per_doc.tolist()
+            pos = slots - space.start[ranks]
+            for end in (1, 3, 2**40):
+                assert space.counts(slots, end).tolist() == np.bincount(
+                    ranks[pos < end], minlength=n_starts - 1).tolist()
+
+
 # ---------------------------------------------------------------------------
 # Document boundaries: every positional surface against brute force on a
 # corpus of very short documents (lengths 0 and 1 included) whose first

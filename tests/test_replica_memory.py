@@ -1,5 +1,5 @@
 """What a serving replica holds (query/serve.py): decoded term lists at
-16 bytes per posting, with doc lengths read from one per-generation
+13 to 16 bytes per posting, with doc lengths read from one per-generation
 table (``kernel._DocLens``) that every index writer keeps equal to the
 postings' own, and byte budgets that charge those lists to the cache
 entry whose rows carry them."""
@@ -23,7 +23,8 @@ from rse_spark.query.serve import DirectSearcher
 
 def _assert_lengths_match(s: DirectSearcher) -> None:
     """Every term's payload doc lengths equal the generation's table;
-    every decoded list is int32 and read-only."""
+    every decoded list has int32 ids, tfs in the narrowest unsigned
+    dtype that holds its largest tf, and is read-only."""
     s._check_generation()
     lens = s._doc_lens()
     n = 0
@@ -33,7 +34,9 @@ def _assert_lengths_match(s: DirectSearcher) -> None:
             assert np.array_equal(lens.of(docs), dls), t
             n += len(docs)
         pl = s._term_list(t)
-        assert (pl.docs.dtype, pl.tfs.dtype) == (np.int32, np.int32), t
+        top = int(pl.tfs.max()) if len(pl.tfs) else 0
+        narrow = np.uint8 if top < 1 << 8 else np.uint16
+        assert (pl.docs.dtype, pl.tfs.dtype) == (np.int32, narrow), t
         for a in (pl.docs, pl.tfs, pl.impacts):
             assert not a.flags.writeable
     assert n

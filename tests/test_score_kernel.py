@@ -164,8 +164,8 @@ def test_term_list_doc_order_and_read_only():
     assert LENS.of(pl.docs).tolist() == [10, 20, 30, 15, 25, 50]
     assert np.array_equal(
         pl.impacts, bm25_impact(pl.tfs, LENS.of(pl.docs), 20.0))
-    assert (pl.docs.dtype, pl.tfs.dtype) == (np.int32, np.int32)
-    assert pl.nbytes == 16 * len(pl.docs)
+    assert (pl.docs.dtype, pl.tfs.dtype) == (np.int32, np.uint8)
+    assert pl.nbytes == 13 * len(pl.docs)
     for a in (pl.docs, pl.tfs, pl.impacts):
         assert not a.flags.writeable
         with pytest.raises(ValueError):
@@ -174,6 +174,25 @@ def test_term_list_doc_order_and_read_only():
     assert one.docs.tolist() == [12, 40] and not one.docs.flags.writeable
     none = _TermList("t", [], LENS, avgdl=20.0)
     assert none.docs.dtype == np.int64 and not len(none.impacts)
+
+
+@pytest.mark.parametrize("top, dtype", [
+    (255, np.uint8), (256, np.uint16), (65535, np.uint16), (65536, np.int32),
+])
+def test_term_list_tfs_take_the_narrowest_dtype(top, dtype):
+    """``tfs`` is the narrowest of uint8, uint16 and int32 that holds the
+    list's largest tf; impacts, and a rescoring at another avgdl (the
+    federated path), equal those of int64 tfs bit for bit."""
+    lens = _DocLens([0, 5, 9], [70_000] * 3)
+    wide = np.array([1, top, 2], dtype=np.int64)
+    pl = _TermList("t", [_row([0, 5, 9], wide, [70_000] * 3)], lens,
+                   avgdl=100.0)
+    assert pl.tfs.dtype == dtype and pl.tfs.tolist() == wide.tolist()
+    assert pl.nbytes == len(wide) * (4 + np.dtype(dtype).itemsize + 8)
+    dls = lens.of(pl.docs)
+    assert np.array_equal(pl.impacts, bm25_impact(wide, dls, 100.0))
+    assert np.array_equal(bm25_impact(pl.tfs, dls, 37.5),
+                          bm25_impact(wide, dls, 37.5))
 
 
 def test_term_list_overlapping_rows_raise():

@@ -884,3 +884,118 @@ def test_explain_sums_under_fvf(root):
         assert abs(ex["score"] - score) < 1e-9
     with pytest.raises(ValueError, match="fvf"):
         s.explain("parse", 0, fvf="nope")
+
+
+@pytest.fixture(scope="module")
+def small_groups_root(spark, tmp_path_factory):
+    """Several seg_groups, each bucket file rewritten with 3-row row
+    groups: a term's rows (one per segment) straddle record batches."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    r = str(tmp_path_factory.mktemp("serve_small_rg"))
+    corpus = spark.createDataFrame(gen_code_corpus(0.0004))
+    build_resumable(spark, corpus, r, analyzer="code", docs_per_segment=16,
+                    segments_per_group=3)
+    files = glob.glob(os.path.join(r, "postings", "**", "*.parquet"),
+                      recursive=True)
+    for f in files:
+        pq.write_table(pq.read_table(f), f, row_group_size=3)
+    return r
+
+
+def _rows_by_term(s, terms):
+    return {
+        t: sorted(s._bucket_rows(s.term_dict[t][1], t),
+                  key=lambda r: r["segment_id"])
+        for t in terms
+    }
+
+
+def test_row_builders_agree(small_groups_root):
+    """Rows sliced from a resident bucket's batches, rows of the cold
+    row-group-pruned read, and the rows of sharded (seg_groups=)
+    replicas equal the files' own rows field by field; every term's
+    decoded list equals a direct decode of its payloads; a bounded
+    replica charges exactly its batches' bytes plus its memos."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from rse_spark.index.codec import bm25_impact, decode_postings
+
+    root = small_groups_root
+    want: dict[str, list] = {}
+    for rec in pq.read_table(
+        os.path.join(root, "postings"),
+        columns=DirectSearcher._COLS,
+    ).to_pylist():
+        want.setdefault(rec["term"], []).append(rec)
+    resident = DirectSearcher(root, analyzer="code")
+    terms = sorted(resident.term_dict)
+    assert sorted(want) == terms
+    cold = DirectSearcher(root, analyzer="code")
+    cold.cold_pruned_min_bytes = 0
+    groups = sorted(
+        int(d.split("=")[1])
+        for d in os.listdir(os.path.join(root, "postings"))
+        if d.startswith("seg_group="))
+    assert len(groups) >= 3
+    shards = [DirectSearcher(root, analyzer="code", seg_groups=[g])
+              for g in groups]
+
+    got_resident = _rows_by_term(resident, terms)
+    got_cold = _rows_by_term(cold, terms)
+    assert not cold._bucket_tables and len(resident._bucket_tables) == len(
+        {resident.term_dict[t][1] for t in terms})
+    got_sharded = {
+        t: sorted((r for s in shards for r in _rows_by_term(s, [t])[t]),
+                  key=lambda r: r["segment_id"])
+        for t in terms
+    }
+    # some term's rows straddle record batches of one file
+    n_files = {
+        b: len(resident._bucket_files(b)) for b in resident._bucket_tables}
+    assert any(
+        len(resident._bucket_tables[b].spans[t]) > n_files[b]
+        for t, (_df, b) in resident.term_dict.items())
+    for t in terms:
+        ref = sorted(want[t], key=lambda r: r["segment_id"])
+        for got in (got_resident[t], got_cold[t], got_sharded[t]):
+            assert len(got) == len(ref), t
+            for g, w in zip(got, ref):
+                assert (g["term"], g["segment_id"]) == (t, w["segment_id"])
+                assert bytes(g["payload"]) == w["payload"], t
+                for col in ("block_offsets", "block_last", "block_max_tf",
+                            "block_min_dl"):
+                    assert g[col].tolist() == w[col], (t, col)
+        docs, tfs, dls = (
+            np.concatenate(a) for a in zip(*(
+                decode_postings(w["payload"])
+                for w in sorted(want[t], key=lambda r: r["segment_id"]))))
+        for s in (resident, cold):
+            pl = s._term_list(t)
+            assert pl.docs.tolist() == docs.tolist(), t
+            assert pl.tfs.tolist() == tfs.tolist(), t
+            assert np.array_equal(
+                pl.impacts, bm25_impact(tfs, dls, s.avgdl)), t
+
+    budget = sum(resident._bucket_bytes.values()) // 3
+    bounded = DirectSearcher(root, analyzer="code", max_bucket_bytes=budget)
+    for t in terms + terms[::-1]:
+        bounded._term_list(t)
+        with bounded._meta_lock:
+            for b, loaded in bounded._bucket_tables.items():
+                assert bounded._table_bytes[b] == sum(
+                    batch.nbytes for batch in loaded.batches)
+                memos = sum(r.plist.nbytes for (rb, _t), r in
+                            bounded._term_rows.items()
+                            if rb == b and r.plist is not None)
+                assert bounded._bucket_bytes[b] == (
+                    bounded._table_bytes[b] + memos)
+            assert (sum(bounded._bucket_bytes.values()) <= budget
+                    or len(bounded._bucket_tables) == 1)
+    assert len(bounded._bucket_tables) < len(resident._bucket_tables)

@@ -167,3 +167,43 @@ def test_size_partitions_conf_and_temporary(spark, corpus,
     bad = SimpleNamespace(conf=SimpleNamespace(get=lambda k: "1 gigabyte"))
     with pytest.raises(ValueError, match="byte size"):
         store._size_partitions(bad, "postings")
+
+
+def test_build_with_doc_ids_past_2_31(spark, tmp_path):
+    """A pre-keyed corpus whose ids start past 2^31 builds: stage B
+    builds the seg_groups the enriched table holds (not 0..n_groups-1,
+    which here hold no document), and the serving replica and the Spark
+    tier rank its documents alike, phrases included."""
+    import numpy as np
+    from test_compact import DOCS  # the sf0.001 test corpus
+
+    from rse_spark.query.engine import search
+    from rse_spark.query.serve import DirectSearcher
+
+    base = 2**31 + 7
+    docs = spark.read.parquet(DOCS).filter(F.col("doc_id") < 80).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(base))
+    root = str(tmp_path / "idx")
+    store = build_resumable(spark, docs, root, analyzer="simple",
+                            content_col="text", docs_per_segment=16,
+                            segments_per_group=2, with_positions=True)
+    groups = sorted(
+        r["seg_group"] for r in store.manifest()
+        if r["unit"].startswith("group="))
+    assert groups == list(range(base // 32, (base + 79) // 32 + 1))
+    idx = store.load(spark)
+    assert idx.n_docs == 80
+    s = DirectSearcher(root, analyzer="simple")
+    for q in ["the data", "merge join table", "spark"]:
+        want = [
+            (int(r["doc_id"]), float(r["score"]))
+            for r in search(spark, idx.postings, q, n_docs=idx.n_docs,
+                            avgdl=idx.avgdl, term_stats=idx.term_stats,
+                            k=10, analyzer="simple").collect()
+        ]
+        got = s.search(q, k=10)
+        assert want and [d for d, _s in want] == [d for d, _s, _n in got], q
+        assert np.allclose([x for _d, x in want], [x for _d, x, _n in got],
+                           rtol=1e-12), q
+        assert all(d >= base for d, _s in want)
+    assert s.phrase_search_positions("the data", k=5)

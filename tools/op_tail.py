@@ -3,7 +3,7 @@ in process against an index root, and print per-kind medians and the
 slowest ops.
 
     python tools/op_tail.py INDEX_ROOT [--seed 7] [--passes 3]
-                            [--slowest 20]
+                            [--slowest 20] [--opens 9]
 
 INDEX_ROOT is an sf0.1 index built like perfbench's serving index
 (``perfbench/common.py``: ``build_index`` with ``LAYOUT``). The ops are
@@ -11,9 +11,12 @@ the ones a ``perfbench/run.py --workload serve_warm --seed N`` run times
 (``perfbench/streams.py`` and ``perfbench/workloads.py``, imported
 read-only), on a replica set up the same way: warmed with the stream's
 first search texts, then one untimed pass over every op to fill the lazy
-caches. After that pass it prints the bytes each cache holds. Each
-timed pass runs every op once; an op's time is its median over the
-passes. Results are not checked here; the benchmark checks them.
+caches. It first opens and warms ``--opens`` fresh replicas and prints
+the median open + ``warm()`` time, split into the bucket scan, the span
+index and the row views. After the filling pass it prints the bytes
+each cache holds. Each timed pass runs every op once; an op's time is
+its median over the passes. Results are not checked here; the benchmark
+checks them.
 """
 
 from __future__ import annotations
@@ -23,10 +26,57 @@ import os
 import statistics
 import sys
 import time
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
+
+
+def _timed(parts: "dict[str, float]", name: str, fn):
+    def run(*args, **kwargs):
+        t0 = time.perf_counter()
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            parts[name] += time.perf_counter() - t0
+    return run
+
+
+def open_warm(root: str, texts: "list[str]", opens: int):
+    """Open and ``warm()`` ``opens`` fresh replicas, one at a time.
+    Returns the last replica and, as medians over the opens in seconds,
+    the whole open + warm and its parts: the bucket scan (``_scan``),
+    the span index (``_term_spans``) and the row views (``_BatchRows``:
+    each batch's views and the term rows sliced from them). The parts
+    are timed by wrapping those functions while the replicas open."""
+    from rse_spark.query import serve
+
+    targets = [("bucket scan", serve, "_scan"),
+               ("span index", serve, "_term_spans"),
+               ("row views", serve._BatchRows, "__init__"),
+               ("row views", serve._BatchRows, "rows")]
+    saved = [(owner, attr, getattr(owner, attr))
+             for _name, owner, attr in targets]
+    parts: "dict[str, float]" = {}
+    runs: "dict[str, list[float]]" = {"open + warm": []}
+    searcher = None
+    try:
+        for (name, owner, attr), (_o, _a, fn) in zip(targets, saved):
+            setattr(owner, attr, _timed(parts, name, fn))
+        for _ in range(opens):
+            parts.update((name, 0.0) for name, _o, _a in targets)
+            searcher = None  # one replica at a time
+            t0 = time.perf_counter()
+            searcher = serve.DirectSearcher(root)
+            searcher.warm(texts)
+            runs["open + warm"].append(time.perf_counter() - t0)
+            for name, secs in parts.items():
+                runs.setdefault(name, []).append(secs)
+    finally:
+        for owner, attr, fn in saved:
+            setattr(owner, attr, fn)
+    return searcher, {k: statistics.median(v) for k, v in runs.items()}
 
 
 def held_bytes_rows(searcher) -> "list[tuple[str, int]]":
@@ -40,11 +90,17 @@ def held_bytes_rows(searcher) -> "list[tuple[str, int]]":
         bitmaps = sum(b.nbytes for b in searcher._pos_bitmaps.values())
         lens, slots = searcher._lens, searcher._slots
     plists = [r.plist for r in rows if r.plist is not None]
+    tf_types = Counter(p.tfs.dtype.name for p in plists)
     out = [("tables (Arrow)", searcher.cached_bucket_bytes)]
     out += [
         (f"term lists: {a} ({len(plists)} lists)",
          sum(getattr(p, a).nbytes for p in plists))
-        for a in ("docs", "tfs", "impacts")
+        for a in ("docs", "impacts")
+    ]
+    out += [
+        (f"term lists: tfs {name} ({n} lists)",
+         sum(p.tfs.nbytes for p in plists if p.tfs.dtype.name == name))
+        for name, n in sorted(tf_types.items())
     ]
     out += [
         (f"positional slots ({slots.dtype.itemsize if slots else 0} "
@@ -64,6 +120,9 @@ def main(argv=None) -> None:
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--slowest", type=int, default=20,
                     help="how many of the slowest ops to list")
+    ap.add_argument("--opens", type=int, default=9,
+                    help="fresh replicas to open and warm for the "
+                         "open + warm() time")
     args = ap.parse_args(argv)
 
     import pandas as pd
@@ -72,15 +131,22 @@ def main(argv=None) -> None:
     from workloads import WARM_OPS, WARM_TEXTS
 
     from rse_spark.fixtures import corpus_path
-    from rse_spark.query.serve import DirectSearcher
     from rse_spark.tokenizer import tokenize
 
     corpus = pd.read_parquet(corpus_path(0.1))
     ops = Stream(Oracle(corpus, tokenize), args.seed, WARM_MIX).take(
         WARM_OPS)
-    searcher = DirectSearcher(args.root)
-    searcher.warm([a for k, a in ops[:WARM_TEXTS]
-                   if k in ("or", "and", "ql")])
+    opens = max(1, args.opens)
+    searcher, split = open_warm(
+        args.root, [a for k, a in ops[:WARM_TEXTS]
+                    if k in ("or", "and", "ql")], opens)
+    total = split.pop("open + warm")
+    print(f"open + warm(): median {1e3 * total:.1f} ms over {opens} opens")
+    for what, secs in split.items():
+        print(f"  {what:<38} {1e3 * secs:>9.1f} ms")
+    print(f"  {'other (meta, tokenize, locks)':<38} "
+          f"{1e3 * (total - sum(split.values())):>9.1f} ms")
+    print()
     for kind, arg in ops:
         run_op(searcher, kind, arg)
     print("held after the filling pass:")
