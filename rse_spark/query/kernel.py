@@ -350,16 +350,9 @@ class _SlotSpace:
         return self.ids[ranks]
 
     def rank(self, slots):
-        """The document rank of each slot of a sorted slot array (-1
-        before the first document's start). A list longer than the
-        document starts repeats each rank over its run, whose bounds
-        are the starts searched into the slots; a shorter one searches
-        each slot into the starts."""
-        if len(slots) <= len(self.start):
-            return np.searchsorted(self.start, slots, side="right") - 1
-        counts = np.diff(np.searchsorted(slots, self.start),
-                         prepend=0, append=len(slots))
-        return np.repeat(np.arange(-1, len(self.start)), counts)
+        """The document rank of each slot (-1 before the first
+        document's start)."""
+        return np.searchsorted(self.start, slots, side="right") - 1
 
     def counts(self, slots, end=None):
         """Occurrences of a sorted slot array per document rank, only at

@@ -909,9 +909,10 @@ class DirectSearcher:
 
     def _term_rows_cold(self, bucket: int, term: str) -> list[dict]:
         """O(term) first touch: read only the row groups whose term
-        [min, max] statistics straddle ``term`` (files are written
-        sorted by term, so they are contiguous), exactly the trick
-        ``read_ids_pruned`` plays for the content store. The whole-
+        [min, max] statistics straddle ``term`` and filter the term's
+        rows out of them, which is correct whatever the files' row
+        order, exactly the trick ``read_ids_pruned`` plays for the
+        content store. The whole-
         bucket columnar cache is untouched — warm() still fills it.
         The term's rows are filtered out of each file's row groups (a
         copy of just them, which the cold budget charges) and sliced

@@ -3,7 +3,7 @@ in process against an index root, and print per-kind medians and the
 slowest ops.
 
     python tools/op_tail.py INDEX_ROOT [--seed 7] [--passes 3]
-                            [--slowest 20] [--opens 9]
+                            [--slowest 20]
 
 INDEX_ROOT is an sf0.1 index built like perfbench's serving index
 (``perfbench/common.py``: ``build_index`` with ``LAYOUT``). The ops are
@@ -11,7 +11,7 @@ the ones a ``perfbench/run.py --workload serve_warm --seed N`` run times
 (``perfbench/streams.py`` and ``perfbench/workloads.py``, imported
 read-only), on a replica set up the same way: warmed with the stream's
 first search texts, then one untimed pass over every op to fill the lazy
-caches. It first opens and warms ``--opens`` fresh replicas and prints
+caches. It first opens and warms ``_OPENS`` fresh replicas and prints
 the median open + ``warm()`` time, split into the bucket scan, the span
 index and the row views. After the filling pass it prints the bytes
 each cache holds. Each timed pass runs every op once; an op's time is
@@ -32,6 +32,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "perfbench"))
 
+_OPENS = 9  # fresh replicas opened and warmed for the open + warm() time
+
 
 def _timed(parts: "dict[str, float]", name: str, fn):
     def run(*args, **kwargs):
@@ -43,8 +45,8 @@ def _timed(parts: "dict[str, float]", name: str, fn):
     return run
 
 
-def open_warm(root: str, texts: "list[str]", opens: int):
-    """Open and ``warm()`` ``opens`` fresh replicas, one at a time.
+def open_warm(root: str, texts: "list[str]"):
+    """Open and ``warm()`` ``_OPENS`` fresh replicas, one at a time.
     Returns the last replica and, as medians over the opens in seconds,
     the whole open + warm and its parts: the bucket scan (``_scan``),
     the span index (``_term_spans``) and the row views (``_BatchRows``:
@@ -64,7 +66,7 @@ def open_warm(root: str, texts: "list[str]", opens: int):
     try:
         for (name, owner, attr), (_o, _a, fn) in zip(targets, saved):
             setattr(owner, attr, _timed(parts, name, fn))
-        for _ in range(opens):
+        for _ in range(_OPENS):
             parts.update((name, 0.0) for name, _o, _a in targets)
             searcher = None  # one replica at a time
             t0 = time.perf_counter()
@@ -120,9 +122,6 @@ def main(argv=None) -> None:
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--slowest", type=int, default=20,
                     help="how many of the slowest ops to list")
-    ap.add_argument("--opens", type=int, default=9,
-                    help="fresh replicas to open and warm for the "
-                         "open + warm() time")
     args = ap.parse_args(argv)
 
     import pandas as pd
@@ -136,12 +135,11 @@ def main(argv=None) -> None:
     corpus = pd.read_parquet(corpus_path(0.1))
     ops = Stream(Oracle(corpus, tokenize), args.seed, WARM_MIX).take(
         WARM_OPS)
-    opens = max(1, args.opens)
     searcher, split = open_warm(
         args.root, [a for k, a in ops[:WARM_TEXTS]
-                    if k in ("or", "and", "ql")], opens)
+                    if k in ("or", "and", "ql")])
     total = split.pop("open + warm")
-    print(f"open + warm(): median {1e3 * total:.1f} ms over {opens} opens")
+    print(f"open + warm(): median {1e3 * total:.1f} ms over {_OPENS} opens")
     for what, secs in split.items():
         print(f"  {what:<38} {1e3 * secs:>9.1f} ms")
     print(f"  {'other (meta, tokenize, locks)':<38} "
